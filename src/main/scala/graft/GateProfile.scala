@@ -26,10 +26,8 @@ object GateProfile {
       .config(Tables.requiredConfs)
     // experiment knob: SPARK_GRAFT_PROF_CONFS="k=v;k2=v2" (diagnostic
     // only — the bench/driver never sets it)
-    val spark = sys.env.get("SPARK_GRAFT_PROF_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0).getOrCreate()
+    val spark = GraftSession.envConfs("SPARK_GRAFT_PROF_CONFS")
+      .foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(gate)
 

@@ -13,6 +13,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - or converted to integer cents (BIGINT) and aggregated exactly;
   *   - floor-division averages use integer `div`, never FP division;
   *   - every ORDER BY / row_number has a unique tie-break key.
+  *
+  * Both DECIMAL and cents spellings run on the scaled-long kernel
+  * (`graft.plans.ScaledDecimalRewrite`), bit-identical to Spark's
+  * `BigDecimal` path: `CAST(double AS DECIMAL(p ≤ 18, s))` is
+  * round(d·10^s) when |d·10^s| < 2^40 and within 0.25 of that
+  * integer, else Spark's own Cast (NaN, ±Inf, near-.5 ties, overflow);
+  * SUM over DECIMAL(9..18) and over products of such decimals, and
+  * `(dec * 100)::BIGINT` cents, stay in longs (128/192-bit sum
+  * buffers with Spark's overflow nulls and ANSI errors). DECIMAL(p > 18)
+  * casts keep Spark's path.
   */
 final case class GateQuery(
     name: String,

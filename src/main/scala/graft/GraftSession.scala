@@ -31,4 +31,20 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The `k=v;k2=v2` settings of env var `name`; none when it is unset. */
+  def envConfs(name: String): Seq[(String, String)] =
+    sys.env.get(name).fold(Seq.empty[(String, String)])(parseConfs(_, name))
+
+  /** Parses `k=v;k2=v2` (`source` names where it came from). Blank
+    * entries between `;` are skipped; an entry without `=` or with an
+    * empty key fails naming the entry, the source and the syntax. */
+  def parseConfs(spec: String, source: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.trim.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v
+        case _ => throw new IllegalArgumentException(
+          s"$source: malformed entry '$kv' (expected k=v;k2=v2)")
+      }
+    }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * additionally run staging jobs before the returned frame; their job
   * counts are in OPTIMIZATION_r16.md.
   *
-  * Usage: sbt "runMain graft.R16Plans <suffix> g1,g2,..."
+  * Usage: sbt "runMain graft.R16Plans <suffix> g1,g2,..." — exits 1,
+  * naming them, when any requested gate could not be dumped.
   */
 object R16Plans {
   private def fmt(df: DataFrame): String =
@@ -31,7 +32,8 @@ object R16Plans {
     spark.sparkContext.setLogLevel("WARN")
     val outDir = java.nio.file.Paths.get("plans/r16")
     java.nio.file.Files.createDirectories(outDir)
-    gates.split(",").foreach { g =>
+    val names = gates.split(",").toSeq
+    val skipped = names.filterNot { g =>
       try {
         val df = SparkEntry.queries(g)(spark, sfDir)
         java.nio.file.Files.writeString(outDir.resolve(s"${g}_$suffix.txt"),
@@ -39,10 +41,17 @@ object R16Plans {
             "(multi-action gates additionally run staging jobs before this plan;\n" +
             " job counts are in OPTIMIZATION_r16.md)\n\n" + fmt(df))
         println(s"dumped ${g}_$suffix")
+        true
       } catch { case e: Throwable =>
         println(s"SKIP $g: ${e.getMessage.take(200)}")
+        false
       }
     }
     spark.stop()
+    if (skipped.nonEmpty) {
+      System.err.println(
+        s"[r16plans] ${skipped.size}/${names.size} gates skipped (failed): ${skipped.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -28,10 +28,8 @@ object R16StProbe {
       .config(Tables.requiredConfs)
     // session-conf A/B knob (GateProfile's SPARK_GRAFT_PROF_CONFS,
     // same syntax) — for the per-action-floor experiments
-    val spark = sys.env.get("SPARK_GRAFT_PROF_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").foldLeft(b0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }).getOrElse(b0).getOrCreate()
+    val spark = GraftSession.envConfs("SPARK_GRAFT_PROF_CONFS")
+      .foldLeft(b0) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val confNote = sys.env.getOrElse("SPARK_GRAFT_STREAM_CONFS", "<default>")
     println(s"== R16StProbe confs: $confNote parts=${

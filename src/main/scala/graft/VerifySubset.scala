@@ -34,19 +34,9 @@ object VerifySubset {
         false
       }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val ok = names.filterNot(failed.contains)
-    val json = SparkEntry.oracleSql.filter(kv => ok.contains(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Verify.jsonObject(SparkEntry.oracleSql.filter(kv => ok.contains(kv._1)).toSeq))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify-subset] FAILED gates: ${failed.mkString(",")}")

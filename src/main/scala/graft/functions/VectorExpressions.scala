@@ -208,6 +208,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // inert unless spark.graft.sketchJoin.thresholdBytes is set AND a
     // statistic is registered in SketchJoinRegistry.
     ext.injectOptimizerRule(session => new graft.plans.SketchJoinHint(session))
+    // Scaled-long decimals (graft.plans.ScaledDecimalRewrite): double →
+    // DECIMAL(≤18) casts, decimal sums and cents casts on unscaled
+    // longs, bit-identical to Spark; fires wherever the shape occurs.
+    ext.injectOptimizerRule(_ => graft.plans.ScaledDecimalRewrite)
     // Whole-operator rung: plans the graft.plans.AsOfJoin logical node
     // (a node only AsOfJoin.asof builds — inert for every other query).
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

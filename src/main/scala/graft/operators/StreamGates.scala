@@ -224,10 +224,7 @@ object StreamGates {
     * Empty (a no-op) unless the env var is set; never set by the
     * bench or the driver. */
   private val streamAbConfs: Map[String, String] =
-    sys.env.get("SPARK_GRAFT_STREAM_CONFS").filter(_.nonEmpty)
-      .map(_.split(";").toSeq.map { kv =>
-        val Array(k, v) = kv.split("=", 2); k -> v
-      }.toMap).getOrElse(Map.empty)
+    graft.GraftSession.envConfs("SPARK_GRAFT_STREAM_CONFS").toMap
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
     * store commit machinery scales with partitions × batches (each

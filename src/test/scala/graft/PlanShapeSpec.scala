@@ -554,15 +554,40 @@ class PlanShapeSpec extends AnyFunSuite {
     // back in by vec_id — one extra full-payload embeddings scan per
     // serving leg (a broadcast at test SFs, a corpus-payload shuffle
     // at 100 TB; measured 84.8 → 20.8 s at the 100× replica). Law:
-    // the embeddings relation appears at most 3× in sim6's optimized
-    // plan (assignment, probe ranking, query set) and at most 7× in
+    // the embeddings relation appears exactly 3× in sim6's optimized
+    // plan (assignment, probe ranking, query set) and exactly 7× in
     // sim18's (those three + sim1's two truth sides + the volume
-    // leg's probes + cell sizes) — the join-back scans are gone.
-    for ((g, cap) <- Seq("sim6_ivf_search" -> 3, "sim18_nprobe_curve" -> 7)) {
+    // leg's probes + cell sizes) — the join-back scans are gone, and
+    // a scan that disappears is as much a plan change as one that
+    // reappears.
+    for ((g, scans) <- Seq("sim6_ivf_search" -> 3, "sim18_nprobe_curve" -> 7)) {
       val lp = gate(g, sf0001).queryExecution.optimizedPlan.toString
       val n = "Relation \\[vec_id".r.findAllIn(lp).length
-      assert(n <= cap && n > 0,
-        s"$g: expected 1..$cap embeddings scans in the optimized plan, got $n")
+      assert(n == scans,
+        s"$g: expected $scans embeddings scans in the optimized plan, got $n")
     }
+  }
+
+  test("q1 sums on the scaled-long kernel; a DECIMAL(20,2) sum keeps Spark's path") {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    def exprs(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+      df.queryExecution.optimizedPlan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case e => e })
+    def doubleToDecimal(e: Expression): Boolean = e match {
+      case c: Cast => c.child.dataType == DoubleType && c.dataType.isInstanceOf[DecimalType]
+      case _ => false
+    }
+    val q1 = exprs(gate("q1_agg", sf0001))
+    assert(!q1.exists(doubleToDecimal), "q1 still casts double → decimal through BigDecimal")
+    assert(!q1.exists(_.isInstanceOf[Sum]), "q1 still sums on Spark's BigDecimal buffer")
+    assert(q1.count(_.isInstanceOf[graft.functions.ScaledSum]) == 3)
+    // DECIMAL(20,2) leaves the unscaled long: Spark's Cast and Sum stay
+    val wide = exprs(Tables.lineitem(spark, sf0001).groupBy("l_returnflag")
+      .agg(org.apache.spark.sql.functions.sum(
+        org.apache.spark.sql.functions.col("l_extendedprice").cast(DecimalType(20, 2)))))
+    assert(wide.exists(doubleToDecimal) && wide.exists(_.isInstanceOf[Sum]))
+    assert(!wide.exists(_.isInstanceOf[graft.functions.ScaledSum]))
   }
 }

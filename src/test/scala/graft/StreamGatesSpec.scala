@@ -31,6 +31,17 @@ class StreamGatesSpec extends AnyFunSuite {
       s"stream/batch divergence: ${s.diff(b).take(3)} vs ${b.diff(s).take(3)}")
   }
 
+  test("k=v;k2=v2 conf specs parse, and a bad entry fails by name") {
+    assert(GraftSession.parseConfs("a.b=1;c==d;;e=", "SRC") ==
+      Seq("a.b" -> "1", "c" -> "=d", "e" -> ""))
+    assert(GraftSession.parseConfs("", "SRC").isEmpty)
+    for (bad <- Seq("a=1;oops", "=v")) {
+      val e = intercept[IllegalArgumentException](GraftSession.parseConfs(bad, "SRC"))
+      val token = bad.split(";").last
+      assert(e.getMessage.contains("SRC") && e.getMessage.contains(s"'$token'"), e.getMessage)
+    }
+  }
+
   test("st1 replay equals the batch quota-admission pass") {
     assertSame(
       gate("st1_stream_quota", sf0001),
