@@ -3,12 +3,13 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.SparkSession
+import Verify.jsonString
 
 /** Benchmark main: runs every gate query at the given SF dir and prints
   * ONE JSON line {"metric":"total","value":wall_sec,"queries":{...}}.
   *
   * The suite executes CONCURRENTLY (default 8 query threads on
-  * local[32]) — the engine-throughput measurement a multi-tenant Spark
+  * local[cpus]) — the engine-throughput measurement a multi-tenant Spark
   * cluster actually delivers. Per-query job scheduling / AQE planning
   * overhead (~0.4 s each, dwarfing the sub-second data work at bench
   * SFs) overlaps instead of summing: measured at sf0.1 the suite drops
@@ -34,16 +35,6 @@ import org.apache.spark.sql.SparkSession
   * sequential, every gate) go to BENCH_DETAIL.json in the cwd.
   */
 object Bench {
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** 1-minute loadavg, read at suite start and end: a bench run in a
     * contended host window SELF-LABELS in the artifact (round 12's
     * driver window needed judge forensics to rule out a regression —
@@ -57,15 +48,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadBefore = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val qpar = sys.env.getOrElse("SPARK_GRAFT_QUERY_PAR", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(GraftSession.cpus)
     val pool = Executors.newFixedThreadPool(qpar)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
 
@@ -109,7 +93,7 @@ object Bench {
       .collect { case (n, _, Some(e)) => s"$n: $e" }.distinct
     def r3(v: Double): String = f"$v%.3f"
     def qmap(rs: Seq[(String, Double, Option[String])]): String =
-      rs.map { case (k, v, _) => jstr(k) + ":" + r3(v) }.mkString("{", ",", "}")
+      rs.map { case (k, v, _) => jsonString(k) + ":" + r3(v) }.mkString("{", ",", "}")
     val seqTotal = seq.map(_._2).sum
     // Contended-window self-labeling (r15 verdict: the r14 driver bench
     // ran in a noisy-neighbor window and poisoned the next round's PERF
@@ -145,7 +129,7 @@ object Bench {
     // Full detail (every gate, both passes) → file; stdout stays small.
     val loadAfter = loadavg()
     val detail =
-      s"""{"metric":"total","value":${r3(wall)},"unit":"sec","queries":${qmap(results)},"queries_seq":${qmap(seq)},"seq_total":${r3(seqTotal)},"failed":${failed.map(jstr).mkString("[", ",", "]")},"load_before":${jstr(loadBefore)},"load_after":${jstr(loadAfter)},"band_note":${bandNote.map(jstr).getOrElse("null")},"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"total","value":${r3(wall)},"unit":"sec","queries":${qmap(results)},"queries_seq":${qmap(seq)},"seq_total":${r3(seqTotal)},"failed":${failed.map(jsonString).mkString("[", ",", "]")},"load_before":${jsonString(loadBefore)},"load_after":${jsonString(loadAfter)},"band_note":${bandNote.map(jsonString).getOrElse("null")},"sf":${jsonString(sfDir)}}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"), detail + "\n")
     // Headline subset for the size-capped stdout line: one
@@ -164,8 +148,8 @@ object Bench {
     val headSet = headline.toSet
     val qs = qmap(seq.filter(r => headSet.contains(r._1)))
     val failedJson = failed.take(5)
-      .map(f => jstr(f.take(80))).mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${r3(wall)},"unit":"sec","regime":"wall=concurrent(x$qpar),queries=sequential","queries":$qs,"seq_total":${r3(seqTotal)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"detail":"BENCH_DETAIL.json","sf":${jstr(sfDir)}}""")
+      .map(f => jsonString(f.take(80))).mkString("[", ",", "]")
+    println(s"""{"metric":"total","value":${r3(wall)},"unit":"sec","regime":"wall=concurrent(x$qpar),queries=sequential","queries":$qs,"seq_total":${r3(seqTotal)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"detail":"BENCH_DETAIL.json","sf":${jsonString(sfDir)}}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

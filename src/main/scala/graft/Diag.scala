@@ -1,0 +1,129 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
+
+/** The diagnostics entry point; no contract output depends on it. Tables
+  * come from `$SPARK_GRAFT_SF_DIR`, extra builder settings from `--conf`
+  * (they also reach the streaming replays' `newSession()` children).
+  *
+  *   sbt "runMain graft.Diag [--conf k=v;k2=v2] plan <outDir> <suffix> <gate,...>"
+  *   sbt "runMain graft.Diag [--conf k=v;k2=v2] profile <gate,...> [reps]"
+  *
+  * `plan` writes each gate's formatted explain to
+  * `<outDir>/<gate>_<suffix>.txt`: run it before a change with `before`
+  * and after it with `after`. A gate that fails, or that the tree lacks,
+  * is named and the run exits 1. `profile` runs each gate `reps` times
+  * (default 3) and prints per rep the rows, wall and every Spark job the
+  * gate spawned, then the gate's walls and their warm (rep ≥ 2) minimum. */
+object Diag {
+  sealed trait Cmd
+  final case class Plan(outDir: String, suffix: String, gates: Seq[String]) extends Cmd
+  final case class Profile(gates: Seq[String], reps: Int) extends Cmd
+
+  private val usage = "usage: Diag [--conf k=v;k2=v2] " +
+    "plan <outDir> <suffix> <gate,...> | profile <gate,...> [reps]"
+
+  /** The command and its `--conf` settings; pure, so a bad command
+    * line fails before any session exists. */
+  def parse(args: Seq[String]): (Cmd, Seq[(String, String)]) = args match {
+    case "--conf" +: spec +: rest => (command(rest), GraftSession.parseConfs(spec, "--conf"))
+    case _ => (command(args), Nil)
+  }
+
+  /** `plan` takes gate names as given (the tree before a change may
+    * lack a gate); `profile` rejects unknown ones. */
+  private def command(args: Seq[String]): Cmd = args match {
+    case Seq("plan", outDir, suffix, gates) =>
+      Plan(outDir, suffix, gates.split(",").toSeq.filter(_.nonEmpty))
+    case Seq("profile", gates, reps @ _*) if reps.size <= 1 =>
+      val n = reps.headOption.fold(Option(3))(_.toIntOption).filter(_ > 0)
+        .getOrElse(throw new IllegalArgumentException(s"reps must be a positive integer; $usage"))
+      Profile(Verify.gateList(gates), n)
+    case _ => throw new IllegalArgumentException(usage)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (cmd, confs) = parse(args.toSeq)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      throw new IllegalArgumentException("set SPARK_GRAFT_SF_DIR to the tables' directory"))
+    val spark = GraftSession.build(GraftSession.cpus, confs)
+    val skipped = try cmd match {
+      case p: Plan => plan(spark, sfDir, p)
+      case p: Profile => profile(spark, sfDir, p); Nil
+    } finally spark.stop()
+    if (skipped.nonEmpty) sys.exit(1)
+  }
+
+  /** Writes each gate's plan; returns (and names) the gates it could
+    * not dump. */
+  private def plan(spark: SparkSession, sfDir: String, p: Plan): Seq[String] = {
+    val out = Paths.get(p.outDir)
+    Files.createDirectories(out)
+    val queries = SparkEntry.queries
+    val skipped = p.gates.filterNot { g =>
+      try {
+        val df = queries.getOrElse(g, sys.error(s"unknown gate '$g'"))(spark, sfDir)
+        Files.writeString(out.resolve(s"${g}_${p.suffix}.txt"),
+          s"== $g (${p.suffix}) — formatted explain of the gate's returned frame ==\n" +
+            "(multi-action gates additionally run staging jobs before this plan)\n\n" +
+            df.queryExecution.explainString(FormattedMode))
+        println(s"dumped ${g}_${p.suffix}")
+        true
+      } catch { case e: Throwable =>
+        println(s"SKIP $g: ${String.valueOf(e.getMessage).take(200)}")
+        false
+      }
+    }
+    if (skipped.nonEmpty) System.err.println(
+      s"[diag] ${skipped.size}/${p.gates.size} gates skipped: ${skipped.mkString(", ")}")
+    skipped
+  }
+
+  private def profile(spark: SparkSession, sfDir: String, p: Profile): Unit = {
+    val started = new ConcurrentHashMap[Int, (Long, String)]()
+    val done = new ConcurrentLinkedQueue[(Int, Long, Long, String)]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val desc = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .orElse(js.stageInfos.headOption.map(_.name)) // the call site
+          .getOrElse("")
+        started.put(js.jobId, (js.time, desc))
+      }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        Option(started.remove(je.jobId)).foreach { case (start, desc) =>
+          done.add((je.jobId, start, je.time, desc))
+        }
+    })
+    val queries = SparkEntry.queries
+    p.gates.foreach { gate =>
+      val walls = (1 to p.reps).map { rep =>
+        done.clear()
+        started.clear() // a straggler from the last rep must not leak in
+        val t0 = System.nanoTime()
+        val n = queries(gate)(spark, sfDir).count()
+        val wall = (System.nanoTime() - t0) / 1e9
+        // the listener bus is async: wait (bounded) until every started
+        // job reported its end
+        var waited = 0
+        while (!started.isEmpty && waited < 2000) { Thread.sleep(100); waited += 100 }
+        Thread.sleep(200)
+        val jobs = done.toArray(Array.empty[(Int, Long, Long, String)]).sortBy(_._1)
+        val first = jobs.headOption.fold(0L)(_._2)
+        println(f"== $gate rep $rep: wall $wall%.3f s, rows=$n, jobs=${jobs.length} ==")
+        jobs.foreach { case (id, s, e, desc) =>
+          println(f"  job $id%4d  +${(s - first) / 1e3}%7.3f  ${(e - s) / 1e3}%7.3f s  ${desc.take(100)}")
+        }
+        println(f"  job-time sum ${jobs.map(j => j._3 - j._2).sum / 1e3}%.3f s over ${jobs.length} jobs")
+        wall
+      }
+      println(f"gate=$gate%-28s " + walls.map(w => f"$w%.3f").mkString(" ") +
+        f"  warm-min=${walls.tail.minOption.getOrElse(walls.head)}%.3f")
+    }
+  }
+}

@@ -2,9 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared session bootstrap for the driver-contract mains (Verify,
-  * VerifySubset, GateRun). Defaults to `local[cpus]`; two env knobs
-  * exist for the DISTRIBUTION smoke:
+/** The one session bootstrap: every main (Bench, Verify, Diag, PlanDump,
+  * ScaleProbe) and the perfbench harness build their session here.
+  * Defaults to `local[cpus]`; two env knobs exist for the DISTRIBUTION
+  * smoke:
   *
   *   - `SPARK_GRAFT_MASTER=local-cluster[2,2,2048]` runs the same
   *     gates against separate executor JVMs, so any same-JVM
@@ -18,7 +19,14 @@ import org.apache.spark.sql.SparkSession
   * See README "local-cluster distribution smoke" for the receipt.
   */
 object GraftSession {
-  def build(cpus: String): SparkSession = {
+  /** Local cores and shuffle width: `$SPARK_GRAFT_CPUS`, else every
+    * core of the host. The only place the variable is read. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** `confs` are extra builder settings (Diag's `--conf`); they reach
+    * every `newSession()` child through the SparkContext conf. */
+  def build(cpus: String, confs: Seq[(String, String)] = Nil): SparkSession = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b0 = SparkSession.builder()
       .master(master)
@@ -27,14 +35,11 @@ object GraftSession {
       .config(Tables.requiredConfs)
     val b1 = sys.env.get("SPARK_GRAFT_JARS").filter(_.nonEmpty)
       .fold(b0)(j => b0.config("spark.jars", j))
-    val spark = b1.getOrCreate()
+    val spark = confs.foldLeft(b1) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
-
-  /** The `k=v;k2=v2` settings of env var `name`; none when it is unset. */
-  def envConfs(name: String): Seq[(String, String)] =
-    sys.env.get(name).fold(Seq.empty[(String, String)])(parseConfs(_, name))
 
   /** Parses `k=v;k2=v2` (`source` names where it came from). Blank
     * entries between `;` are skipped; an entry without `=` or with an

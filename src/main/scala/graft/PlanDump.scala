@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates `PLANS.md`: the `explain("formatted")` output of the
   * showcase gates, committed so plan quality is reviewable without
   * running anything. Each entry names the property the plan must
@@ -156,12 +154,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.requiredConfs)
-      .getOrCreate()
+    val spark = GraftSession.build("8")
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

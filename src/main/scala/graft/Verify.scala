@@ -4,12 +4,44 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the DuckDB oracle compare (tools/check.py),
-  * and failed.json (gate → error, `{}` when every gate dumped). */
+  * and failed.json (gate → error, `{}` when every gate dumped).
+  *
+  * `runMain graft.Verify <sfDir> <outDir> [gate,...]` — the optional
+  * third argument dumps only the named gates (and writes only their
+  * oracles), the per-gate iteration loop for `tools/check.py`. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(cpus)
+    val (sfDir, outDir, gates) = parse(args.toSeq)
+    val spark = GraftSession.build(GraftSession.cpus)
+    dump(spark, sfDir, outDir, gates)
+    spark.stop()
+  }
+
+  /** `<sfDir> <outDir> [gate,...]`; pure, so an unknown gate fails
+    * before any session exists. No filter means every gate. */
+  def parse(args: Seq[String]): (String, String, Seq[String]) = args match {
+    case Seq(sfDir, outDir) => (sfDir, outDir, SparkEntry.queries.keys.toSeq)
+    case Seq(sfDir, outDir, spec) => (sfDir, outDir, gateList(spec))
+    case _ => throw new IllegalArgumentException(
+      "usage: Verify <sfDir> <outDir> [gate,...]")
+  }
+
+  /** The gate names of `a,b,c`; fails naming every unknown one. */
+  def gateList(spec: String): Seq[String] = {
+    val names = spec.split(",").toSeq.filter(_.nonEmpty)
+    val known = SparkEntry.queries.keySet
+    val unknown = names.filterNot(known)
+    if (names.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
+      s"unknown gate(s) '${unknown.mkString(",")}' in '$spec'; known: " +
+        known.toSeq.sorted.mkString(", "))
+    names
+  }
+
+  /** Dumps `gates` to `<outDir>/<gate>` and writes their oracles,
+    * `failed.json` and a one-line stderr summary; returns the failures
+    * (gate → error), sorted. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+      gates: Seq[String]): Seq[(String, String)] = {
     new java.io.File(outDir).mkdirs()
     // Dump queries CONCURRENTLY (each to its own directory): the
     // registry is ~100 gates whose per-query cost at sf0.01 is mostly
@@ -24,9 +56,10 @@ object Verify {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").toInt)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val queries = SparkEntry.queries
+      val futures = gates.map { name =>
         Future {
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -37,29 +70,32 @@ object Verify {
       futures.foreach(Await.result(_, Duration.Inf))
       pool.shutdown()
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonObject(SparkEntry.oracleSql.toSeq))
+    val selected = gates.toSet
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      jsonObject(SparkEntry.oracleSql.toSeq.filter(kv => selected(kv._1))))
     val failures = failed.asScala.toSeq.sortBy(_._1)
     Files.writeString(Paths.get(s"$outDir/failed.json"), jsonObject(failures))
-    val n = SparkEntry.queries.size
+    val n = gates.size
     System.err.println(s"[verify] ${n - failures.size}/$n gates dumped, ${failures.size} failed" +
       (if (failures.isEmpty) "" else s": ${failures.map(_._1).mkString(", ")}"))
-    spark.stop()
+    failures
   }
 
-  /** A flat JSON object of strings. Escapes backslash, quote and ALL
-    * control chars (<0x20): a tab or CR in a gate's SQL would otherwise
-    * make the reader's json.load fail and silently zero the
-    * correctness check. */
-  def jsonObject(kv: Seq[(String, String)]): String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    kv.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  /** A JSON string literal. Escapes backslash, quote and ALL control
+    * chars (<0x20): a tab or CR in a gate's SQL would otherwise make
+    * the reader's json.load fail and silently zero the correctness
+    * check. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** A flat JSON object of strings. */
+  def jsonObject(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
 }

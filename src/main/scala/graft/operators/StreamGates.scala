@@ -185,11 +185,6 @@ object StreamGates {
       pipe: DataFrame => DataFrame): DataFrame = {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    // A/B knob for the replay session (diagnostic only — the bench and
-    // driver never set it): SPARK_GRAFT_STREAM_CONFS="k=v;k2=v2".
-    // Applied BEFORE the gate's own extraConfs so a gate's declared
-    // provider (st5/st20 RocksDB) always wins over an experiment.
-    streamAbConfs.foreach { case (k, v) => iso.conf.set(k, v) }
     extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
     val root = Scratch.dir(s"graft-$gate-")
     cleanupRoots.add(root)
@@ -202,29 +197,8 @@ object StreamGates {
       .option("checkpointLocation", chk.getPath)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    // Per-batch attribution (guide §1: measure first), env-gated and
-    // stderr-only: StreamingQueryProgress.durationMs splits each
-    // micro-batch into planning / state commit / addBatch / WAL, which
-    // is exactly the floor-vs-fixable evidence the replay rig needs.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE")) {
-      q.recentProgress.foreach { p =>
-        val dm = p.durationMs
-        val parts = dm.keySet().toArray(Array.empty[String]).sorted
-          .map(k => s"$k=${dm.get(k)}").mkString(" ")
-        System.err.println(
-          s"[st-profile] $gate batch=${p.batchId} rows=${p.numInputRows} $parts")
-      }
-    }
     s.read.parquet(out.getPath)
   }
-
-  /** Session-wide replay A/B confs from SPARK_GRAFT_STREAM_CONFS
-    * ("k=v;k2=v2") — the instrument for state-store provider /
-    * maintenance / log-knob experiments the r15 verdict asked for.
-    * Empty (a no-op) unless the env var is set; never set by the
-    * bench or the driver. */
-  private val streamAbConfs: Map[String, String] =
-    graft.GraftSession.envConfs("SPARK_GRAFT_STREAM_CONFS").toMap
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
     * store commit machinery scales with partitions × batches (each
@@ -237,11 +211,9 @@ object StreamGates {
     * 6× the median: a single state partition serializes every
     * commit). Conclusion: the 4-partition floor is REAL protocol cost
     * (checkpoint + per-batch planning), not shuffle width, so 4 stays
-    * the default; override with SPARK_GRAFT_STREAM_PARTS to
-    * re-measure. At cluster scale the dial sizes per-partition state
+    * the default. At cluster scale the dial sizes per-partition state
     * to executor memory, never to the session-wide shuffle width. */
-  private val streamParts =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "4")
+  private val streamParts = "4"
 
   private val HourUs = 3600L * 1000000
   private val DayUs  = 24L * HourUs

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import TestSpark._
+import scala.jdk.CollectionConverters._
 
 /** Registry-level contract checks: the driver hash-compares every
   * `queries` entry against its `oracleSql`, and smoke-checks rows>0
@@ -531,6 +532,52 @@ class GateRegistrySpec extends AnyFunSuite {
       case (name, Right((_, n))) if n <= 0 => s"$name EMPTY"
     }
     assert(bad.isEmpty, s"empty or failing gate queries: $bad")
+  }
+
+  test("Verify.dump with a gate filter writes exactly those gates and their oracles") {
+    val out = java.nio.file.Files.createTempDirectory("graft_verify").toFile
+    val gates = Seq("q1_agg", "ca1_window_metrics")
+    assert(Verify.dump(spark, sf0001, out.getPath, gates).isEmpty)
+    assert(out.listFiles().filter(_.isDirectory).map(_.getName).toSet == gates.toSet)
+    val oracles = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(out, "oracle_sql.json"))
+    assert(oracles.fieldNames().asScala.toSet == gates.toSet)
+    assert(java.nio.file.Files.readString(new java.io.File(out, "failed.json").toPath) == "{}")
+  }
+
+  test("Verify and Diag reject a bad command line before any session exists") {
+    def rejects(args: String*)(expected: String*): Unit = {
+      val e = intercept[IllegalArgumentException](
+        if (args.head == "Verify") Verify.parse(args.tail) else Diag.parse(args.tail))
+      expected.foreach(x => assert(e.getMessage.contains(x), s"'$x' not in: ${e.getMessage}"))
+    }
+    rejects("Verify", sf0001, "/tmp/out", "q1_agg,nosuchgate")("nosuchgate", "known: ", "q1_agg")
+    rejects("Diag", "explain", "q1_agg")("usage: Diag")
+    rejects("Diag", "--conf", "a=1;oops", "profile", "q1_agg")("'oops'", "--conf")
+    rejects("Diag", "profile", "q1_agg,nosuchgate")("nosuchgate")
+    rejects("Diag", "profile", "q1_agg", "0")("reps")
+    assert(Diag.parse(Seq("--conf", "a=1;b=x=y", "profile", "q1_agg", "2")) ==
+      (Diag.Profile(Seq("q1_agg"), 2), Seq("a" -> "1", "b" -> "x=y")))
+    // plan takes names as given: the tree before a change may lack a gate
+    assert(Diag.parse(Seq("plan", "/tmp/p", "after", "q1_agg,nosuchgate"))._1 ==
+      Diag.Plan("/tmp/p", "after", Seq("q1_agg", "nosuchgate")))
+  }
+
+  test("one session builder, no round-stamped files, and exactly the five mains in src/main") {
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val all = files(repoFile("src/main"))
+    val texts = all.filter(_.getName.endsWith(".scala"))
+      .map(f => f -> scala.io.Source.fromFile(f, "UTF-8").mkString)
+    assert(texts.collect { case (f, t) if t.contains("SparkSession.builder") => f.getName } ==
+      Seq("GraftSession.scala"))
+    val mains = texts.flatMap { case (_, t) =>
+      "def main\\(".r.findAllMatchIn(t).map { m =>
+        "object (\\w+)".r.findAllMatchIn(t.take(m.start)).toSeq.last.group(1)
+      }
+    }
+    assert(mains.sorted == Seq("Bench", "Diag", "PlanDump", "ScaleProbe", "Verify"))
+    assert(all.map(_.getName).filter("R\\d+".r.findFirstIn(_).isDefined).isEmpty)
   }
 
   test("entry is the flagship and returns rows") {

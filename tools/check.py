@@ -10,7 +10,8 @@ per-column DTYPES (the driver's hash is dtype-sensitive — round 1's 13
 "failures" were DuckDB HUGEINT sums vs Spark int64 with equal values,
 invisible to a values-only compare), and exact values after sorting
 columns by name and rows by all columns. Reports per-query PASS/FAIL
-with a diff sample on mismatch.
+with a diff sample on mismatch. A gate named in <verifyOutDir>/failed.json,
+or with an oracle but no dump directory, is a FAIL too.
 """
 import json
 import math
@@ -81,12 +82,19 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    failed_path = f"{out_dir}/failed.json"
+    failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
+    dumped = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
-        path = os.path.join(out_dir, name)
-        if not os.path.isdir(path):
+    # every dump, every oracle and every recorded failure gets a line: a
+    # gate that threw in Verify (or never dumped) must count as a FAIL
+    for name in sorted(dumped | set(oracles) | set(failed)):
+        if name in failed or name not in dumped:
+            n_fail += 1
+            print(f"{name}: FAIL  " + (failed[name] if name in failed else
+                                       "MISSING (in oracle_sql.json, no dump directory)"))
             continue
-        got = pd.read_parquet(path)
+        got = pd.read_parquet(os.path.join(out_dir, name))
         if name not in oracles:
             print(f"{name}: NO-ORACLE rows={len(got)}")
             continue
