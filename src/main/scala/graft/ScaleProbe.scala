@@ -99,7 +99,7 @@ object ScaleProbe {
     // events sections never read it, so they skip the minutes-long
     // 20× build.
     if (Set("all", "lsh", "ivfpq", "dedup")(probe)) {
-      val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val src = Tables.embeddings(spark, sfDir)
       // id stride derives from the source ids — a hardcoded stride would
       // silently collide replica ids on larger corpora. Rounded UP to a
       // multiple of 100 so replica ids keep their originals' residues
@@ -111,7 +111,7 @@ object ScaleProbe {
         .drop("rep")
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-      val n = spark.read.parquet(s"$out/embeddings.parquet").count()
+      val n = Tables.table(spark, out, "embeddings").count()
       println(s"corpus: $n vectors ($factor x $sfDir)")
     }
 
@@ -222,7 +222,7 @@ object ScaleProbe {
       // dict-grain algorithms); the grown corpus proves the dict-grain
       // claim when the dict itself scales (tx24/tx25's hard case).
       val grow = sys.env.get("SPARK_GRAFT_GROWVOCAB").contains("1")
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = Tables.documents(spark, sfDir)
       val dstride = (docs.agg(max(col("doc_id"))).head.getLong(0) / 100L + 1L) * 100L
       val replicated = docs.crossJoin(spark.range(factor).toDF("rep"))
         .withColumn("doc_id", col("doc_id") + col("rep") * lit(dstride))
@@ -236,10 +236,10 @@ object ScaleProbe {
       reexted.drop("rep")
         .repartition(32)
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      val nd = spark.read.parquet(s"$out/documents.parquet").count()
+      val nd = Tables.table(spark, out, "documents").count()
       println(s"corpus: $nd documents ($factor x $sfDir, growVocab=$grow)")
       if (grow) {
-        val v = spark.read.parquet(s"$out/documents.parquet")
+        val v = Tables.table(spark, out, "documents")
           .select(explode(split(trim(col("text")), "\\s+")).as("t"))
           .filter(length(col("t")) > 0).agg(countDistinct(col("t"))).head.getLong(0)
         println(s"corpus: $v distinct token types (grown vocabulary)")
@@ -271,7 +271,7 @@ object ScaleProbe {
       // windows), coverage state one long per doc. Classification
       // asserted: output stays exactly doc-grain at any factor.
       locally {
-        val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
+        val nDocs = Tables.table(spark, out, "documents").count()
         val t0 = System.nanoTime()
         val c = SparkEntry.queries("dd21_exact_substring")(spark, out).count()
         val secs = (System.nanoTime() - t0) / 1e9
@@ -472,7 +472,7 @@ object ScaleProbe {
       // 2 clips per media at any corpus size (the decode wave it
       // feeds reads only (media, start, len) triples).
       locally {
-        val nDocs = spark.read.parquet(s"$out/documents.parquet").count()
+        val nDocs = Tables.table(spark, out, "documents").count()
         val t1 = System.nanoTime()
         val c = SparkEntry.queries("mm15_clip_sample")(spark, out).count()
         val s1 = (System.nanoTime() - t1) / 1e9
@@ -500,7 +500,7 @@ object ScaleProbe {
         .withColumn("ts", timestamp_micros(unix_micros(col("ts")) + col("rep") * span))
         .drop("rep").repartition(32)
         .write.mode("overwrite").parquet(s"$out/events.parquet")
-      val ne = spark.read.parquet(s"$out/events.parquet").count()
+      val ne = Tables.table(spark, out, "events").count()
       println(s"events: $ne rows ($factor x $sfDir, time-shifted replicas)")
       // la9 rides the same replica: its partition-drop cost is
       // proportional to the DAY COUNT (20× the days here — the time-
@@ -820,16 +820,16 @@ object ScaleProbe {
           .withColumn("ts", timestamp_micros(unix_micros(col("ts")) + col("rep") * span))
           .drop("rep").repartition(32)
           .write.mode("overwrite").parquet(s"$out/events.parquet")
-        println(s"events: ${spark.read.parquet(s"$out/events.parquet").count()} rows")
+        println(s"events: ${Tables.table(spark, out, "events").count()} rows")
       }
       if (needsEmb) {
-        val src = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        val src = Tables.embeddings(spark, sfDir)
         val stride = (src.agg(max(col("vec_id"))).head.getLong(0) / 100L + 1L) * 100L
         src.crossJoin(spark.range(factor).toDF("rep"))
           .withColumn("vec_id", col("vec_id") + col("rep") * lit(stride))
           .drop("rep").repartition(32)
           .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
-        println(s"corpus: ${spark.read.parquet(s"$out/embeddings.parquet").count()} vectors")
+        println(s"corpus: ${Tables.table(spark, out, "embeddings").count()} vectors")
       }
       // base-table passthrough: gates that register the full SQL-view
       // set (ensureSqlViews) resolve every table's schema eagerly, so

@@ -1,6 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver-provided synthetic tables (TESTDATA.md).
   *
@@ -9,10 +14,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `.explain("formatted")` → `PushedFilters`, `ReadSchema`). At 100 TB
   * these become partitioned/bucketed tables; nothing downstream assumes
   * a single file.
+  *
+  * Reads are inference-free after the first: `spark.read.parquet(path)`
+  * launches a Spark job per call to infer the schema from the footers,
+  * so each table's inferred schema is memoized and later reads pass it
+  * back with `spark.read.schema(s)`. Contract: a table file is
+  * immutable while it keeps its length and mtime (a rewrite at the same
+  * path changes them and is re-inferred).
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** SQL confs that change how parquet types map to Spark types. */
+  private val schemaConfs: Seq[String] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** path → (stamp, the schema inference returned for it). The stamp is
+    * (path, length, mtime) of every file under the path plus the values
+    * of `schemaConfs`; one entry per path, replaced when the stamp moves. */
+  private val schemas = new ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  /** The memoized inferred schema of `path`; None when the path cannot
+    * be listed, so the plain read raises Spark's own error. */
+  private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
+    val p = new Path(path)
+    val stamp = try {
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      // getFileStatus/listStatus, not listFiles: a LocatedFileStatus
+      // reads owner and permission, which the local filesystem forks for
+      def leaves(f: FileStatus): Seq[FileStatus] =
+        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(leaves) else Seq(f)
+      val stats = leaves(fs.getFileStatus(p))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      Some(stats.sortBy(_._1) ++ schemaConfs.map(spark.conf.getOption))
+    } catch { case _: FileNotFoundException => None }
+    stamp.map { st =>
+      Option(schemas.get(path)).collect { case (`st`, s) => s }.getOrElse {
+        val s = spark.read.parquet(path).schema
+        schemas.put(path, (st, s))
+        s
+      }
+    }
+  }
 
   /** Session configs every entry point (Verify/Bench/tests) must set
     * before reading the driver tables. `nanosAsLong` because
@@ -36,7 +86,12 @@ object Tables {
     // by pre-repartitioning on the bucket key (same Murmur3-pmod hash
     // as the bucket-file assignment). With it, a key-matched SMJ over
     // bucket-sorted tables carries neither Exchange nor Sort.
-    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
+    // The local filesystem without chmod/readlink forks, for both the
+    // FileSystem API (file writes, reads) and the FileContext API
+    // (Spark's streaming checkpoint manager) — see graft.sources.LocalFs
+    "spark.hadoop.fs.file.impl" -> "graft.sources.GraftLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.sources.GraftLocalFs")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

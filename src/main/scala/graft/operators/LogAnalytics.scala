@@ -4,7 +4,7 @@ import graft.{GateQuery, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Log-analytics surface (reference `sqlite_logger.py`, SURVEY §2.1
   * S9-S11, §2.3 F3-F8, §2.5 A7-A8, §2.6 W3-W4, §3.3) over the `events`
@@ -184,9 +184,12 @@ object LogAnalytics {
     // the TmpDirs shutdown hook reclaims it at JVM exit (pre-round-10
     // it leaked one dir per run)
     val dir = TmpDirs.exitScopedRoot("la6")
-    logs(s, d).filter(col("level_no") >= 30)
-      .write.mode("overwrite").partitionBy("level").parquet(dir)
-    s.read.parquet(dir)
+    val sunk = logs(s, d).filter(col("level_no") >= 30)
+    sunk.write.mode("overwrite").partitionBy("level").parquet(dir)
+    // the writer's schema, laid out as the read-back infers it (data
+    // columns, then the partition column): no schema-inference job
+    val (level, data) = sunk.schema.partition(_.name == "level")
+    s.read.schema(StructType(data ++ level)).parquet(dir)
       .filter(col("level") === "ERROR")
       .withColumn("day_us",
         expr("(ts_us div (24L * 3600 * 1000000)) * (24L * 3600 * 1000000)"))

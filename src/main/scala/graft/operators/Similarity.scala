@@ -883,6 +883,26 @@ object Similarity {
     * over the broadcast-dim frame for all widths. Output is |widths|
     * rows. */
   private def sim18(s: SparkSession, d: String): DataFrame = {
+    val (scored, candCounts) = sim18Scored(s, d)
+    val tops = sim18Tops(scored)
+    val audit = sim1(s, d).select(col("query_id"), col("neighbor_id"))
+      .join(broadcast(tops), Seq("query_id", "neighbor_id"), "left")
+      .agg(count(lit(1)).as("n_exact_pairs"),
+        sum(coalesce(col("hit1"), lit(0L))).as("h1"),
+        sum(coalesce(col("hit2"), lit(0L))).as("h2"),
+        sum(coalesce(col("hit4"), lit(0L))).as("h4"))
+      .selectExpr("n_exact_pairs",
+        "stack(3, 1L, h1, 2L, h2, 4L, h4) AS (nprobe, hits)")
+    audit.join(broadcast(candCounts), Seq("nprobe"))
+      .select(col("nprobe"), col("n_exact_pairs"), col("hits"),
+        (col("hits").cast("double") * 100 / col("n_exact_pairs"))
+          .as("recall_pct"),
+        col("n_candidates"))
+  }
+
+  /** sim18's widest-probe scored candidates (query_id, vec_id, wmin,
+    * cosine) and its per-width candidate counts (nprobe, n_candidates). */
+  private[graft] def sim18Scored(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val maxNp = 4
     val base = vecs(s, d)
     val cb = typedLit(codebookArr(s, d))
@@ -911,32 +931,6 @@ object Similarity {
         dotExpr("qv", "v") / (sqrt(col("qn2")) * sqrt(col("n2"))))
       .select(col("query_id"), col("vec_id"), col("crk").as("wmin"),
         col("cosine"))
-    // one sorted pass, three ranks: cr_np = #rows with wmin<=np at or
-    // before this row in (cosine desc, vec_id asc) order — exactly the
-    // row_number the per-width filtered window produced (vec_id is
-    // unique per query, so the order is total and NaN placement under
-    // desc is shared by construction)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tops = scored
-      .withColumn("cr1", sum(when(col("wmin") <= 1, 1L).otherwise(0L)).over(w))
-      .withColumn("cr2", sum(when(col("wmin") <= 2, 1L).otherwise(0L)).over(w))
-      .withColumn("cr4", sum(lit(1L)).over(w))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        when(col("wmin") <= 1 && col("cr1") <= 10, 1L).as("hit1"),
-        when(col("wmin") <= 2 && col("cr2") <= 10, 1L).as("hit2"),
-        when(col("cr4") <= 10, 1L).as("hit4"))
-      .filter(col("hit1").isNotNull || col("hit2").isNotNull ||
-        col("hit4").isNotNull)
-    val audit = sim1(s, d).select(col("query_id"), col("neighbor_id"))
-      .join(broadcast(tops), Seq("query_id", "neighbor_id"), "left")
-      .agg(count(lit(1)).as("n_exact_pairs"),
-        sum(coalesce(col("hit1"), lit(0L))).as("h1"),
-        sum(coalesce(col("hit2"), lit(0L))).as("h2"),
-        sum(coalesce(col("hit4"), lit(0L))).as("h4"))
-      .selectExpr("n_exact_pairs",
-        "stack(3, 1L, h1, 2L, h2, 4L, h4) AS (nprobe, hits)")
     // candidate volume from the probe × cell-size algebra: the query's
     // own cell is always probe rank 1, so subtract one per query. ONE
     // agg for all widths (each leg's filtered countDistinct equals the
@@ -952,11 +946,30 @@ object Similarity {
         (sum(when(col("crk") <= 4, col("sz")))
           - countDistinct(col("query_id"))).as("c4"))
       .selectExpr("stack(3, 1L, c1, 2L, c2, 4L, c4) AS (nprobe, n_candidates)")
-    audit.join(broadcast(candCounts), Seq("nprobe"))
-      .select(col("nprobe"), col("n_exact_pairs"), col("hits"),
-        (col("hits").cast("double") * 100 / col("n_exact_pairs"))
-          .as("recall_pct"),
-        col("n_candidates"))
+    (scored, candCounts)
+  }
+
+  /** Every width's top-10 of `scored` from one window pass:
+    * (query_id, neighbor_id, hit1, hit2, hit4), a hit flag 1 or null. */
+  private[graft] def sim18Tops(scored: DataFrame): DataFrame = {
+    // one sorted pass, three ranks: cr_np = #rows with wmin<=np at or
+    // before this row in (cosine desc, vec_id asc) order — exactly the
+    // row_number the per-width filtered window produced (vec_id is
+    // unique per query, so the order is total and NaN placement under
+    // desc is shared by construction)
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    scored
+      .withColumn("cr1", sum(when(col("wmin") <= 1, 1L).otherwise(0L)).over(w))
+      .withColumn("cr2", sum(when(col("wmin") <= 2, 1L).otherwise(0L)).over(w))
+      .withColumn("cr4", sum(lit(1L)).over(w))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        when(col("wmin") <= 1 && col("cr1") <= 10, 1L).as("hit1"),
+        when(col("wmin") <= 2 && col("cr2") <= 10, 1L).as("hit2"),
+        when(col("cr4") <= 10, 1L).as("hit4"))
+      .filter(col("hit1").isNotNull || col("hit2").isNotNull ||
+        col("hit4").isNotNull)
   }
 
   /** nprobe-parameterized probe CTE (probesCteSql's generalization). */

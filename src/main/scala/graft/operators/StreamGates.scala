@@ -192,12 +192,14 @@ object StreamGates {
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
     val out = new File(root, "out")
     val chk = new File(root, "chk")
-    val q = pipe(stream).writeStream.format("parquet")
+    val piped = pipe(stream)
+    val q = piped.writeStream.format("parquet")
       .option("path", out.getPath)
       .option("checkpointLocation", chk.getPath)
       .outputMode("append").start()
     try q.processAllAvailable() finally q.stop()
-    s.read.parquet(out.getPath)
+    // the sink's known schema: no schema-inference job on the read-back
+    s.read.schema(piped.schema).parquet(out.getPath)
   }
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
@@ -1141,8 +1143,8 @@ object StreamGates {
     *
     * Scale shape: row payloads never cross the driver — commit
     * messages are (path, count) pairs; the read-back is
-    * file-partitioned. The replay session is isolated at 8 shuffle
-    * partitions like every st gate. */
+    * file-partitioned. The replay session is isolated at 4 shuffle
+    * partitions (`streamParts`) like every st gate. */
   private def st16(s: SparkSession, d: String): DataFrame = {
     val src = stageSlices(s, d, 4)
     val iso = s.newSession()

@@ -563,12 +563,19 @@ class GateRegistrySpec extends AnyFunSuite {
       Diag.Plan("/tmp/p", "after", Seq("q1_agg", "nosuchgate")))
   }
 
-  test("one session builder, no round-stamped files, and exactly the five mains in src/main") {
+  private def mainFiles: Seq[java.io.File] = {
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val all = files(repoFile("src/main"))
-    val texts = all.filter(_.getName.endsWith(".scala"))
+    files(repoFile("src/main"))
+  }
+
+  private def mainSources: Seq[(java.io.File, String)] =
+    mainFiles.filter(_.getName.endsWith(".scala"))
       .map(f => f -> scala.io.Source.fromFile(f, "UTF-8").mkString)
+
+  test("one session builder, no round-stamped files, and exactly the five mains in src/main") {
+    val all = mainFiles
+    val texts = mainSources
     assert(texts.collect { case (f, t) if t.contains("SparkSession.builder") => f.getName } ==
       Seq("GraftSession.scala"))
     val mains = texts.flatMap { case (_, t) =>
@@ -578,6 +585,15 @@ class GateRegistrySpec extends AnyFunSuite {
     }
     assert(mains.sorted == Seq("Bench", "Diag", "PlanDump", "ScaleProbe", "Verify"))
     assert(all.map(_.getName).filter("R\\d+".r.findFirstIn(_).isDefined).isEmpty)
+  }
+
+  test("every table-file read in src/main goes through Tables") {
+    // a direct `read.parquet` of `<dir>/<table>.parquet` bypasses the
+    // schema memo and pays one inference job per call
+    val tableRead = ("""read\.parquet\(s"\$\{?\w+\}?/(region|nation|customer|supplier|""" +
+      """part|orders|lineitem|events|documents|embeddings)\.parquet"""").r
+    assert(mainSources.collect { case (f, t) if f.getName != "Tables.scala" &&
+      tableRead.findFirstIn(t).isDefined => f.getName } == Nil)
   }
 
   test("entry is the flagship and returns rows") {

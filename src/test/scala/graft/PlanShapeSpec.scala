@@ -590,4 +590,20 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(wide.exists(doubleToDecimal) && wide.exists(_.isInstanceOf[Sum]))
     assert(!wide.exists(_.isInstanceOf[graft.functions.ScaledSum]))
   }
+
+  test("Spark jobs per execution of the seven benchmark gates (sf0.001)") {
+    // Deterministic counts pin the fixed per-call cost: a table read
+    // that falls back to schema inference adds a job, and fails here
+    // on any host. One untimed run first fills the per-JVM caches
+    // (codebooks, staged replay slices, the schema memo).
+    // (Before the schema memo: 3, 2, 3, 4, 6, 5, 8.)
+    val pins = Seq("ca1_window_metrics" -> 2, "yf6_duration_parse" -> 1,
+      "q1_agg" -> 2, "tw18_asof_plan" -> 3, "sim6_ivf_search" -> 5,
+      "la6_sink_roundtrip" -> 3, "st16_stream_dsv2_sink" -> 7)
+    val counts = pins.map { case (g, _) =>
+      gate(g, sf0001).collect()
+      g -> jobsStarted(gate(g, sf0001).collect())._2
+    }
+    assert(counts == pins)
+  }
 }

@@ -655,4 +655,30 @@ class SimilaritySpec extends AnyFunSuite {
       assert(fusedTop.nonEmpty, s"np=$np: degenerate fixture (empty top set)")
     }
   }
+
+  test("sim18 at sf0.001: each width's fused top-10 == its own row_number top-10") {
+    // the real gate path: sim18Tops over sim18's own scored candidates,
+    // against an independent per-width row_number over the same frame,
+    // and the gate's hit counts against that re-derivation
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val (scored, _) = graft.operators.Similarity.sim18Scored(spark, sf0001)
+    val tops = graft.operators.Similarity.sim18Tops(scored).collect()
+    val exact = gate("sim1_knn_bruteforce", sf0001).collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+    val hits = gate("sim18_nprobe_curve", sf0001).collect()
+      .map(r => r.getAs[Long]("nprobe") -> r.getAs[Long]("hits")).toMap
+    for ((np, flag) <- Seq(1 -> "hit1", 2 -> "hit2", 4 -> "hit4")) {
+      val fusedTop = tops.filter(r => !r.isNullAt(r.fieldIndex(flag)))
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
+      val perWidth = scored.filter(col("wmin") <= np)
+        .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("vec_id").asc)))
+        .filter(col("rank") <= 10)
+        .collect()
+        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
+      assert(fusedTop.nonEmpty && fusedTop == perWidth, s"np=$np")
+      assert(hits(np.toLong) == (exact & perWidth).size.toLong, s"np=$np")
+    }
+  }
 }

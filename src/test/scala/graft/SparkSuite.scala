@@ -31,6 +31,30 @@ object TestSpark {
   def gate(name: String, dir: String): DataFrame =
     SparkEntry.queries(name)(spark, dir)
 
+  /** The result of `body` and the number of Spark jobs it started,
+    * counted by job tag (so jobs of other threads never leak in) after
+    * the listener bus has delivered every job-start event. */
+  def jobsStarted[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"graft-test-jobs-${java.util.UUID.randomUUID}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, n.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Count SHUFFLE exchanges in a plan string. Plan lines carry tree
     * prefixes (`+-`, `:`), so `trim.startsWith("Exchange")` silently
     * matches nothing — match the operator token itself, excluding
