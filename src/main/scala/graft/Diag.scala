@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The diagnostics entry point; no contract output depends on it. Tables
@@ -13,20 +13,29 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   *   sbt "runMain graft.Diag [--conf k=v;k2=v2] plan <outDir> <suffix> <gate,...>"
   *   sbt "runMain graft.Diag [--conf k=v;k2=v2] profile <gate,...> [reps]"
+  *   sbt "runMain graft.Diag [--conf k=v;k2=v2] replica <outDir> <factor> [grown]"
+  *   sbt "runMain graft.Diag [--conf k=v;k2=v2] scale [check,...]"
   *
   * `plan` writes each gate's formatted explain to
   * `<outDir>/<gate>_<suffix>.txt`: run it before a change with `before`
   * and after it with `after`. A gate that fails, or that the tree lacks,
   * is named and the run exits 1. `profile` runs each gate `reps` times
   * (default 3) and prints per rep the rows, wall and every Spark job the
-  * gate spawned, then the gate's walls and their warm (rep ≥ 2) minimum. */
+  * gate spawned, then the gate's walls and their warm (rep ≥ 2) minimum.
+  * `replica` writes the tables `factor`× into `outDir` ([[Replica.write]]);
+  * `scale` runs the named [[Replica.checks]] (all when none is named)
+  * and exits 1 naming every check that failed. Point
+  * `SPARK_GRAFT_SF_DIR` at a replica to profile, bench or verify any
+  * gate at that scale. */
 object Diag {
   sealed trait Cmd
   final case class Plan(outDir: String, suffix: String, gates: Seq[String]) extends Cmd
   final case class Profile(gates: Seq[String], reps: Int) extends Cmd
+  final case class Replicate(outDir: String, factor: Int, grown: Boolean) extends Cmd
+  final case class Scale(checks: Seq[String]) extends Cmd
 
-  private val usage = "usage: Diag [--conf k=v;k2=v2] " +
-    "plan <outDir> <suffix> <gate,...> | profile <gate,...> [reps]"
+  private val usage = "usage: Diag [--conf k=v;k2=v2] plan <outDir> <suffix> <gate,...> | " +
+    "profile <gate,...> [reps] | replica <outDir> <factor> [grown] | scale [check,...]"
 
   /** The command and its `--conf` settings; pure, so a bad command
     * line fails before any session exists. */
@@ -44,6 +53,12 @@ object Diag {
       val n = reps.headOption.fold(Option(3))(_.toIntOption).filter(_ > 0)
         .getOrElse(throw new IllegalArgumentException(s"reps must be a positive integer; $usage"))
       Profile(Verify.gateList(gates), n)
+    case Seq("replica", outDir, factor, grown @ _*) if grown.isEmpty || grown == Seq("grown") =>
+      val n = factor.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"factor must be a positive integer; $usage"))
+      Replicate(outDir, n, grown.nonEmpty)
+    case Seq("scale") => Scale(Replica.checks.keys.toSeq)
+    case Seq("scale", names) => Scale(Verify.nameList(names, Replica.checks.keys.toSeq, "check"))
     case _ => throw new IllegalArgumentException(usage)
   }
 
@@ -52,11 +67,17 @@ object Diag {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       throw new IllegalArgumentException("set SPARK_GRAFT_SF_DIR to the tables' directory"))
     val spark = GraftSession.build(GraftSession.cpus, confs)
-    val skipped = try cmd match {
+    val failed = try cmd match {
       case p: Plan => plan(spark, sfDir, p)
       case p: Profile => profile(spark, sfDir, p); Nil
+      case r: Replicate =>
+        val rows = Replica.write(spark, sfDir, r.factor, r.outDir, r.grown)
+        println(s"replica ${r.outDir}: ${r.factor} x $sfDir${if (r.grown) ", grown" else ""};" +
+          rows.map { case (t, n) => s" $t=$n" }.mkString)
+        Nil
+      case s: Scale => scale(spark, sfDir, s)
     } finally spark.stop()
-    if (skipped.nonEmpty) sys.exit(1)
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** Writes each gate's plan; returns (and names) the gates it could
@@ -84,6 +105,29 @@ object Diag {
     skipped
   }
 
+  /** Runs each check; returns (and names) the ones that failed. */
+  private def scale(spark: SparkSession, sfDir: String, s: Scale): Seq[String] = {
+    val failed = s.checks.filterNot { name =>
+      try {
+        val (line, secs) = Replica.timed(Replica.checks(name)(spark, sfDir))
+        println(f"[scale] $name ($secs%.1f s)\n$line")
+        true
+      } catch { case e: Exception =>
+        println(s"FAIL $name: ${e.getMessage}")
+        false
+      }
+    }
+    if (failed.nonEmpty) System.err.println(
+      s"[diag] ${failed.size}/${s.checks.size} checks failed: ${failed.mkString(", ")}")
+    failed
+  }
+
+  /** The gate's row count, materializing EVERY output column: a bare
+    * `count()` lets Catalyst prune columns and eliminate unique-key
+    * outer joins, timing a plan the gate never serves (mm11 at the 100×
+    * replica: 1.1 s counted vs 17.5 s served). */
+  def served(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
   private def profile(spark: SparkSession, sfDir: String, p: Profile): Unit = {
     val started = new ConcurrentHashMap[Int, (Long, String)]()
     val done = new ConcurrentLinkedQueue[(Int, Long, Long, String)]()
@@ -105,9 +149,7 @@ object Diag {
       val walls = (1 to p.reps).map { rep =>
         done.clear()
         started.clear() // a straggler from the last rep must not leak in
-        val t0 = System.nanoTime()
-        val n = queries(gate)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
+        val (n, wall) = Replica.timed(served(queries(gate)(spark, sfDir)))
         // the listener bus is async: wait (bounded) until every started
         // job reported its end
         var waited = 0

@@ -27,13 +27,16 @@ object Verify {
   }
 
   /** The gate names of `a,b,c`; fails naming every unknown one. */
-  def gateList(spec: String): Seq[String] = {
+  def gateList(spec: String): Seq[String] =
+    nameList(spec, SparkEntry.queries.keys.toSeq.sorted, "gate")
+
+  /** The names of `a,b,c`, each one of `known`; fails naming every
+    * unknown one and listing the known. */
+  def nameList(spec: String, known: Seq[String], kind: String): Seq[String] = {
     val names = spec.split(",").toSeq.filter(_.nonEmpty)
-    val known = SparkEntry.queries.keySet
-    val unknown = names.filterNot(known)
+    val unknown = names.filterNot(known.contains)
     if (names.isEmpty || unknown.nonEmpty) throw new IllegalArgumentException(
-      s"unknown gate(s) '${unknown.mkString(",")}' in '$spec'; known: " +
-        known.toSeq.sorted.mkString(", "))
+      s"unknown $kind(s) '${unknown.mkString(",")}' in '$spec'; known: ${known.mkString(", ")}")
     names
   }
 

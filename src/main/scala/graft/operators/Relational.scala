@@ -1117,9 +1117,9 @@ object Relational {
     * sketch-sketch join — corpus-independent state, the admission test
     * a 100 TB planner runs before committing to a shuffle; the exact
     * leg is the key-grain exchange the sketch replaces. */
-  /** q27's CM sketch pass — exposed so ScaleProbe can assert the
-    * STATE-SIZE invariance law (≤ d·w cells regardless of corpus) on
-    * the replica tables. */
+  /** q27's CM sketch pass — exposed so `Replica.checks` can assert
+    * the row-sum conservation law (every hash row accounts for the
+    * whole corpus, in ≤ d·w cells) on the replica tables. */
   private[graft] val (cmD, cmW) = (4, 1024)
   private[graft] def cmSketch(df: DataFrame, key: Column,
       cname: String): DataFrame = {

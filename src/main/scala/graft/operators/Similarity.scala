@@ -1805,7 +1805,8 @@ object Similarity {
     * DataFrame end-to-end, and the per-query state is P·(64 doubles)
     * ≈ 13 KB regardless of corpus size.
     *
-    * COST CEILING, measured (r15 ScaleProbe): the gate's wall is the
+    * COST CEILING, measured (r15, 100× replica; rerun with `Diag
+    * profile` on a `Diag replica` dir): the gate's wall is the
     * declared O(Q·N) brute-force pool, not the re-rank — at the 100×
     * replica (2 k queries × 200 k corpus) the probe read 146 s, all of
     * it scored cosines in the pool scan; the grouped selection stayed

@@ -1888,7 +1888,7 @@ object StreamGates {
     * (window, value) dim anywhere in the serving path. The exact audit
     * is bench-side only; drop it and the stream IS the dashboard. */
   /** st24's emitted frame (window_start_us, event_type, n_rows, sk) —
-    * exposed so ScaleProbe can assert the STATE-SIZE law on the raw
+    * exposed so `Replica.checks` can assert the STATE-SIZE law on the raw
     * sketch structs (retained items ≤ k·levels) at replica scale,
     * which the gate's deterministic output deliberately drops. */
   private[graft] def st24Emitted(s: SparkSession, d: String): DataFrame =
@@ -1904,7 +1904,7 @@ object StreamGates {
           col("event_type"), col("n_rows"), col("sk"))
     }
 
-  /** st24's audit half, split out so ScaleProbe can compose the gate
+  /** st24's audit half, split out so `Replica.checks` can compose the gate
     * from ONE st24Emitted replay (state-law asserts + certificates)
     * instead of replaying the stream twice at replica scale. */
   private[graft] def st24Audit(s: SparkSession, d: String,

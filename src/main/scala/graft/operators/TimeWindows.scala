@@ -849,7 +849,8 @@ object TimeWindows {
     * no union, no window state — two key exchanges + sorts and a
     * linear zip of co-partitioned iterators (AsOfJoinSpec pins the
     * exec node's presence and the absence of Union/Window). Measured
-    * economics (`SPARK_GRAFT_PROBE=asof`, 2M×8M rows, two widths):
+    * economics (`Diag scale asof` on the 100× replica, 2M×8M rows,
+    * two widths):
     * PARITY with union-and-carry on wall clock — the native form's
     * wins are structural: O(1) merge state instead of window carry
     * state, no union materialization, and output that keeps the left

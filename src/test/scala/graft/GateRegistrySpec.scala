@@ -556,11 +556,18 @@ class GateRegistrySpec extends AnyFunSuite {
     rejects("Diag", "--conf", "a=1;oops", "profile", "q1_agg")("'oops'", "--conf")
     rejects("Diag", "profile", "q1_agg,nosuchgate")("nosuchgate")
     rejects("Diag", "profile", "q1_agg", "0")("reps")
+    rejects("Diag", "replica", "/tmp/r", "0")("factor")
+    rejects("Diag", "replica", "/tmp/r", "x")("factor")
+    rejects("Diag", "replica", "2")("usage: Diag")
+    rejects("Diag", "scale", "nosuchcheck")("nosuchcheck", "known: ", "cc_chain")
     assert(Diag.parse(Seq("--conf", "a=1;b=x=y", "profile", "q1_agg", "2")) ==
       (Diag.Profile(Seq("q1_agg"), 2), Seq("a" -> "1", "b" -> "x=y")))
     // plan takes names as given: the tree before a change may lack a gate
     assert(Diag.parse(Seq("plan", "/tmp/p", "after", "q1_agg,nosuchgate"))._1 ==
       Diag.Plan("/tmp/p", "after", Seq("q1_agg", "nosuchgate")))
+    assert(Diag.parse(Seq("replica", "/tmp/r", "2", "grown"))._1 ==
+      Diag.Replicate("/tmp/r", 2, grown = true))
+    assert(Diag.parse(Seq("scale"))._1 == Diag.Scale(Replica.checks.keys.toSeq))
   }
 
   private def mainFiles: Seq[java.io.File] = {
@@ -573,7 +580,7 @@ class GateRegistrySpec extends AnyFunSuite {
     mainFiles.filter(_.getName.endsWith(".scala"))
       .map(f => f -> scala.io.Source.fromFile(f, "UTF-8").mkString)
 
-  test("one session builder, no round-stamped files, and exactly the five mains in src/main") {
+  test("one session builder, no round-stamped files, and the pinned set of mains") {
     val all = mainFiles
     val texts = mainSources
     assert(texts.collect { case (f, t) if t.contains("SparkSession.builder") => f.getName } ==
@@ -583,8 +590,15 @@ class GateRegistrySpec extends AnyFunSuite {
         "object (\\w+)".r.findAllMatchIn(t.take(m.start)).toSeq.last.group(1)
       }
     }
-    assert(mains.sorted == Seq("Bench", "Diag", "PlanDump", "ScaleProbe", "Verify"))
+    assert(mains.sorted == Seq("Bench", "Diag", "PlanDump", "Verify"))
     assert(all.map(_.getName).filter("R\\d+".r.findFirstIn(_).isDefined).isEmpty)
+  }
+
+  test("src/main names exactly the seven SPARK_GRAFT_ env knobs") {
+    // a new knob fails here: sizes and modes belong on a command line
+    val knobs = mainSources.flatMap { case (_, t) => "SPARK_GRAFT_\\w+".r.findAllIn(t) }.toSet
+    assert(knobs == Set("CPUS", "MASTER", "JARS", "SF_DIR", "QUERY_PAR", "VERIFY_PAR",
+      "SCRATCH").map("SPARK_GRAFT_" + _))
   }
 
   test("every table-file read in src/main goes through Tables") {

@@ -606,4 +606,23 @@ class PlanShapeSpec extends AnyFunSuite {
     }
     assert(counts == pins)
   }
+
+  test("Diag profile runs mm11's served plan; a bare count() plans its join away") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = gate("mm11_cdc_chunk_dedup", sf0001)
+    def joins(p: LogicalPlan): Int = p.collect { case j: Join => j }.size
+    // the left join onto a unique-key aggregate is eliminated when no
+    // column of it is read
+    assert(joins(df.queryExecution.optimizedPlan) == 1)
+    assert(joins(df.groupBy().count().queryExecution.optimizedPlan) == 0)
+    val n = Diag.served(df)
+    assert(n > 0 && n == df.count())
+    // the profiled run executed that join: it emitted every row
+    val ran = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j.metrics("numOutputRows").value
+    }
+    assert(ran == Seq(n))
+  }
 }
