@@ -41,17 +41,33 @@ object Tables {
     * of `schemaConfs`; one entry per path, replaced when the stamp moves. */
   private val schemas = new ConcurrentHashMap[String, (Seq[Any], StructType)]()
 
+  /** The files that make up the table at `path`: the path itself when
+    * it is a file, else every file below it, skipping the names Spark's
+    * file index hides (a leading `.`, or `_` outside a `k=v` partition
+    * name: `_SUCCESS`, `_temporary`, `.crc`). The one directory walk of
+    * a table in this library: schema stamps, summary fingerprints and
+    * the lakehouse gates' manifests all read it. getFileStatus/
+    * listStatus, not listFiles: a LocatedFileStatus reads owner and
+    * permission, which the local filesystem forks `ls -ld` for. Throws
+    * FileNotFoundException when `path` is missing. */
+  def files(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def leaves(f: FileStatus): Seq[FileStatus] =
+      if (!f.isDirectory) Seq(f)
+      else fs.listStatus(f.getPath).toSeq
+        .filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith(".") || n.startsWith("_") && !n.contains("=")
+        }.flatMap(leaves)
+    leaves(fs.getFileStatus(p))
+  }
+
   /** The memoized inferred schema of `path`; None when the path cannot
     * be listed, so the plain read raises Spark's own error. */
   private def schemaOf(spark: SparkSession, path: String): Option[StructType] = {
-    val p = new Path(path)
     val stamp = try {
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      // getFileStatus/listStatus, not listFiles: a LocatedFileStatus
-      // reads owner and permission, which the local filesystem forks for
-      def leaves(f: FileStatus): Seq[FileStatus] =
-        if (f.isDirectory) fs.listStatus(f.getPath).toSeq.flatMap(leaves) else Seq(f)
-      val stats = leaves(fs.getFileStatus(p))
+      val stats = files(spark, path)
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
       Some(stats.sortBy(_._1) ++ schemaConfs.map(spark.conf.getOption))
     } catch { case _: FileNotFoundException => None }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GateQuery, Tables}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -54,6 +55,87 @@ object LogAnalytics {
       |    (CAST(value AS DECIMAL(18,2)) * 100)::BIGINT AS value_cents
       |  FROM events)
       |""".stripMargin
+
+  private val DayUs = 24L * 3600 * 1000000
+
+  /** The log view with its UTC day (`day_us`, the µs at midnight): the
+    * partition key of the lakehouse gates' tables. */
+  private def dayLogs(s: SparkSession, d: String): DataFrame =
+    logs(s, d).withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+
+  /** A `day_us`-partitioned parquet table at `<root>/<name>`: the table
+    * la9 and la12-la21 drop, compact, delete, merge, time-travel,
+    * garbage-collect and publish. `root` is the gate's
+    * [[TmpDirs.withRoot]] root and every staging dir lives under it too,
+    * so a `require` that fails mid-commit leaves nothing behind. Files
+    * are named by scheme-less path (`toUri.getPath`), so manifest set
+    * algebra compares like with like. */
+  private[graft] final class DayTable(s: SparkSession, root: String, name: String = "table") {
+    val dir = s"$root/$name"
+    val fs: FileSystem = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+
+    /** The clustered write: repartition on the partition key first, one
+      * file per day dir. An unclustered write fans out |days| × |tasks|
+      * small files (the 20× probe measured 5 120 files / 39 s;
+      * clustered: |days| files / ~8 s) — at 100 TB, unclustered
+      * dynamic-partition writes are the classic small-file factory. */
+    def write(df: DataFrame, to: String = dir): Unit =
+      df.repartition(col("day_us")).write.mode("overwrite").partitionBy("day_us").parquet(to)
+
+    /** Every data file of the table → (length, mtime), by one
+      * [[Tables.files]] walk. */
+    def files(): Map[String, (Long, Long)] =
+      Tables.files(s, dir).filter(_.getPath.getName.endsWith(".parquet"))
+        .map(f => f.getPath.toUri.getPath -> ((f.getLen, f.getModificationTime))).toMap
+
+    def dayPath(day: Long): Path = new Path(dir, s"day_us=$day")
+    def dayOf(file: String): Long =
+      new Path(file).getParent.getName.stripPrefix("day_us=").toLong
+
+    /** A manifest read: exactly `paths` (files or day dirs, sorted), with
+      * `day_us` kept as a column. */
+    def read(paths: Iterable[String]): DataFrame =
+      s.read.option("basePath", dir).parquet(paths.toSeq.sorted: _*)
+    def readDays(days: Iterable[Long]): DataFrame = read(days.map(dayPath(_).toString))
+
+    /** Writes `df` clustered to the staging dir `<root>/<name>_stage_<tag>`,
+      * runs `commit` on it, then deletes it. */
+    def staged[T](tag: String, df: DataFrame)(commit: Path => T): T = {
+      val stage = new Path(s"${dir}_stage_$tag")
+      write(df, stage.toString)
+      val out = commit(stage)
+      fs.delete(stage, true)
+      out
+    }
+
+    /** Stage `df`, then land each staged file in its day dir (made if
+      * new) as `<tag>-<file>`, next to the files already there: which
+      * of them a reader sees is up to the manifest it reads. Returns
+      * the landed files. */
+    def land(tag: String, df: DataFrame): Set[String] = staged(tag, df) { stage =>
+      Tables.files(s, stage.toString).filter(_.getPath.getName.endsWith(".parquet"))
+        .groupBy(_.getPath.getParent.getName).flatMap { case (day, parts) =>
+          val dst = new Path(dir, day)
+          fs.mkdirs(dst)
+          parts.map { f =>
+            val t = new Path(dst, s"$tag-${f.getPath.getName}")
+            require(fs.rename(f.getPath, t), s"cannot land ${f.getPath}")
+            t.toUri.getPath
+          }
+        }.toSet
+    }
+
+    /** Stage `df`, then swap each of `days` for its staged dir, one
+      * rename per partition; a day the stage lacks (every row of it
+      * deleted) vanishes. */
+    def replaceDays(days: Set[Long], df: DataFrame): Unit = staged("replace", df) { stage =>
+      days.foreach { day =>
+        val src = new Path(stage, s"day_us=$day")
+        fs.delete(dayPath(day), true)
+        if (fs.exists(src)) fs.rename(src, dayPath(day))
+      }
+    }
+  }
 
   /** la1: filtered pagination (S10+W3): WHERE level_no >= 40 ORDER BY
     * ts DESC LIMIT 200 OFFSET 100 — unique tie-break (event_id) keeps
@@ -276,47 +358,31 @@ object LogAnalytics {
     * metadata operation a table format would journal.)
     *
     * Driver-side work is bounded by construction: one 1-row max(ts)
-    * action for the cutoff, one directory listing of ≤ |days|
-    * partitions — the dd6-fixpoint class of justified driver actions,
+    * action for the cutoff, one file walk over ≤ |days| partitions
+    * — the dd6-fixpoint class of justified driver actions,
     * never row data. The read-back proves the drop: its rollup must
     * equal the oracle's kept-days filter over rows that never left
     * the engine. */
-  private def la9(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la9") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
-    // cluster by the partition key before the partitioned write: an
-    // unclustered write fans out |days| × |tasks| small files (the 20×
-    // probe measured 5 120 files / 39 s; clustered: |days| files /
-    // ~8 s) — at 100 TB, unclustered dynamic-partition writes are the
-    // classic small-file factory
+  private def la9(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la9") { root =>
+    val t = new DayTable(s, root)
     // r15: the retention cutoff's 1-row anchor rides the staging
     // write as an Observation instead of a second scan (guide §1.2)
     val obsMax = org.apache.spark.sql.Observation()
-    l.observe(obsMax, max(col("ts_us")).as("max_us"))
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
+    t.write(dayLogs(s, d).observe(obsMax, max(col("ts_us")).as("max_us")))
     val maxUs = obsMax.get("max_us").asInstanceOf[Long]
     val cutoffDay = ((maxUs - 7L * DayUs) / DayUs) * DayUs
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.listStatus(path).foreach { st =>
-      val name = st.getPath.getName
-      if (name.startsWith("day_us=") &&
-        name.stripPrefix("day_us=").toLong < cutoffDay)
-        fs.delete(st.getPath, true) // the partition DROP (VACUUM unit)
-    }
-    // materialize the ≤|days|-row rollup, then release the staged
-    // table — the dir is per-invocation and la9 runs repeatedly per
-    // bench/verify process (same discipline as la11's LogStore.drop)
-    val rolled = s.read.parquet(dir)
+    // the partition DROP (VACUUM unit)
+    t.files().keySet.map(t.dayOf).filter(_ < cutoffDay)
+      .foreach(day => t.fs.delete(t.dayPath(day), true))
+    // materialize the ≤|days|-row rollup before the bracket releases
+    // the staged table (la9 runs repeatedly per bench/verify process)
+    val rolled = s.read.parquet(t.dir)
       .groupBy(col("day_us"))
       .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("value_cents"))
     val out = rolled.collect()
-    fs.delete(path, true)
     s.createDataFrame(java.util.Arrays.asList(out: _*), rolled.schema)
-  }}
+  }
 
   private val la9Sql = logsSql +
     """SELECT day_us, count(*) AS n,
@@ -488,35 +554,22 @@ object LogAnalytics {
     * metadata, the dd6-fixpoint class of justified driver work —
     * never row data. Both staging dirs are per-invocation and deleted
     * after the rollup materializes (la9's tmpdir discipline). */
-  private def la12(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
+  private def la12(s: SparkSession, d: String): DataFrame =
     TmpDirs.withRoot(s, "la12") { root =>
-    val (raw, compacted) = (s"$root/raw", s"$root/compacted")
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+    val (raw, compacted) = (new DayTable(s, root, "raw"), new DayTable(s, root, "compacted"))
     // stage the pathology: unclustered write — every task holds rows
     // of every day, so each day dir collects one file per task
-    l.repartition(8, col("event_id"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(raw)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    def parquetFiles(dir: String): Long = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      var n = 0L
-      while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      n
-    }
-    val before = parquetFiles(raw)
+    dayLogs(s, d).repartition(8, col("event_id"))
+      .write.mode("overwrite").partitionBy("day_us").parquet(raw.dir)
+    val before = raw.files().size
     // the compactor: cluster by the partition key, one file per day
-    s.read.parquet(raw)
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(compacted)
-    val after = parquetFiles(compacted)
+    compacted.write(s.read.parquet(raw.dir))
+    val after = compacted.files().size
     require(after < before,
       s"compaction did not reduce file count ($before -> $after)")
     // losslessness proof from the compacted table only: exact counts,
     // cent sums, and an order-insensitive row-fingerprint sum
-    val rolled = s.read.parquet(compacted)
+    val rolled = s.read.parquet(compacted.dir)
       // 32-bit fp prefix: an order-insensitive BIGINT sum of 60-bit
       // values overflows int64 within ~8 rows under ANSI; 2^32-max
       // values keep the sum exact to ~2^31 rows
@@ -527,9 +580,8 @@ object LogAnalytics {
       .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("value_cents"),
         sum(col("row_fp")).as("fp_sum"))
     val out = rolled.collect()
-    fs.delete(new org.apache.hadoop.fs.Path(root), true)
     s.createDataFrame(java.util.Arrays.asList(out: _*), rolled.schema)
-  }}
+  }
 
   private val la12Sql = logsSql +
     """SELECT day_us, count(*) AS n,
@@ -568,63 +620,38 @@ object LogAnalytics {
     * never the table; the untouched-file audit is pure file metadata
     * (∝ |files|); the driver-side values are the 1-row target anchor
     * and the ≤|days| affected-day list. */
-  private def la13(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la13") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
-    l.repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
+  private def la13(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la13") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d)
+    t.write(l)
     val target = l.groupBy(col("logger_name"))
       .agg(countDistinct(col("day_us")).as("nd"))
       .orderBy(col("nd").asc, col("logger_name").asc)
       .limit(1).head().getString(0)
     val affected = l.filter(col("logger_name") === target)
       .select(col("day_us")).distinct().collect().map(_.getLong(0)).toSet
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def dataFiles(): Map[String, (Long, Long)] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath).map(f =>
-          f.getPath.toString -> (f.getLen, f.getModificationTime)))
-        .toMap
-    val before = dataFiles()
-    if (affected.nonEmpty) {
-      // ONE rewrite job over exactly the affected partitions (basePath
-      // keeps the day_us partition column), re-clustered to one file
-      // per day (la12's discipline), then an atomic-per-partition swap
-      // — cost ∝ affected data, never the table
-      val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage")
-      s.read.option("basePath", dir)
-        .parquet(affected.toSeq.sorted.map(day => s"$dir/day_us=$day"): _*)
-        .filter(col("logger_name") =!= target)
-        .repartition(col("day_us"))
-        .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
-      affected.foreach { day =>
-        val dayPath = new org.apache.hadoop.fs.Path(root, s"day_us=$day")
-        val staged = new org.apache.hadoop.fs.Path(stage, s"day_us=$day")
-        fs.delete(dayPath, true)
-        if (fs.exists(staged)) // a day whose every row was the target's vanishes
-          fs.rename(staged, dayPath)
-      }
-      fs.delete(stage, true)
-    }
+    val before = t.files()
+    // ONE rewrite job over exactly the affected partitions, re-clustered
+    // to one file per day (la12's discipline), then an
+    // atomic-per-partition swap — cost ∝ affected data, never the table
+    if (affected.nonEmpty)
+      t.replaceDays(affected, t.readDays(affected).filter(col("logger_name") =!= target))
     // the auditor's receipt: every file under an UNAFFECTED day dir is
     // byte-for-byte the one written before the delete
     val untouched = (m: Map[String, (Long, Long)]) => m.filterNot { case (p, _) =>
       affected.exists(day => p.contains(s"day_us=$day/")) }
-    require(untouched(before) == untouched(dataFiles()),
+    require(untouched(before) == untouched(t.files()),
       "la13 touched partitions outside the target's footprint")
-    val rolled = s.read.parquet(dir)
+    val rolled = s.read.parquet(t.dir)
       .groupBy(col("day_us"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("value_cents")).as("value_cents"),
         countDistinct(col("logger_name")).as("n_loggers"))
       .withColumn("rewritten", col("day_us").isin(affected.toSeq: _*))
     val out = rolled.collect()
-    fs.delete(root, true)
     s.createDataFrame(java.util.Arrays.asList(out: _*), rolled.schema)
-  }}
+  }
 
   private val la13Sql = logsSql +
     """, dd AS (
@@ -809,19 +836,16 @@ object LogAnalytics {
     * the rewrite is one job over the affected dirs with the batch
     * side broadcast. Read-back rollup (rows, cents, batch-row count,
     * rewritten flag per day) is the oracle-checked proof. */
-  private def la15(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la15") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+  private def la15(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la15") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d)
     // r15: the 1-row id/ts anchors ride the staging write as an
     // Observation (guide §1.2); the argmin target stays its own job
     // (grouped argmin is not an observe-able whole-frame aggregate)
     val obsAnchor = org.apache.spark.sql.Observation()
-    l.observe(obsAnchor, max(col("event_id")).as("max_id"),
-        max(col("ts_us")).as("max_ts"))
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
+    t.write(l.observe(obsAnchor, max(col("event_id")).as("max_id"),
+      max(col("ts_us")).as("max_ts")))
     val target = l.groupBy(col("logger_name"))
       .agg(countDistinct(col("day_us")).as("nd"))
       .orderBy(col("nd").asc, col("logger_name").asc)
@@ -830,14 +854,7 @@ object LogAnalytics {
       (obsAnchor.get("max_ts").asInstanceOf[Long] / DayUs + 1) * DayUs)
     val affectedUpd = l.filter(col("logger_name") === target)
       .select(col("day_us")).distinct().collect().map(_.getLong(0)).toSet
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def dataFiles(): Map[String, (Long, Long)] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath).map(f =>
-          f.getPath.toString -> (f.getLen, f.getModificationTime)))
-        .toMap
-    val before = dataFiles()
+    val before = t.files()
     // the INSERT half of the batch: one row per distinct level, ids
     // past the table's max, all landing in the new day partition
     val inserts = l.select(col("level")).distinct()
@@ -854,14 +871,12 @@ object LogAnalytics {
         lit("inserted").as("message"),
         lit(999L).as("value_cents"),
         lit(dayNew).as("day_us"))
-    val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage")
     // ONE rewrite job over exactly the affected partitions: matched
     // rows take the UPDATE branch, everything else passes through,
     // inserts append into their (new) partition
     val rewritten =
       (if (affectedUpd.nonEmpty)
-        s.read.option("basePath", dir)
-          .parquet(affectedUpd.toSeq.sorted.map(day => s"$dir/day_us=$day"): _*)
+        t.readDays(affectedUpd)
           .withColumn("value_cents",
             when(col("logger_name") === target, col("value_cents") + 10000)
               .otherwise(col("value_cents")))
@@ -870,22 +885,14 @@ object LogAnalytics {
               .otherwise(col("message")))
           .unionByName(inserts)
       else inserts)
-    rewritten.repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
     val affected = affectedUpd + dayNew
-    affected.foreach { day =>
-      val dayPath = new org.apache.hadoop.fs.Path(root, s"day_us=$day")
-      val staged = new org.apache.hadoop.fs.Path(stage, s"day_us=$day")
-      fs.delete(dayPath, true)
-      if (fs.exists(staged)) fs.rename(staged, dayPath)
-    }
-    fs.delete(stage, true)
+    t.replaceDays(affected, rewritten)
     // la13's auditor receipt: unaffected partitions byte-identical
     val untouched = (m: Map[String, (Long, Long)]) => m.filterNot { case (p, _) =>
       affected.exists(day => p.contains(s"day_us=$day/")) }
-    require(untouched(before) == untouched(dataFiles()),
+    require(untouched(before) == untouched(t.files()),
       "la15 touched partitions outside the batch's footprint")
-    val rolled = s.read.parquet(dir)
+    val rolled = s.read.parquet(t.dir)
       .groupBy(col("day_us"))
       .agg(count(lit(1)).as("n_rows"),
         sum(col("value_cents")).as("value_cents"),
@@ -893,9 +900,8 @@ object LogAnalytics {
           .otherwise(0L)).as("n_batch"))
       .withColumn("rewritten", col("day_us").isin(affected.toSeq: _*))
     val out = rolled.collect()
-    fs.delete(root, true)
     s.createDataFrame(java.util.Arrays.asList(out: _*), rolled.schema)
-  }}
+  }
 
   private val la15Sql = logsSql +
     """, dd AS (
@@ -960,30 +966,16 @@ object LogAnalytics {
     * manifest (no directory listing of dead files); the only
     * driver-side values are the file lists (∝ |files|) and the 1-row
     * max-day anchor. */
-  private def la16(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la16") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+  private def la16(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la16") { root =>
+    val t = new DayTable(s, root)
     // r15: the commit-target's 1-row day anchor rides the staging
     // write as an Observation instead of a second scan (guide §1.2)
     val obsDay = org.apache.spark.sql.Observation()
-    l.observe(obsDay, max(col("day_us")).as("max_day"))
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    // scheme-normalized paths (listStatus reports file:/..., a
-    // hand-built Path stringifies bare) so manifest set algebra and
-    // the re-list receipt compare like for like
-    def allFiles(): Set[String] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toUri.getPath)).toSet
-    val manifest0 = allFiles()
+    t.write(dayLogs(s, d).observe(obsDay, max(col("day_us")).as("max_day")))
+    val manifest0 = t.files().keySet
     def rollup(manifest: Set[String], version: Long) =
-      s.read.option("basePath", dir).parquet(manifest.toSeq.sorted: _*)
+      t.read(manifest)
         .groupBy(col("level"))
         .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
         .withColumn("version", lit(version))
@@ -992,21 +984,8 @@ object LogAnalytics {
     // COMMIT v1: rewrite the max day (cents doubled), old files retained
     val maxDay = obsDay.get("max_day").asInstanceOf[Long]
     val oldDayFiles = manifest0.filter(_.contains(s"day_us=$maxDay/"))
-    val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage")
-    s.read.option("basePath", dir)
-      .parquet(oldDayFiles.toSeq.sorted: _*)
-      .withColumn("value_cents", col("value_cents") * 2)
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
-    val dayPath = new org.apache.hadoop.fs.Path(root, s"day_us=$maxDay")
-    val stagedDay = new org.apache.hadoop.fs.Path(stage, s"day_us=$maxDay")
-    val newFiles = fs.listStatus(stagedDay)
-      .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-        val dst = new org.apache.hadoop.fs.Path(dayPath, s"v1-${f.getPath.getName}")
-        require(fs.rename(f.getPath, dst), s"cannot land ${f.getPath}")
-        dst.toUri.getPath
-      }.toSet
-    fs.delete(stage, true)
+    val newFiles = t.land("v1",
+      t.read(oldDayFiles).withColumn("value_cents", col("value_cents") * 2))
     val manifest1 = (manifest0 -- oldDayFiles) ++ newFiles
     // receipt (a): snapshot isolation — v0 re-read post-commit is
     // bit-identical to the pre-commit read
@@ -1019,16 +998,15 @@ object LogAnalytics {
     // every v1 file: history costs only the rewritten partitions. (A
     // set-algebra comparison of the in-memory manifests would be
     // tautological — both sides derive from the same construction.)
-    val postFiles = allFiles()
+    val postFiles = t.files().keySet
     require(manifest0.subsetOf(postFiles),
       s"v1 commit clobbered v0 files: ${(manifest0 -- postFiles).take(3)}")
     require(manifest1.subsetOf(postFiles),
       s"v1 manifest references missing files: ${(manifest1 -- postFiles).take(3)}")
     val out = v0After ++ rollup(manifest1, 1L).collect().sortBy(_.getString(1))
     val schema = rollup(manifest0, 0L).schema
-    fs.delete(root, true)
     s.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-  }}
+  }
 
   private val la16Sql = logsSql +
     """, dd AS (
@@ -1070,11 +1048,9 @@ object LogAnalytics {
     * thing that does NOT scale to 100 TB) runs once here as the
     * receipt, exactly the role it has at a real migration's commit
     * point. The rollup itself is one map-side-combined hash agg. */
-  private def la17(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
+  private def la17(s: SparkSession, d: String): DataFrame =
     TmpDirs.withRoot(s, "la17") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+    val l = dayLogs(s, d)
     val b = l.agg(min(col("day_us")), max(col("day_us"))).head()
     val pivot = (b.getLong(0) + b.getLong(1)) / 2
     l.filter(col("day_us") < pivot)
@@ -1104,11 +1080,8 @@ object LogAnalytics {
       .groupBy(col("region"), col("level"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
     val rows = out.collect()
-    val schema = out.schema
-    val root = new org.apache.hadoop.fs.Path(dir)
-    root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }}
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+  }
 
   private val la17Sql = logsSql +
     """, dd AS (
@@ -1148,51 +1121,28 @@ object LogAnalytics {
     * manifest set algebra (O(|files|) driver strings, la16's class);
     * output ∝ changed rows. The collect-before-cleanup is the
     * mutating-gate materialize discipline (la12-la17). */
-  private def la18(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la18") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
-      .select("event_id", "ts_us", "level", "value_cents", "day_us")
+  private def la18(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la18") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d).select("event_id", "ts_us", "level", "value_cents", "day_us")
     val obsDay18 = org.apache.spark.sql.Observation()
-    l.observe(obsDay18, max(col("day_us")).as("max_day"))
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def allFiles(): Set[String] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toUri.getPath)).toSet
-    val manifest0 = allFiles()
+    t.write(l.observe(obsDay18, max(col("day_us")).as("max_day")))
+    val manifest0 = t.files().keySet
     // COMMIT v1 (la16's backfill): rewrite the max day, cents doubled
     // (r15: anchor observed on the staging write, same as la16)
     val maxDay = obsDay18.get("max_day").asInstanceOf[Long]
     val retired = manifest0.filter(_.contains(s"day_us=$maxDay/"))
-    val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage")
-    s.read.option("basePath", dir).parquet(retired.toSeq.sorted: _*)
-      .withColumn("value_cents", col("value_cents") * 2)
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
-    val dayPath = new org.apache.hadoop.fs.Path(root, s"day_us=$maxDay")
-    val added = fs.listStatus(new org.apache.hadoop.fs.Path(stage, s"day_us=$maxDay"))
-      .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-        val dst = new org.apache.hadoop.fs.Path(dayPath, s"v1-${f.getPath.getName}")
-        require(fs.rename(f.getPath, dst), s"cannot land ${f.getPath}")
-        dst.toUri.getPath
-      }.toSet
-    fs.delete(stage, true)
+    val added = t.land("v1",
+      t.read(retired).withColumn("value_cents", col("value_cents") * 2))
     // THE FEED: scan only the manifest diff, tag each side
     def side(files: Set[String], tag: String) =
-      s.read.option("basePath", dir).parquet(files.toSeq.sorted: _*)
+      t.read(files)
         .select(lit(tag).as("change_type"), lit(1L).as("commit_version"),
           col("event_id"), col("ts_us"), col("level"), col("value_cents"))
     val cdf = side(retired, "update_preimage")
       .unionAll(side(added, "update_postimage"))
     // receipt (a): the feed's plan read exactly the diffed files
-    val scanned = cdf.inputFiles
-      .map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+    val scanned = cdf.inputFiles.map(f => new Path(f).toUri.getPath).toSet
     require(scanned == retired ++ added,
       s"CDF scanned outside the manifest diff: ${(scanned -- retired -- added).take(3)}" +
         s" missing: ${((retired ++ added) -- scanned).take(3)}")
@@ -1202,10 +1152,8 @@ object LogAnalytics {
     require(dayRows.toLong == l.filter(col("day_us") === maxDay).count() &&
       out.length == 2 * dayRows,
       s"CDF volume broken: $dayRows pre vs ${out.length - dayRows} post")
-    val schema = cdf.schema
-    fs.delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(out: _*), schema)
-  }}
+    s.createDataFrame(java.util.Arrays.asList(out: _*), cdf.schema)
+  }
 
   private val la18Sql = logsSql +
     """, dd AS (
@@ -1249,50 +1197,22 @@ object LogAnalytics {
     * attempt (the manifest discipline of la16/la18) — contention
     * cost is independent of table size, which is the entire point
     * of optimistic (not locked) table commits. */
-  private def la19(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la19") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+  private def la19(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la19") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d)
       .select("event_id", "ts_us", "level", "logger_name", "value_cents", "day_us")
-    l.repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def dayFiles(pred: String => Boolean): Set[String] =
-      fs.listStatus(root).filter(f => f.getPath.getName.startsWith("day_us=")
-          && pred(f.getPath.getName))
-        .flatMap(day => fs.listStatus(day.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toUri.getPath)).toSet
-    val manifest0 = dayFiles(_ => true)
+    t.write(l)
+    val manifest0 = t.files().keySet
     val b = l.agg(min(col("day_us")), max(col("day_us"))).head()
     val (minDay, maxDay) = (b.getLong(0), b.getLong(1))
     // each writer stages from manifest0 (the shared base snapshot)
-    def stageRewrite(name: String, days: Set[String],
-        f: DataFrame => DataFrame): (Set[String], Set[String]) = {
-      val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage_$name")
-      f(s.read.option("basePath", dir).parquet(days.toSeq.sorted: _*))
-        .repartition(col("day_us"))
-        .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
-      val landed = fs.listStatus(stage)
-        .filter(_.getPath.getName.startsWith("day_us=")).flatMap { dayDir =>
-          val dst = new org.apache.hadoop.fs.Path(root, dayDir.getPath.getName)
-          fs.listStatus(dayDir.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet")).map { fl =>
-              val t = new org.apache.hadoop.fs.Path(dst, s"$name-${fl.getPath.getName}")
-              require(fs.rename(fl.getPath, t), s"cannot land ${fl.getPath}")
-              t.toUri.getPath
-            }
-        }.toSet
-      fs.delete(stage, true)
-      (days, landed)
-    }
+    def stageRewrite(name: String, files: Set[String],
+        f: DataFrame => DataFrame): (Set[String], Set[String]) =
+      (files, t.land(name, f(t.read(files))))
     val maxFiles0 = manifest0.filter(_.contains(s"day_us=$maxDay/"))
     val minFiles0 = manifest0.filter(_.contains(s"day_us=$minDay/"))
-    val victim = s.read.option("basePath", dir)
-      .parquet(minFiles0.toSeq.sorted: _*)
-      .agg(min(col("logger_name"))).head().getString(0)
+    val victim = t.read(minFiles0).agg(min(col("logger_name"))).head().getString(0)
     val (retireA, addA) = stageRewrite("a", maxFiles0,
       _.withColumn("value_cents", col("value_cents") * 2))
     val (retireB, addB) = stageRewrite("b", minFiles0,
@@ -1306,7 +1226,7 @@ object LogAnalytics {
       val casOk = current == expected
       val valid = casOk || retire.subsetOf(current)
       if (valid) current = current -- retire ++ add
-      else add.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
+      else add.foreach(f => t.fs.delete(new Path(f), false))
       (casOk, valid)
     }
     val (casA, okA) = commit(manifest0, retireA, addA)
@@ -1317,8 +1237,7 @@ object LogAnalytics {
     val (casC, okC) = commit(manifest0, retireC, addC)
     require(!casC && !okC,
       "writer C must lose the CAS and fail validation (true conflict)")
-    val served = s.read.option("basePath", dir)
-      .parquet(current.toSeq.sorted: _*)
+    val served = t.read(current)
     // receipt: C's staged rows are absent from the served table — a
     // leak would serve the max day twice over (A's copy + C's copy)
     require(served.filter(col("day_us") === maxDay).count() ==
@@ -1328,10 +1247,8 @@ object LogAnalytics {
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
       .select(col("level"), col("n_rows"), col("value_cents"))
     val rows = out.collect()
-    val schema = out.schema
-    fs.delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }}
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+  }
 
   private val la19Sql = logsSql +
     """, dd AS (
@@ -1379,85 +1296,49 @@ object LogAnalytics {
     * delete per dead file (metadata ops, ∝ retired partitions — never
     * a data scan); the serving read plans from the manifest and is
     * untouched by expiry. */
-  private def la20(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la20") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
-    l.repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def allFiles(): Set[String] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toUri.getPath)).toSet
-    val manifest0 = allFiles()
+  private def la20(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la20") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d)
+    t.write(l)
+    val manifest0 = t.files().keySet
     val b = l.agg(min(col("day_us")), max(col("day_us"))).head()
     val (minDay, maxDay) = (b.getLong(0), b.getLong(1))
     // v1 commit: la16's backfill — rewrite the max day, cents doubled
     val oldDayFiles = manifest0.filter(_.contains(s"day_us=$maxDay/"))
-    val stage = new org.apache.hadoop.fs.Path(s"${dir}_stage")
-    s.read.option("basePath", dir)
-      .parquet(oldDayFiles.toSeq.sorted: _*)
-      .withColumn("value_cents", col("value_cents") * 2)
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(stage.toString)
-    val stagedDay = new org.apache.hadoop.fs.Path(stage, s"day_us=$maxDay")
-    val newFiles = fs.listStatus(stagedDay)
-      .filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-        val dst = new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(root, s"day_us=$maxDay"), s"v1-${f.getPath.getName}")
-        require(fs.rename(f.getPath, dst), s"cannot land ${f.getPath}")
-        dst.toUri.getPath
-      }.toSet
-    fs.delete(stage, true)
+    val newFiles = t.land("v1",
+      t.read(oldDayFiles).withColumn("value_cents", col("value_cents") * 2))
     val manifest1 = (manifest0 -- oldDayFiles) ++ newFiles
     // plant a crashed writer's orphans: data-file names, garbage bytes
     val planted = Seq(maxDay, minDay).map { day =>
-      val p = new org.apache.hadoop.fs.Path(root,
-        s"day_us=$day/orphan-${java.util.UUID.randomUUID()}.parquet")
-      val o = fs.create(p, true)
+      val p = new Path(t.dayPath(day), s"orphan-${java.util.UUID.randomUUID()}.parquet")
+      val o = t.fs.create(p, true)
       o.write("crashed writer leftovers".getBytes("UTF-8")); o.close()
       p.toUri.getPath
     }.toSet
     // EXPIRE v0: dead = listing − live, and it must equal exactly the
-    // provably-dead set before anything is deleted
-    val dead = allFiles() -- manifest1
+    // provably-dead set before anything is deleted; the listing's
+    // (size, mtime) stamps are the live files' pre-GC snapshot
+    val pre = t.files()
+    val dead = pre.keySet -- manifest1
     require(dead == (manifest0 -- manifest1) ++ planted,
       s"GC would delete outside the provably-dead set: ${(dead -- (manifest0 -- manifest1) -- planted).take(3)}")
-    val liveStat = manifest1.map { f =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(f))
-      f -> ((st.getLen, st.getModificationTime))
-    }.toMap
-    var reclaimed = 0L
-    dead.foreach { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      reclaimed += fs.getFileStatus(p).getLen
-      require(fs.delete(p, false), s"cannot GC $f")
-    }
+    dead.foreach(f => require(t.fs.delete(new Path(f), false), s"cannot GC $f"))
+    val reclaimed = dead.toSeq.map(pre(_)._1).sum
     require(reclaimed > 0, "expiry reclaimed nothing — the gate is vacuous")
     // receipts: exact post-GC listing, live bytes untouched, v0 gone
-    val post = allFiles()
-    require(post == manifest1,
-      s"post-GC listing != live manifest: extra=${(post -- manifest1).take(3)} missing=${(manifest1 -- post).take(3)}")
-    manifest1.foreach { f =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(f))
-      require((st.getLen, st.getModificationTime) == liveStat(f),
-        s"GC touched a live file: $f")
-    }
-    require(!manifest0.subsetOf(post), "expiry left v0 fully materialized")
-    val out = s.read.option("basePath", dir)
-      .parquet(manifest1.toSeq.sorted: _*)
+    val post = t.files()
+    require(post.keySet == manifest1,
+      s"post-GC listing != live manifest: extra=${(post.keySet -- manifest1).take(3)} missing=${(manifest1 -- post.keySet).take(3)}")
+    manifest1.foreach(f => require(post(f) == pre(f), s"GC touched a live file: $f"))
+    require(!manifest0.subsetOf(post.keySet), "expiry left v0 fully materialized")
+    val out = t.read(manifest1)
       .groupBy(col("level"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
       .select("level", "n_rows", "value_cents")
     val rows = out.collect()
-    val schema = out.schema
-    fs.delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }}
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+  }
 
   private val la20Sql = logsSql +
     """, dd AS (
@@ -1499,73 +1380,41 @@ object LogAnalytics {
     * plan from the manifest, so an unpublished batch costs them
     * nothing. Oracle: the published end state = base ∪ good batch,
     * restated from raw logs. */
-  private def la21(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * 3600 * 1000000
-    TmpDirs.withRoot(s, "la21") { dir =>
-    val l = logs(s, d)
-      .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+  private def la21(s: SparkSession, d: String): DataFrame =
+    TmpDirs.withRoot(s, "la21") { root =>
+    val t = new DayTable(s, root)
+    val l = dayLogs(s, d)
       .select("event_id", "ts_us", "level", "logger_name", "value_cents", "day_us")
     val obsDay21 = org.apache.spark.sql.Observation()
-    l.observe(obsDay21, max(col("day_us")).as("max_day"))
-      .repartition(col("day_us"))
-      .write.mode("overwrite").partitionBy("day_us").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def allFiles(): Set[String] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("day_us="))
-        .flatMap(day => fs.listStatus(day.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(_.getPath.toUri.getPath)).toSet
-    val manifest0 = allFiles()
+    t.write(l.observe(obsDay21, max(col("day_us")).as("max_day")))
+    val manifest0 = t.files().keySet
     // r15: anchor observed on the staging write, same as la16
     val maxDay = obsDay21.get("max_day").asInstanceOf[Long]
-    // stage a batch: files LAND inside the partition dirs (so a
+    // a staged batch's files LAND inside the partition dirs (so a
     // manifest-respecting reader must prove it ignores them) but are
     // not in any published manifest until the audit passes
-    def stage(name: String, df: DataFrame): Set[String] = {
-      val stg = new org.apache.hadoop.fs.Path(s"${dir}_stage_$name")
-      df.repartition(col("day_us"))
-        .write.mode("overwrite").partitionBy("day_us").parquet(stg.toString)
-      val landed = fs.listStatus(stg)
-        .filter(_.getPath.getName.startsWith("day_us=")).flatMap { dayDir =>
-          val dst = new org.apache.hadoop.fs.Path(root, dayDir.getPath.getName)
-          fs.mkdirs(dst)
-          fs.listStatus(dayDir.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet")).map { fl =>
-              val t = new org.apache.hadoop.fs.Path(dst, s"$name-${fl.getPath.getName}")
-              require(fs.rename(fl.getPath, t), s"cannot land ${fl.getPath}")
-              t.toUri.getPath
-            }
-        }.toSet
-      fs.delete(stg, true)
-      landed
-    }
     def shifted(days: Long, idOffset: Long): DataFrame =
       l.filter(col("day_us") === maxDay)
         .withColumn("event_id", col("event_id") + idOffset)
         .withColumn("ts_us", col("ts_us") + lit(days * DayUs))
         .withColumn("day_us", col("day_us") + lit(days * DayUs))
-    val dayRe = "day_us=(-?\\d+)/".r
-    def daysOf(files: Set[String]): Set[Long] =
-      files.flatMap(f => dayRe.findFirstMatchIn(f).map(_.group(1).toLong))
     // THE AUDIT — against the staged FILES, not the producing frame
     def audit(add: Set[String], published: Set[String]): Boolean = {
-      val staged = s.read.option("basePath", dir).parquet(add.toSeq.sorted: _*)
-      val bad = staged.agg(
+      val bad = t.read(add).agg(
         count(lit(1)).as("n"),
         sum(when(col("logger_name").isNull || col("level").isNull, 1L)
           .otherwise(0L)).as("nulls")).head()
       bad.getLong(0) > 0 && bad.getLong(1) == 0 &&
-        daysOf(add).intersect(daysOf(published)).isEmpty
+        add.map(t.dayOf).intersect(published.map(t.dayOf)).isEmpty
     }
     def rollup(manifest: Set[String]): Array[org.apache.spark.sql.Row] =
-      s.read.option("basePath", dir).parquet(manifest.toSeq.sorted: _*)
+      t.read(manifest)
         .groupBy(col("level"))
         .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
         .collect()
     var published = manifest0
     // (1) GOOD: next-day batch passes and publishes atomically
-    val addGood = stage("wapg", shifted(1L, 1000000000L))
+    val addGood = t.land("wapg", shifted(1L, 1000000000L))
     require(audit(addGood, published), "the good batch must pass the audit")
     published = published ++ addGood
     val servedGood = rollup(published).map(_.toSeq.toIndexedSeq).toSeq
@@ -1575,25 +1424,24 @@ object LogAnalytics {
       .withColumn("logger_name",
         when(col("event_id") % 10 === 0, lit(null).cast("string"))
           .otherwise(col("logger_name")))
-    val addBad = stage("wapb", poison)
+    val addBad = t.land("wapb", poison)
     require(!audit(addBad, published), "the poisoned batch must fail the audit")
-    addBad.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
+    addBad.foreach(f => t.fs.delete(new Path(f), false))
     // (3) COLLIDING: restates the just-published day — double-ingest guard
-    val addDup = stage("wapc", shifted(1L, 3000000000L))
+    val addDup = t.land("wapc", shifted(1L, 3000000000L))
     require(!audit(addDup, published), "the colliding batch must fail the audit")
-    addDup.foreach(f => fs.delete(new org.apache.hadoop.fs.Path(f), false))
+    addDup.foreach(f => t.fs.delete(new Path(f), false))
     // failed audits are INVISIBLE: the served rollup is byte-identical
     val servedAgain = rollup(published).map(_.toSeq.toIndexedSeq).toSeq
       .sortBy(_.mkString("|"))
     require(servedAgain == servedGood,
       "a failed audit changed what readers see")
-    val out = s.read.option("basePath", dir)
-      .parquet(published.toSeq.sorted: _*)
+    val out = t.read(published)
       .groupBy(col("level"))
       .agg(count(lit(1)).as("n_rows"), sum(col("value_cents")).as("value_cents"))
     val rows = out.collect()
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  }}
+  }
 
   private val la21Sql = logsSql +
     """, mx AS (
@@ -1648,14 +1496,11 @@ object LogAnalytics {
       // day-keyed repartition: one file per day dir (q24's discipline —
       // an unkeyed write emits |tasks| x |days| small files)
       evs.repartition(col("day")).write.partitionBy("day").parquet(tbl)
-      def listing(): Map[String, Set[(String, Long)]] = {
-        val dirs = Option(new java.io.File(tbl).listFiles()).toSeq.flatten
-          .filter(f => f.isDirectory && f.getName.startsWith("day="))
-        dirs.map(dir => dir.getName ->
-          Option(dir.listFiles()).toSeq.flatten
-            .filter(_.getName.endsWith(".parquet"))
-            .map(f => (f.getName, f.lastModified())).toSet).toMap
-      }
+      // day dir → its data files' (name, mtime)
+      def listing(): Map[String, Set[(String, Long)]] =
+        Tables.files(s, tbl).filter(_.getPath.getName.endsWith(".parquet"))
+          .groupBy(_.getPath.getParent.getName)
+          .map { case (day, fs) => day -> fs.map(f => (f.getPath.getName, f.getModificationTime)).toSet }
       val before = listing()
       def backfill(): Unit = evs.filter(col("day") % 7 === 0)
         .withColumn("value_cents", col("value_cents") * 2)

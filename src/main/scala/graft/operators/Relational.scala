@@ -905,22 +905,18 @@ object Relational {
     e.repartition(col("day")).write.partitionBy("day").parquet(dir)
     val b = e.agg(min(col("day")), max(col("day"))).head()
     val (minDay, maxDay) = (b.getInt(0), b.getInt(1))
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
     // poison every weekday dir: epoch day 0 is a Thursday, so
     // (day + 3) % 7 maps Monday→0 … Sunday→6; weekend = dow ≥ 5
-    var poisoned = 0
-    fs.listStatus(root).filter(_.getPath.getName.startsWith("day=")).foreach { dd =>
-      val day = dd.getPath.getName.stripPrefix("day=").toLong
-      if ((day + 3) % 7 < 5)
-        fs.listStatus(dd.getPath).filter(_.getPath.getName.endsWith(".parquet"))
-          .foreach { f =>
-            val o = fs.create(f.getPath, true)
-            o.write("not a parquet file".getBytes("UTF-8")); o.close()
-            poisoned += 1
-          }
+    val weekday = Tables.files(s, dir).filter { f =>
+      f.getPath.getName.endsWith(".parquet") &&
+        (f.getPath.getParent.getName.stripPrefix("day=").toLong + 3) % 7 < 5
     }
-    require(poisoned > 0, "no weekday files to poison — the proof is vacuous")
+    weekday.foreach { f =>
+      val o = fs.create(f.getPath, true)
+      o.write("not a parquet file".getBytes("UTF-8")); o.close()
+    }
+    require(weekday.nonEmpty, "no weekday files to poison — the proof is vacuous")
     val fact = s.read
       .schema("event_id BIGINT, event_type STRING, value_cents BIGINT, day INT")
       .parquet(dir)
@@ -935,9 +931,7 @@ object Relational {
     val plan = out.queryExecution.executedPlan.toString
     require(plan.toLowerCase.contains("dynamicpruning"),
       "fact scan carries no DynamicPruningExpression — DPP did not engage")
-    val schema = out.schema
-    fs.delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }}
 
   private val q24Sql =

@@ -1982,14 +1982,9 @@ object Similarity {
         .select("vec_id", "v", "n2", "clabel")
     withCell(base.filter(col("vec_id") % 10 =!= 7))
       .write.partitionBy("clabel").parquet(dir)
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     def files(): Map[String, (Long, Long)] =
-      fs.listStatus(root).filter(_.getPath.getName.startsWith("clabel="))
-        .flatMap(cd => fs.listStatus(cd.getPath)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-          .map(f => f.getPath.toUri.getPath ->
-            ((f.getLen, f.getModificationTime)))).toMap
+      Tables.files(s, dir).filter(_.getPath.getName.endsWith(".parquet"))
+        .map(f => f.getPath.toUri.getPath -> ((f.getLen, f.getModificationTime))).toMap
     val v0Stat = files()
     // (2) UPSERT: append-only delta under the same layout
     withCell(base.filter(col("vec_id") % 10 === 7))
@@ -2062,9 +2057,7 @@ object Similarity {
       "no upserted vector was ever served — the delta is not live")
     require(rows.forall(r => r.getAs[Long]("neighbor_id") % 100 != 3),
       "a tombstoned vector leaked into the served results")
-    val schema = out.schema
-    fs.delete(root, true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }}
 
   private val sim22Sql = "WITH " + vecsSql.dropRight(1) + ", " + centSql.dropRight(1) + ", " +

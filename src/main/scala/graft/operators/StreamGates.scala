@@ -44,18 +44,6 @@ object StreamGates {
 
   // -------------------------------------------------------- replay rig
 
-  private val cleanupRoots = new java.util.concurrent.ConcurrentLinkedQueue[File]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      val it = cleanupRoots.iterator()
-      while (it.hasNext) deleteRec(it.next())
-    }, "graft-streamgates-cleanup"))
-  }
-  private def deleteRec(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete(); ()
-  }
-
   /** Staged replay sources, ONE per (sfDir, slices) and shared by all
     * st* gates in the JVM — the four gates replay the identical event
     * log, so staging it once (Verify/Bench run them all) cuts the
@@ -75,8 +63,7 @@ object StreamGates {
   private def stageAny(key: String, slices: Int)(mk: => DataFrame): File =
     stagedSrc.computeIfAbsent(key, _ => {
       val ev = mk
-      val root = Scratch.dir("graft-st-src-")
-      cleanupRoots.add(root)
+      val root = TmpDirs.exitScopedDir("graft-st-src-")
       val src = new File(root, "src"); src.mkdirs()
       // 1-row time anchor (the tw6/la4 broadcast-anchor pattern) to cut
       // slice boundaries — the only driver-side data in the rig.
@@ -103,7 +90,7 @@ object StreamGates {
               s"cannot pin mod-time of $dst — replay order would be undefined")
           }
       }
-      deleteRec(staged)
+      TmpDirs.deleteRec(staged)
       src
     })
 
@@ -186,8 +173,7 @@ object StreamGates {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
     extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
-    val root = Scratch.dir(s"graft-$gate-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir(s"graft-$gate-")
     val stream = iso.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
     val out = new File(root, "out")
@@ -573,8 +559,7 @@ object StreamGates {
     val src = stageSlices(s, d, 4)
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = Scratch.dir("graft-ob5-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-ob5-")
     val stream = iso.readStream.schema(Tables.events(iso, d).schema)
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
       .observe("slice_metrics",
@@ -931,8 +916,7 @@ object StreamGates {
     val src = stageSlices(s, d, 4)
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = Scratch.dir("graft-st13-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st13-")
     val lastV = new java.util.concurrent.atomic.AtomicLong(-1L)
     val stream = iso.readStream.schema(Tables.events(iso, d).schema)
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
@@ -1150,8 +1134,7 @@ object StreamGates {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
     val t = graft.sources.LogSink.freshTable("st16")
-    val root = Scratch.dir("graft-st16-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st16-")
     val stream = iso.readStream.schema(Tables.events(s, d).schema)
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
     val shaped = stream.select(
@@ -1227,8 +1210,7 @@ object StreamGates {
   private def st17(s: SparkSession, d: String): DataFrame = {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = Scratch.dir("graft-st17-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st17-")
     val out = new File(root, "out")
     val chk = new File(root, "chk")
     val nIds = 1001L
@@ -1325,8 +1307,7 @@ object StreamGates {
   private def st18(s: SparkSession, d: String): DataFrame = {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = Scratch.dir("graft-st18-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st18-")
     val out = new File(root, "out")
     val chk = new File(root, "chk")
     def drain(maxId: Long): Unit = {
@@ -1431,8 +1412,7 @@ object StreamGates {
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
     extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
-    val root = Scratch.dir(s"graft-$gate-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir(s"graft-$gate-")
     val src = new File(root, "src"); src.mkdirs()
     val out = new File(root, "out")
     val chk = new File(root, "chk")
@@ -1679,8 +1659,7 @@ object StreamGates {
     // deployment reads the counter as (group × split) partials, which
     // is what the docstring teaches.
     iso.conf.set("spark.sql.files.maxPartitionBytes", "1073741824")
-    val root = Scratch.dir("graft-st23-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st23-")
     val stream = iso.readStream.schema(fed.schema)
       .option("maxFilesPerTrigger", "1").parquet(src.getPath)
     val out = new File(root, "out")
@@ -1789,8 +1768,7 @@ object StreamGates {
     val src = stageSlices(s, d, 4)
     val iso = s.newSession()
     iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = Scratch.dir("graft-st22-")
-    cleanupRoots.add(root)
+    val root = TmpDirs.exitScopedDir("graft-st22-")
     val dimDir = new File(root, "dim")
     val outDir = new File(root, "out")
     // v0: every bucket serves 'base'

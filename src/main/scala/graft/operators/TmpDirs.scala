@@ -2,16 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Scoped tmp-dir bracket for the MUTATING gates (file layout is the
-  * layer under test: compaction, partition DROP, MERGE, time travel,
-  * index maintenance...). Each gate stages under one unique root and
-  * follows the write → materialize(collect) → delete discipline; this
-  * helper moves the delete into a `finally` so a failed `require` or
-  * collect can never leave poisoned parquet accumulating under
-  * `java.io.tmpdir` across runs (round-9 advice). The success-path
-  * deletes inside the gates stay — the finally is the backstop
-  * (`FileSystem.delete` on a missing path is a no-op returning false).
-  */
 /** Gate-scratch placement: tmpfs (`/dev/shm`) when present and
   * writable, else `java.io.tmpdir`. The streaming/mutating gates stage
   * replay slices, checkpoints, sinks and table layouts as REAL files —
@@ -39,12 +29,18 @@ private[graft] object Scratch {
     new java.io.File(base).mkdirs()
     base
   }
-  /** `createTempDirectory` under the scratch root. */
-  def dir(prefix: String): java.io.File =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(root), prefix).toFile
 }
 
+/** Scratch dirs for the MUTATING gates (file layout is the layer under
+  * test: compaction, partition DROP, MERGE, time travel, index
+  * maintenance...) and the streaming replays, all under [[Scratch]],
+  * all reclaimed. [[withRoot]] brackets a gate: it stages everything,
+  * staging dirs included, under one unique root and follows the write
+  * → materialize(collect) → delete discipline with the delete in a
+  * `finally`, so a failed `require` or collect can never leave
+  * poisoned parquet accumulating across runs (round-9 advice). Dirs a
+  * returned frame still reads live until JVM exit, when one shutdown
+  * hook deletes them. */
 private[graft] object TmpDirs {
 
   /** Mint `Scratch.root/graft_<tag>_<uuid>`, run `body` with the
@@ -76,7 +72,7 @@ private[graft] object TmpDirs {
       while (it.hasNext) deleteRec(it.next())
     }, "graft-tmpdirs-cleanup"))
   }
-  private def deleteRec(f: java.io.File): Unit = {
+  private[operators] def deleteRec(f: java.io.File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRec))
     f.delete(); ()
   }
@@ -91,6 +87,16 @@ private[graft] object TmpDirs {
     val dir =
       s"${Scratch.root}/graft_${tag}_${java.util.UUID.randomUUID()}"
     exitRoots.add(new java.io.File(dir))
+    dir
+  }
+
+  /** `createTempDirectory(prefix)` under the scratch root, reclaimed at
+    * JVM exit: the streaming gates' replay sources, checkpoints and
+    * sinks, which their returned frames read after the gate returns. */
+  def exitScopedDir(prefix: String): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(Scratch.root), prefix).toFile
+    exitRoots.add(dir)
     dir
   }
 

@@ -54,29 +54,17 @@ object SummaryRegistry {
   def defs: Seq[SummaryDef] = current
 
   /** Order-independent fingerprint of a fact location's CURRENT data
-    * file listing (path, length, mtime — hidden/metadata files
+    * files ([[graft.Tables.files]]: path, length, mtime, hidden files
     * excluded, matching what a scan would read). O(|files|) metadata
     * traffic, the same cost class as the lakehouse gates' manifest
     * algebra — paid once at summary build and once per candidate
     * rewrite compile, never per row. */
-  def factFingerprint(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    var h = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        var e = 1125899906842597L
-        e = e * 31 + f.getPath.toString.hashCode
-        e = e * 31 + f.getLen
-        e = e * 31 + f.getModificationTime
-        h ^= e // XOR-fold: listing order never matters
-      }
+  def factFingerprint(spark: SparkSession, path: String): Long =
+    graft.Tables.files(spark, path).foldLeft(0L) { (h, f) =>
+      // XOR-fold: listing order never matters
+      h ^ (((1125899906842597L * 31 + f.getPath.toString.hashCode) * 31 +
+        f.getLen) * 31 + f.getModificationTime)
     }
-    h
-  }
 }
 
 /** Aggregate-navigation (materialized-view) rewrite: an `Aggregate`

@@ -610,6 +610,16 @@ class GateRegistrySpec extends AnyFunSuite {
       tableRead.findFirstIn(t).isDefined => f.getName } == Nil)
   }
 
+  test("Hadoop directory listings in src/main live only in Tables and LocalFs") {
+    // which files make up a table is decided by one walk (Tables.files);
+    // a private listing elsewhere duplicates that decision, and a
+    // listFiles walk forks `ls -ld` per file on the local filesystem
+    val listing = """\.(listStatus|listStatusIterator|listLocatedStatus|globStatus)\(|\.listFiles\([^()]*,""".r
+    val allowed = Set("Tables.scala", "LocalFs.scala")
+    assert(mainSources.collect { case (f, t) if !allowed(f.getName) &&
+      listing.findFirstIn(t).isDefined => f.getName }.sorted == Nil)
+  }
+
   test("entry is the flagship and returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
     assert(SparkEntry.queries.size == GateQueries.all.size)

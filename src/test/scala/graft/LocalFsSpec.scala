@@ -100,4 +100,15 @@ class LocalFsSpec extends AnyFunSuite {
     assert(!cmds.exists(c => c.contains("chmod") || c.contains("readlink")),
       s"${cmds.size} spawns, first: ${cmds.take(3)}")
   }
+
+  test("la12 and q15 at sf0.001 spawn no ls process") {
+    // Hadoop's listFiles returns LocatedFileStatus, whose owner and
+    // permission the local filesystem reads by forking `ls -ld` per file
+    val cmds = spawned {
+      gate("la12_compaction", sf0001).collect()
+      gate("q15_summary_rewrite", sf0001).collect()
+    }
+    val ls = cmds.filter(c => "^(\\S*/)?ls(\\s|$)".r.findFirstIn(c).isDefined)
+    assert(ls.size == 0, s"first: ${ls.take(3)}")
+  }
 }

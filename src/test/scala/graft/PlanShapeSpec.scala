@@ -607,6 +607,22 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(counts == pins)
   }
 
+  test("Spark jobs per execution of the lakehouse and file-listing gates (sf0.001)") {
+    // The gates that list, stage and land table files: the listing and
+    // staging steps are driver-side filesystem calls and start no job.
+    val pins = Seq("la9_retention_vacuum" -> 5, "la12_compaction" -> 8,
+      "la13_surgical_delete" -> 14, "la14_zorder_skipping" -> 19, "la15_merge_upsert" -> 15,
+      "la16_time_travel" -> 15, "la17_schema_evolution" -> 14, "la18_change_feed" -> 10,
+      "la19_optimistic_commit" -> 23, "la20_snapshot_expire" -> 10,
+      "la21_write_audit_publish" -> 26, "la22_dynamic_overwrite" -> 11,
+      "q24_dynamic_pruning" -> 7, "sim22_index_maintenance" -> 15, "q15_summary_rewrite" -> 6)
+    val counts = pins.map { case (g, _) =>
+      gate(g, sf0001).collect()
+      g -> jobsStarted(gate(g, sf0001).collect())._2
+    }
+    assert(counts == pins)
+  }
+
   test("Diag profile runs mm11's served plan; a bare count() plans its join away") {
     import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper

@@ -7,7 +7,9 @@ import TestSpark._
 
 /** `Tables`' schema memo: the schema it passes is exactly what
   * inference returns, a repeat read starts no Spark job, and a conf
-  * that changes the type mapping or a rewritten file is re-inferred. */
+  * that changes the type mapping or a rewritten file is re-inferred.
+  * `Tables.files` lists what a scan reads, and the lakehouse gates'
+  * day table stages inside its gate's scratch root. */
 class TablesSpec extends AnyFunSuite {
   private val names = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
@@ -46,5 +48,37 @@ class TablesSpec extends AnyFunSuite {
     val (schema, jobs) = jobsStarted(Tables.region(spark, d).schema)
     assert(jobs == 1)
     assert(schema.fieldNames.toSeq == Seq("r_regionkey", "r_name"))
+  }
+
+  test("Tables.files lists exactly the files a scan of the table reads") {
+    val d = java.nio.file.Files.createTempDirectory("graft_files").toString
+    spark.range(40).selectExpr("id", "id % 4 AS day", "id % 3 AS _k")
+      .repartition(2).write.partitionBy("day", "_k").parquet(s"$d/t")
+    val listed = Tables.files(spark, s"$d/t").map(_.getPath.toUri.getPath).toSet
+    assert(listed.size >= 12) // every (day, _k) partition, `_k=` dirs included
+    assert(listed == spark.read.parquet(s"$d/t").inputFiles
+      .map(new org.apache.hadoop.fs.Path(_).toUri.getPath).toSet)
+    assert(Tables.files(spark, s"$sf0001/region.parquet").map(_.getPath.getName) ==
+      Seq("region.parquet"))
+    intercept[java.io.FileNotFoundException](Tables.files(spark, s"$d/missing"))
+  }
+
+  test("a failure after a day-table stage write leaves nothing under the scratch root") {
+    import graft.operators.{LogAnalytics, Scratch, TmpDirs}
+    val tag = s"stageleak_${java.util.UUID.randomUUID().toString.take(8)}"
+    val df = spark.range(6).selectExpr("id", "id % 2 AS day_us")
+    val err = intercept[IllegalStateException] {
+      TmpDirs.withRoot(spark, tag) { root =>
+        val t = new LogAnalytics.DayTable(spark, root)
+        t.write(df)
+        t.staged("x", df) { stage =>
+          assert(t.fs.exists(stage))
+          throw new IllegalStateException("after staging")
+        }
+      }
+    }
+    assert(err.getMessage == "after staging")
+    val left = new java.io.File(Scratch.root).list().filter(_.startsWith(s"graft_$tag"))
+    assert(left.isEmpty, left.mkString(", "))
   }
 }

@@ -5,7 +5,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 
 Loads each <verifyOutDir>/<name> parquet (Spark result), runs the
 matching SQL from oracle_sql.json in DuckDB over the sfDir parquet
-tables, and compares: schema (sorted column names), row count,
+tables (a single file, or a directory of part files as `Diag replica`
+writes), and compares: schema (sorted column names), row count,
 per-column DTYPES (the driver's hash is dtype-sensitive — round 1's 13
 "failures" were DuckDB HUGEINT sums vs Spark int64 with equal values,
 invisible to a values-only compare), and exact values after sorting
@@ -79,8 +80,12 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        if not os.path.exists(p):
+            continue
+        # a table Spark wrote (a `Diag replica` fact table) is a
+        # directory of part files
+        src = f"{p}/**/*.parquet" if os.path.isdir(p) else p
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     failed_path = f"{out_dir}/failed.json"
     failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
