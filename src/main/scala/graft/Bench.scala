@@ -3,6 +3,8 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 import Verify.jsonString
 
 /** Benchmark main: runs every gate query at the given SF dir and prints
@@ -44,6 +46,35 @@ object Bench {
         java.nio.file.Paths.get("/proc/loadavg"))
       .split("\\s+").headOption.getOrElse("NA")
     catch { case scala.util.control.NonFatal(_) => "NA" }
+
+  /** Gates of `seq` (gate -> sequential seconds) over their limit in
+    * `band` (a parsed BENCH_BAND.json): seq > max(ceil × tol_rel,
+    * ceil + tol_abs), the rule of `tools/bench_band.py check` and of
+    * GateRegistrySpec's snapshot lint. Gates the band does not cover
+    * pass. Sorted by name. */
+  def bandBreaches(band: JValue, seq: Map[String, Double]): Seq[String] = {
+    implicit val fmts: Formats = DefaultFormats
+    val tolRel = (band \ "tol_rel").extract[Double]
+    val tolAbs = (band \ "tol_abs").extract[Double]
+    val ceils = (band \ "gates").extract[Map[String, JValue]]
+      .map { case (g, v) => g -> (v \ "ceil").extract[Double] }
+    seq.toSeq.sortBy(_._1).collect {
+      case (g, t) if ceils.get(g).exists(c => t > math.max(c * tolRel, c + tolAbs)) => g
+    }
+  }
+
+  /** The run's `band_note`: the breach count and the first gate names
+    * when any gate is over its band limit, else None. Such a run comes
+    * from a contended window or carries a regression; it is no
+    * evidence for per-gate times until a calm run confirms them. */
+  def bandNote(band: JValue, seq: Map[String, Double]): Option[String] = {
+    val over = bandBreaches(band, seq)
+    if (over.isEmpty) None
+    else Some(s"${over.size} gates over their per-gate band limit " +
+      "max(ceil x tol_rel, ceil + tol_abs): " + over.take(5).mkString(", ") +
+      (if (over.size > 5) ", ..." else "") +
+      " - contended window or regression; do not adjudicate per-gate times from this run")
+  }
 
   def main(args: Array[String]): Unit = {
     val loadBefore = loadavg()
@@ -95,41 +126,25 @@ object Bench {
     def qmap(rs: Seq[(String, Double, Option[String])]): String =
       rs.map { case (k, v, _) => jsonString(k) + ":" + r3(v) }.mkString("{", ",", "}")
     val seqTotal = seq.map(_._2).sum
-    // Contended-window self-labeling (r15 verdict: the r14 driver bench
-    // ran in a noisy-neighbor window and poisoned the next round's PERF
-    // comparison — flag it IN-ROUND). Compare this run's seq_total to
-    // the committed per-gate band (BENCH_BAND.json, built from 7 quiet
-    // runs): if the total lands >2x above the band's ceiling sum, the
-    // run is almost certainly contended, not a code regression. stderr
-    // + a detail-file field only — the stdout contract is unchanged.
+    // Self-label: a run with any gate outside the committed per-gate
+    // band is flagged IN the artifact (stderr + a detail-file field;
+    // the stdout contract is unchanged). A total-only rule missed the
+    // round-16 8-core run: 325.5 s seq against a 264.8 s ceiling sum
+    // went out unlabelled with 27 gates over their limits.
     val bandNote: Option[String] = try {
       val p = java.nio.file.Paths.get("BENCH_BAND.json")
-      if (!java.nio.file.Files.exists(p)) None else {
-        val txt = java.nio.file.Files.readString(p)
-        // ceil values of gates measured in THIS run (band may lag the
-        // registry; unknown gates just don't contribute)
-        val ceilRe = ("\"([a-z0-9_]+)\"\\s*:\\s*\\{\\s*\"ceil\"\\s*:" +
-          "\\s*([0-9.]+)").r
-        val ceils = ceilRe.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val known = seq.filter(r => ceils.contains(r._1))
-        if (known.isEmpty) None else {
-          val knownTotal = known.map(_._2).sum
-          val ceilSum = known.map(r => ceils(r._1)).sum
-          if (knownTotal > 2.0 * ceilSum) Some(
-            f"seq_total over band-covered gates $knownTotal%.1f s is >2x " +
-              f"the committed band ceiling sum $ceilSum%.1f s (load " +
-              f"$loadBefore->${loadavg()}) - this window looks CONTENDED; " +
-              "do not adjudicate per-gate regressions from this run")
-          else None
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      if (!java.nio.file.Files.exists(p)) None
+      else Bench.bandNote(JsonMethods.parse(java.nio.file.Files.readString(p)),
+        seq.map { case (n, t, _) => n -> t }.toMap)
+    } catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench-band] BENCH_BAND.json unreadable, run not labelled: $e")
+      None
+    }
     bandNote.foreach(n => System.err.println(s"[bench-band] $n"))
     // Full detail (every gate, both passes) → file; stdout stays small.
     val loadAfter = loadavg()
     val detail =
-      s"""{"metric":"total","value":${r3(wall)},"unit":"sec","queries":${qmap(results)},"queries_seq":${qmap(seq)},"seq_total":${r3(seqTotal)},"failed":${failed.map(jsonString).mkString("[", ",", "]")},"load_before":${jsonString(loadBefore)},"load_after":${jsonString(loadAfter)},"band_note":${bandNote.map(jsonString).getOrElse("null")},"sf":${jsonString(sfDir)}}"""
+      s"""{"metric":"total","value":${r3(wall)},"unit":"sec","queries":${qmap(results)},"queries_seq":${qmap(seq)},"seq_total":${r3(seqTotal)},"failed":${failed.map(jsonString).mkString("[", ",", "]")},"load_before":${jsonString(loadBefore)},"load_after":${jsonString(loadAfter)},"band_note":${bandNote.map(jsonString).getOrElse("null")},"sf":${jsonString(sfDir)},"cpus":${jsonString(GraftSession.cpus)},"nproc":${Runtime.getRuntime.availableProcessors}}"""
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_DETAIL.json"), detail + "\n")
     // Headline subset for the size-capped stdout line: one

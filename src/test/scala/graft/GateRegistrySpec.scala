@@ -300,8 +300,15 @@ class GateRegistrySpec extends AnyFunSuite {
       if t > limit
     } yield f"$g: $t%.3f s > limit $limit%.3f s (band [$floor%.3f, $ceil%.3f])"
     val slow = breaches(seq)
+    // the snapshot's own regime rides in the message: a breach from a
+    // different core count or a loaded host reads as such at once
+    val regime = Seq("sf", "cpus", "nproc", "load_before", "load_after", "band_note")
+      .map(k => k + "=" + (snap \ k match {
+        case JNothing => "absent"
+        case v => JsonMethods.compact(JsonMethods.render(v))
+      })).mkString(" ")
     assert(slow.isEmpty,
-      s"committed snapshot regresses beyond the per-gate band:\n${slow.mkString("\n")}")
+      s"committed snapshot regresses beyond the per-gate band ($regime):\n${slow.mkString("\n")}")
     // INFORMATIONAL worktree pass (warn, never fail): the committed-blob
     // rule above means a freshly regenerated, staged-but-uncommitted
     // snapshot pair would otherwise be linted only on the FOLLOWING
@@ -322,6 +329,31 @@ class GateRegistrySpec extends AnyFunSuite {
             s"(informational — possibly an uncontrolled driver window): $b"))
       }
     } catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  test("Bench labels a run with any gate over its band limit, whatever the total") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    implicit val fmts: Formats = DefaultFormats
+    val band = JsonMethods.parse(committedText("BENCH_BAND.json"))
+    val snap = (JsonMethods.parse(committedText("BENCH_DETAIL.json")) \ "queries_seq")
+      .extract[Map[String, Double]]
+    val (tolRel, tolAbs) = ((band \ "tol_rel").extract[Double], (band \ "tol_abs").extract[Double])
+    val ceils = (band \ "gates").extract[Map[String, JValue]]
+      .map { case (g, v) => g -> (v \ "ceil").extract[Double] }
+    def limit(g: String): Double = math.max(ceils(g) * tolRel, ceils(g) + tolAbs)
+    // the committed calm snapshot is inside the band: no label
+    assert(Bench.bandNote(band, snap).isEmpty)
+    // one gate just over its limit: labelled, and the label names it
+    val one = Bench.bandNote(band, snap.updated("sim3b_wideband_lsh", limit("sim3b_wideband_lsh") + 0.001))
+    assert(one.exists(n => n.startsWith("1 gates over") && n.contains("sim3b_wideband_lsh")), one)
+    // the round-16 shape: every gate at its ceiling and three far over,
+    // yet the total stays under 2x the ceiling sum (the old rule's line)
+    val hot = Seq("la11_dsv2_sink", "st5_stream_ttl_v2", "sim3b_wideband_lsh")
+    val r16 = ceils ++ hot.map(g => g -> 3 * limit(g))
+    assert(r16.values.sum < 2 * ceils.values.sum)
+    assert(Bench.bandBreaches(band, r16) == hot.sorted)
+    assert(Bench.bandNote(band, r16).exists(n => hot.forall(n.contains)))
   }
 
   test("PLANS.md plan-shape claims are machine-checked (law lint)") {

@@ -35,9 +35,11 @@ detectable on the committed artifacts alone.
          informationally and pass. SNAPSHOT may be a git object
          ("HEAD:BENCH_DETAIL.json") — the committed-blob mode the
          GateRegistrySpec artifact lint uses, immune to a
-         driver-overwritten worktree file. If the snapshot carries
-         loadavg telemetry (load_before/load_after), check surfaces
-         it so a contended window self-labels.
+         driver-overwritten worktree file. check prints the
+         snapshot's regime first (sf, cpus, nproc, load_before,
+         load_after, band_note; "absent" for a field an older Bench
+         did not write), so a breach from a contended window or
+         another core count labels itself.
 
 The same rule runs in GateRegistrySpec as an artifact lint over the
 COMMITTED BENCH_BAND.json + BENCH_DETAIL.json blobs (git show HEAD:).
@@ -49,6 +51,7 @@ import sys
 TOL_REL = 1.5   # >1.5x the observed per-gate ceiling = regression
 TOL_ABS = 0.3   # +300 ms absolute slack for planning-floor gates
 MAX_WIDTH_RATIO = 4.0  # warn when ceil > 4x floor (accumulated slack)
+REGIME_KEYS = ("sf", "cpus", "nproc", "load_before", "load_after", "band_note")
 
 
 def load_doc(src: str) -> dict:
@@ -151,11 +154,12 @@ def check(band_path: str, snap_path: str) -> int:
     band = load_doc(band_path)
     doc = load_doc(snap_path)
     snap = load(snap_path, doc)
-    # host-load telemetry: a contended window self-labels (the round-12
-    # forensics needed a judge; now the artifact carries the evidence)
-    la = doc.get("load_before"), doc.get("load_after")
-    if any(v is not None for v in la):
-        print(f"host loadavg: before={la[0]} after={la[1]}")
+    # the snapshot's regime (scale, cores, host load, Bench's own
+    # label): a breach from another core count or a loaded window
+    # reads as such next to the verdict
+    print("snapshot regime: " + " ".join(
+        f"{k}={json.dumps(doc[k]) if k in doc else 'absent'}"
+        for k in REGIME_KEYS))
     gates = band["gates"]
     slow, fresh, wide = [], [], []
     for g, t in sorted(snap.items()):
