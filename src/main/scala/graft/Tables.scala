@@ -4,8 +4,8 @@ import java.io.FileNotFoundException
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Readers for the driver-provided synthetic tables (TESTDATA.md).
   *
@@ -130,6 +130,14 @@ object Tables {
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast("timestamp"))
       case _ => raw
     }
+  }
+  /** events.value as exact cents, `(value AS DECIMAL(18,2)) × 100` cast
+    * to BIGINT: the money unit gates aggregate in (the oracles spell it
+    * `(CAST(value AS DECIMAL(18,2)) * 100)::BIGINT`). It runs on the
+    * scaled-long kernel ([[graft.plans.ScaledDecimalRewrite]]). */
+  def valueCents: Column = {
+    import org.apache.spark.sql.functions.col
+    (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

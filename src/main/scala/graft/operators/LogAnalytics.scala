@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Log-analytics surface (reference `sqlite_logger.py`, SURVEY §2.1
   * S9-S11, §2.3 F3-F8, §2.5 A7-A8, §2.6 W3-W4, §3.3) over the `events`
@@ -42,7 +42,7 @@ object LogAnalytics {
         .when(col("event_type") === "purchase", 20)
         .otherwise(10).as("level_no"),
       col("props").as("message"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("value_cents"))
+      Tables.valueCents.as("value_cents"))
 
   private val logsSql =
     """WITH logs AS (
@@ -1490,7 +1490,7 @@ object LogAnalytics {
       val tbl = s"$root/events_by_day"
       def evs = Tables.events(iso, d).select(
         col("event_id"), col("event_type"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+        Tables.valueCents
           .as("value_cents"),
         expr("unix_micros(ts) div 86400000000").as("day"))
       // day-keyed repartition: one file per day dir (q24's discipline —

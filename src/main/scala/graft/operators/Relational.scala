@@ -844,7 +844,7 @@ object Relational {
     val e = Tables.events(s, d).select(
       col("event_id"), col("user_id"),
       unix_micros(col("ts")).as("ts_us"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("value_cents"))
+      Tables.valueCents.as("value_cents"))
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts_us"))
     e.withColumn("trail_cents",
         sum(col("value_cents")).over(byUser.rangeBetween(-HourM1, 0)))
@@ -900,7 +900,7 @@ object Relational {
     TmpDirs.withRoot(s, "q24") { dir =>
     val e = Tables.events(s, d).select(
       col("event_id"), col("event_type"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("value_cents"),
+      Tables.valueCents.as("value_cents"),
       expr(s"CAST(unix_micros(ts) div ${DayUs}L AS INT)").as("day"))
     e.repartition(col("day")).write.partitionBy("day").parquet(dir)
     val b = e.agg(min(col("day")), max(col("day"))).head()
@@ -990,7 +990,7 @@ object Relational {
     val ev = Tables.events(iso, d).select(
       when(pmod(col("event_id"), lit(10)) =!= 0, lit(0L))
         .otherwise(col("user_id")).as("uid"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+      Tables.valueCents
         .as("value_cents"),
       concat(
         md5(col("event_id").cast("string")),
@@ -1375,7 +1375,7 @@ object Relational {
       val dim = Tables.customer(iso, d)
         .where(col("c_mktsegment") === "BUILDING")
       val fact = Tables.events(iso, d).select(col("user_id"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+        Tables.valueCents
           .as("value_cents"))
       val j = fact.join(dim, col("user_id") === col("c_custkey"))
         .agg(count(lit(1)).as("n_rows"),

@@ -5,8 +5,10 @@ import java.nio.file.Files
 
 import graft.{GateQuery, Tables}
 import graft.streaming.EventStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 /** Driver-oracled STRUCTURED STREAMING runs — the streaming runtime as
   * first-class correctness gates, not just spec fixtures.
@@ -44,23 +46,43 @@ object StreamGates {
 
   // -------------------------------------------------------- replay rig
 
+  /** A staged replay source: the slice files under `dir`, the staged
+    * frame's schema, and the anchor that cut the slices — slice `i`
+    * holds the rows with `(unix_micros(ts) − lo) / span == i`. */
+  private final case class Staged(dir: File, schema: StructType,
+      lo: Long, span: Long) {
+    /** The slice a micro-batch whose minimum event time is `minUs`
+      * replays: the same algebra that cut the slices, not a dense
+      * renumber, so an empty middle slice (no staged file, no batch)
+      * leaves the gap an oracle's slice algebra also leaves. */
+    def sliceOf(minUs: Long): Long = (minUs - lo) / span
+  }
+
   /** Staged replay sources, ONE per (sfDir, slices) and shared by all
-    * st* gates in the JVM — the four gates replay the identical event
-    * log, so staging it once (Verify/Bench run them all) cuts the
-    * suite's staging cost 4×. `computeIfAbsent` makes the first
-    * caller stage while concurrent gates wait. */
+    * st* gates and ob5 in the JVM — the slice-replaying gates replay
+    * the identical event log, so staging it once (Verify/Bench run them
+    * all) pays the staging write once per source instead of once per
+    * gate. `computeIfAbsent` makes the first caller stage while
+    * concurrent gates wait. */
   private val stagedSrc =
-    new java.util.concurrent.ConcurrentHashMap[String, File]()
+    new java.util.concurrent.ConcurrentHashMap[String, Staged]()
+
+  /** Pin slice `i`'s mod-time strictly increasing, so the file source's
+    * oldest-first listing replays the slices in event-time order. A
+    * silent pin failure (restrictive mounts) would surface later as an
+    * opaque oracle hash mismatch, so fail the staging loudly instead. */
+  private def pinSliceTime(f: File, i: Int): Unit =
+    require(f.setLastModified(1700000000000L + i * 60000L),
+      s"cannot pin mod-time of $f — replay order would be undefined")
 
   /** Stage a time-stamped DataFrame as `slices` disjoint time-range
-    * parquet files (mod-times pinned strictly increasing, so the file
-    * source's oldest-first listing replays them in event-time order).
-    * ONE partitioned write stages every slice — `partitionBy(slice)`
-    * with a slice-keyed repartition yields exactly one file per slice
-    * dir from a single scan (vs one filtered scan per slice). The
-    * frame must carry a timestamp column `ts`; `key` identifies the
-    * staged source for JVM-wide reuse across gates. */
-  private def stageAny(key: String, slices: Int)(mk: => DataFrame): File =
+    * parquet files (mod-times pinned strictly increasing). ONE
+    * partitioned write stages every slice — `partitionBy(slice)` with a
+    * slice-keyed repartition yields exactly one file per slice dir from
+    * a single scan (vs one filtered scan per slice). The frame must
+    * carry a timestamp column `ts`; `key` identifies the staged source
+    * for JVM-wide reuse across gates. */
+  private def stageAny(key: String, slices: Int)(mk: => DataFrame): Staged =
     stagedSrc.computeIfAbsent(key, _ => {
       val ev = mk
       val root = TmpDirs.exitScopedDir("graft-st-src-")
@@ -82,21 +104,66 @@ object StreamGates {
           .find(_.getName.endsWith(".parquet")).foreach { part =>
             val dst = new File(src, f"slice-$i%02d.parquet")
             Files.move(part.toPath, dst.toPath)
-            // strictly increasing mod-times → deterministic replay
-            // order; a silent pin failure (restrictive mounts) would
-            // surface later as an opaque oracle hash mismatch, so fail
-            // the staging loudly instead
-            require(dst.setLastModified(1700000000000L + i * 60000L),
-              s"cannot pin mod-time of $dst — replay order would be undefined")
+            pinSliceTime(dst, i)
           }
       }
       TmpDirs.deleteRec(staged)
-      src
+      Staged(src, ev.schema, lo, span)
     })
 
   /** The events-table staging every st1-st7 gate shares. */
-  private def stageSlices(s: SparkSession, d: String, slices: Int): File =
+  private def stageSlices(s: SparkSession, d: String, slices: Int): Staged =
     stageAny(s"$d|$slices", slices)(Tables.events(s, d))
+
+  /** The one place a streaming gate starts a query. A rig is an
+    * isolated session (`newSession` at `streamParts`, plus the gate's
+    * `extraConfs`) and a fresh root reclaimed at JVM exit, holding the
+    * sink dir `out`, the checkpoint `chk` and whatever else the gate
+    * stages there. A gate reads its source through the rig's session
+    * (`slices` for a staged replay) and drains it with `run`; a restart
+    * gate calls `run` again on the same checkpoint. */
+  private final class Rig(val iso: SparkSession, val root: File) {
+    val out = new File(root, "out")
+    val chk = new File(root, "chk")
+
+    /** The slice replay of `src`: one file per micro-batch
+      * (`maxFilesPerTrigger=1`), oldest mod-time first. */
+    def slices(src: Staged): DataFrame =
+      iso.readStream.schema(src.schema)
+        .option("maxFilesPerTrigger", "1").parquet(src.dir.getPath)
+
+    /** Set the checkpoint, start, drain every available input, stop;
+      * the stopped query keeps its `recentProgress`. */
+    def run(w: DataStreamWriter[Row]): StreamingQuery = {
+      val q = w.option("checkpointLocation", chk.getPath).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+
+    /** `run` into the append-mode parquet sink at `out`. */
+    def toParquet(df: DataFrame): StreamingQuery =
+      run(df.writeStream.format("parquet").option("path", out.getPath)
+        .outputMode("append"))
+  }
+
+  private def rig(s: SparkSession, gate: String,
+      extraConfs: Map[String, String] = Map.empty): Rig = {
+    val iso = s.newSession()
+    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
+    extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
+    new Rig(iso, TmpDirs.exitScopedDir(s"graft-$gate-"))
+  }
+
+  /** The batch files of a checkpoint or sink log dir (`offsets`,
+    * `commits`, `_spark_metadata`): each digit-named file's batch id and
+    * lines, in batch order. */
+  private def logBatches(dir: File): Seq[(Long, Seq[String])] =
+    dir.listFiles().toSeq.filter(_.getName.forall(_.isDigit))
+      .sortBy(_.getName.toLong)
+      .map { f =>
+        val src = scala.io.Source.fromFile(f)
+        try f.getName.toLong -> src.getLines().toVector finally src.close()
+      }
 
   /** Run `pipe` over the staged slice replay as a micro-batch stream
     * into a checkpointed parquet sink, and return the sink read-back.
@@ -148,8 +215,7 @@ object StreamGates {
   private[graft] def replayed(s: SparkSession, d: String, gate: String,
       slices: Int = 4, extraConfs: Map[String, String] = Map.empty)(
       pipe: DataFrame => DataFrame): DataFrame =
-    runReplay(s, stageSlices(s, d, slices), Tables.events(s, d).schema,
-      gate, extraConfs)(pipe)
+    runReplay(s, stageSlices(s, d, slices), gate, extraConfs)(pipe)
 
   /** `replayed` for an arbitrary time-stamped frame: stage `df` (cached
     * JVM-wide under `key`) as ordered slices and replay `pipe` over it —
@@ -163,29 +229,16 @@ object StreamGates {
       gate: String, slices: Int = 4,
       extraConfs: Map[String, String] = Map.empty)(
       pipe: DataFrame => DataFrame): DataFrame =
-    runReplay(s, stageAny(s"$key|$slices", slices)(df), df.schema, gate,
-      extraConfs)(pipe)
+    runReplay(s, stageAny(s"$key|$slices", slices)(df), gate, extraConfs)(pipe)
 
-  private def runReplay(s: SparkSession, src: File,
-      schema: org.apache.spark.sql.types.StructType, gate: String,
+  private def runReplay(s: SparkSession, src: Staged, gate: String,
       extraConfs: Map[String, String])(
       pipe: DataFrame => DataFrame): DataFrame = {
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
-    val root = TmpDirs.exitScopedDir(s"graft-$gate-")
-    val stream = iso.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-    val out = new File(root, "out")
-    val chk = new File(root, "chk")
-    val piped = pipe(stream)
-    val q = piped.writeStream.format("parquet")
-      .option("path", out.getPath)
-      .option("checkpointLocation", chk.getPath)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    val r = rig(s, gate, extraConfs)
+    val piped = pipe(r.slices(src))
+    r.toParquet(piped)
     // the sink's known schema: no schema-inference job on the read-back
-    s.read.schema(piped.schema).parquet(out.getPath)
+    s.read.schema(piped.schema).parquet(r.out.getPath)
   }
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
@@ -449,8 +502,7 @@ object StreamGates {
             "WHEN 1 THEN 'shorts' ELSE 'live' END").as("video_type"))
       val det = ev.filter(col("event_type") === "view")
         .select(col("user_id").as("video_id"), col("ts"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("views"))
+          Tables.valueCents.as("views"))
       EventStream.rssDetailJoin(rss, det)
     }.select(col("video_id"), unix_micros(col("detail_ts")).as("detail_ts_us"),
       col("views"), col("video_type"))
@@ -557,35 +609,22 @@ object StreamGates {
     * The ≤|slices| metric rows are the only driver-side data. */
   private def ob5(s: SparkSession, d: String): DataFrame = {
     val src = stageSlices(s, d, 4)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = TmpDirs.exitScopedDir("graft-ob5-")
-    val stream = iso.readStream.schema(Tables.events(iso, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
+    val r = rig(s, "ob5")
+    val q = r.run(r.slices(src)
       .observe("slice_metrics",
         count(lit(1)).as("n_events"),
-        sum((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-          .cast("long")).as("value_cents"),
+        sum(Tables.valueCents).as("value_cents"),
         min(unix_micros(col("ts"))).as("min_us"))
-    val q = stream.writeStream.format("noop")
-      .option("checkpointLocation", new File(root, "chk").getPath)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    // slice_id from each batch's min event time via the SAME bounds
-    // algebra that cut the slices — not a dense renumber, so an empty
-    // middle slice (no staged file, no batch) leaves the gap the
-    // oracle's algebra also leaves instead of shifting every later id
-    val bounds = Tables.events(s, d).agg(
-      min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi")).head()
-    val (lo, span) = (bounds.getLong(0), (bounds.getLong(1) - bounds.getLong(0)) / 4 + 1)
+      .writeStream.format("noop").outputMode("append"))
+    // slice_id from each batch's min event time via the staging's own
+    // anchor (`Staged.sliceOf`)
     val rows = q.recentProgress.toSeq
       .flatMap(p => Option(p.observedMetrics.get("slice_metrics"))
         .map(m => (m.getAs[Long]("n_events"),
           m.getAs[Long]("value_cents"), m.getAs[Any]("min_us"))))
       .collect { case (n, c, minUs: Long) if n > 0 =>
         // the post-data flush batch observes no rows (NULL min) → dropped
-        ((minUs - lo) / span, n, c)
+        (src.sliceOf(minUs), n, c)
       }
     import s.implicits._
     rows.toDF("slice_id", "n_events", "value_cents")
@@ -914,18 +953,13 @@ object StreamGates {
     * stated honestly. The sink table is never driver-resident. */
   private def st13(s: SparkSession, d: String): DataFrame = {
     val src = stageSlices(s, d, 4)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = TmpDirs.exitScopedDir("graft-st13-")
+    val r = rig(s, "st13")
     val lastV = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val stream = iso.readStream.schema(Tables.events(iso, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-    val q = stream.writeStream
+    r.run(r.slices(src).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val agg = batch.groupBy(col("user_id")).agg(
           count(lit(1)).as("n_events"),
-          sum((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long")).as("total_cents"),
+          sum(Tables.valueCents).as("total_cents"),
           max_by(col("event_type"),
             struct(col("ts"), col("event_id"))).as("last_type"),
           max(unix_micros(col("ts"))).as("last_ts_us"),
@@ -935,7 +969,7 @@ object StreamGates {
           if (batchId == 0) agg
           else {
             val prev = batch.sparkSession.read
-              .parquet(new File(root, s"v${batchId - 1}").getPath)
+              .parquet(new File(r.root, s"v${batchId - 1}").getPath)
             prev.as("p").join(agg.as("b"), Seq("user_id"), "full_outer")
               .select(col("user_id"),
                 (coalesce(col("p.n_events"), lit(0L)) +
@@ -952,14 +986,11 @@ object StreamGates {
                   .otherwise(col("b.ord")).as("ord"))
           }
         merged.write.mode("overwrite")
-          .parquet(new File(root, s"v$batchId").getPath)
+          .parquet(new File(r.root, s"v$batchId").getPath)
         lastV.updateAndGet(v => math.max(v, batchId))
         ()
-      }
-      .option("checkpointLocation", new File(root, "chk").getPath)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(new File(root, s"v${lastV.get}").getPath)
+      })
+    s.read.parquet(new File(r.root, s"v${lastV.get}").getPath)
       .select(col("user_id"), col("n_events"), col("total_cents"),
         col("last_type"), col("last_ts_us"))
   }
@@ -1131,23 +1162,14 @@ object StreamGates {
     * partitions (`streamParts`) like every st gate. */
   private def st16(s: SparkSession, d: String): DataFrame = {
     val src = stageSlices(s, d, 4)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
+    val r = rig(s, "st16")
     val t = graft.sources.LogSink.freshTable("st16")
-    val root = TmpDirs.exitScopedDir("graft-st16-")
-    val stream = iso.readStream.schema(Tables.events(s, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-    val shaped = stream.select(
+    r.run(r.slices(src).select(
       unix_micros(col("ts")).as("ts_us"),
       upper(col("event_type")).as("level"),
       concat(lit("u"), col("user_id")).as("logger_name"),
-      (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-        .cast("long").as("value_cents"))
-    val q = shaped.writeStream.format("graft.sources.LogSink")
-      .option("table", t)
-      .option("checkpointLocation", new File(root, "chk").getPath)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      Tables.valueCents.as("value_cents"))
+      .writeStream.format("graft.sources.LogSink").option("table", t))
     val dataEpochs = graft.sources.LogStore.batches(t)
       .count(_.files.exists(_.rows > 0))
     require(dataEpochs == 4,
@@ -1208,28 +1230,14 @@ object StreamGates {
     * construction (end offset is computed FROM the start offset), and
     * a checkpoint restart resumes at the committed position. */
   private def st17(s: SparkSession, d: String): DataFrame = {
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = TmpDirs.exitScopedDir("graft-st17-")
-    val out = new File(root, "out")
-    val chk = new File(root, "chk")
+    val r = rig(s, "st17")
     val nIds = 1001L
-    val stream = iso.readStream.format("graft.sources.YtApiSource")
+    r.toParquet(r.iso.readStream.format("graft.sources.YtApiSource")
       .option("maxId", nIds - 1).option("batchSize", 50)
-      .option("pollBatch", 300).load()
-    val q = stream.writeStream.format("parquet")
-      .option("path", out.getPath)
-      .option("checkpointLocation", chk.getPath)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+      .option("pollBatch", 300).load())
     // receipt 1: the offset ledger shows the budgeted ramp
-    val offsets = new File(chk, "offsets").listFiles()
-      .filter(f => f.getName.forall(_.isDigit))
-      .sortBy(_.getName.toLong)
-      .map { f =>
-        val lines = scala.io.Source.fromFile(f)
-        try lines.getLines().toSeq.last.trim.toLong finally lines.close()
-      }
+    val offsets = logBatches(new File(r.chk, "offsets"))
+      .map(_._2.last.trim.toLong)
     require(offsets.nonEmpty && offsets.last == nIds,
       s"stream did not drain the universe: ${offsets.mkString(",")}")
     val deltas = offsets.zip(0L +: offsets.init).map { case (e, b) => e - b }
@@ -1243,16 +1251,11 @@ object StreamGates {
     // are hostage to empty-partition file policy; the commit log IS
     // the committed set — the same ledger st18's exactly-once proof
     // reads)
-    val sinkFiles = new File(out, "_spark_metadata").listFiles()
-      .filter(f => f.getName.forall(_.isDigit))
-      .map { f =>
-        val src = scala.io.Source.fromFile(f)
-        try src.getLines().count(l => l.startsWith("{") && l.contains("\"path\""))
-        finally src.close()
-      }.sum
+    val sinkFiles = logBatches(new File(r.out, "_spark_metadata"))
+      .map(_._2.count(l => l.startsWith("{") && l.contains("\"path\""))).sum
     require(sinkFiles == 21,
       s"expected 21 committed chunk-partition files (6+6+6+3), got $sinkFiles")
-    val drained = s.read.parquet(out.getPath)
+    val drained = s.read.parquet(r.out.getPath)
     val rolled = drained.groupBy(col("country"))
       .agg(count(lit(1)).as("n_channels"),
         sum(col("subscriber_count")).as("subs"),
@@ -1305,29 +1308,13 @@ object StreamGates {
     * offset file; nothing is replanned over the already-ingested
     * prefix. */
   private def st18(s: SparkSession, d: String): DataFrame = {
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = TmpDirs.exitScopedDir("graft-st18-")
-    val out = new File(root, "out")
-    val chk = new File(root, "chk")
-    def drain(maxId: Long): Unit = {
-      val q = iso.readStream.format("graft.sources.YtApiSource")
+    val r = rig(s, "st18")
+    def drain(maxId: Long): Unit =
+      r.toParquet(r.iso.readStream.format("graft.sources.YtApiSource")
         .option("maxId", maxId).option("batchSize", 50)
-        .option("pollBatch", 300).load()
-        .writeStream.format("parquet")
-        .option("path", out.getPath)
-        .option("checkpointLocation", chk.getPath)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    def ledger(): Seq[(Long, Long)] = new File(chk, "offsets").listFiles()
-      .filter(f => f.getName.forall(_.isDigit))
-      .sortBy(_.getName.toLong)
-      .map { f =>
-        val src = scala.io.Source.fromFile(f)
-        try f.getName.toLong -> src.getLines().toSeq.last.trim.toLong
-        finally src.close()
-      }.toSeq
+        .option("pollBatch", 300).load())
+    def ledger(): Seq[(Long, Long)] = logBatches(new File(r.chk, "offsets"))
+      .map { case (b, lines) => b -> lines.last.trim.toLong }
     drain(599L) // run 1: the universe as first discovered
     val l1 = ledger()
     require(l1.map(_._2) == Seq(300L, 600L),
@@ -1336,7 +1323,7 @@ object StreamGates {
     val l2 = ledger().drop(l1.size)
     require(l2.map(_._1) == Seq(2L, 3L) && l2.map(_._2) == Seq(900L, 1001L),
       s"restart did not resume from the committed offset: ${l2.mkString(",")}")
-    val drained = s.read.parquet(out.getPath)
+    val drained = s.read.parquet(r.out.getPath)
     val rolled = drained.groupBy(col("country"))
       .agg(count(lit(1)).as("n_channels"),
         countDistinct(col("channel_id")).as("n_distinct"),
@@ -1409,46 +1396,31 @@ object StreamGates {
     // window-store partials still straddle the cut and the emission
     // still splits (rows1 a nonempty proper prefix, require'd below).
     val shared = stageSlices(s, d, 2)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    extraConfs.foreach { case (k, v) => iso.conf.set(k, v) }
-    val root = TmpDirs.exitScopedDir(s"graft-$gate-")
-    val src = new File(root, "src"); src.mkdirs()
-    val out = new File(root, "out")
-    val chk = new File(root, "chk")
-    val schema = Tables.events(s, d).schema
+    val r = rig(s, gate, extraConfs)
+    val src = new File(r.root, "src"); src.mkdirs()
     // land slice i in the gate-local source dir (the shared staging is
     // read-only to gates — st1-st15 replay it concurrently), keeping
     // the pinned strictly-increasing mod-times
     def land(i: Int): Unit = {
       val name = f"slice-$i%02d.parquet"
       val dst = new File(src, name)
-      Files.copy(new File(shared, name).toPath, dst.toPath)
-      require(dst.setLastModified(1700000000000L + i * 60000L),
-        s"cannot pin mod-time of $dst — replay order would be undefined")
+      Files.copy(new File(shared.dir, name).toPath, dst.toPath)
+      pinSliceTime(dst, i)
     }
     // one run = open the checkpoint, drain whatever is unprocessed,
     // stop; returns the last committed batch id as the resume receipt
     def run(): Long = {
-      val stream = iso.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-      val q = pipe(stream)
-        .writeStream.format("parquet")
-        .option("path", out.getPath)
-        .option("checkpointLocation", chk.getPath)
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      new File(chk, "commits").listFiles()
-        .filter(_.getName.forall(_.isDigit)).map(_.getName.toLong).max
+      r.toParquet(pipe(r.slices(shared.copy(dir = src))))
+      logBatches(new File(r.chk, "commits")).map(_._1).max
     }
     land(0)
     val last1 = run() // run 1 ends here: the query object is gone
-    val rows1 = s.read.parquet(out.getPath).count()
+    val rows1 = s.read.parquet(r.out.getPath).count()
     land(1)
     val last2 = run() // run 2: SAME checkpoint, the grown backlog
     require(last2 > last1,
       s"restart did not continue the batch numbering: $last1 -> $last2")
-    val sunk = s.read.parquet(out.getPath)
+    val sunk = s.read.parquet(r.out.getPath)
     val total = sunk.count()
     require(rows1 > 0 && rows1 < total,
       s"kill point did not split emission: run1=$rows1 of $total — " +
@@ -1464,7 +1436,7 @@ object StreamGates {
         def anyChangelog(f: File): Boolean =
           (f.isFile && f.getName.endsWith(".changelog")) ||
             Option(f.listFiles()).toSeq.flatten.exists(anyChangelog)
-        require(anyChangelog(new File(chk, "state")),
+        require(anyChangelog(new File(r.chk, "state")),
           "no .changelog files under the checkpoint's state dir — " +
             "the RocksDB changelog-checkpointing conf did not take")
         "; RocksDB .changelog files present under the checkpoint state dir"
@@ -1571,8 +1543,7 @@ object StreamGates {
     df.withWatermark("ev_ts", "10 minutes")
       .groupBy(window(col("ev_ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-          .cast("long")).as("value_cents"))
+        sum(Tables.valueCents).as("value_cents"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_cents"))
 
@@ -1648,8 +1619,6 @@ object StreamGates {
       .distinct().count()
     // shared with st21's replayedDf staging (key|slices shape)
     val src = stageAny(s"$d|late21|4", 4)(fed)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
     // PIN the one-split-per-slice-file read regime the closed form
     // depends on: partial combining is per INPUT PARTITION, so a slice
     // file large enough to split (maxSplitBytes) would count a group
@@ -1658,16 +1627,9 @@ object StreamGates {
     // headroom covers ~500× the 100× probe's slice size; past that a
     // deployment reads the counter as (group × split) partials, which
     // is what the docstring teaches.
-    iso.conf.set("spark.sql.files.maxPartitionBytes", "1073741824")
-    val root = TmpDirs.exitScopedDir("graft-st23-")
-    val stream = iso.readStream.schema(fed.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-    val out = new File(root, "out")
-    val q = lateAggPipe(stream).writeStream.format("parquet")
-      .option("path", out.getPath)
-      .option("checkpointLocation", new File(root, "chk").getPath)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
+    val r = rig(s, "st23",
+      Map("spark.sql.files.maxPartitionBytes" -> "1073741824"))
+    val q = r.toParquet(lateAggPipe(r.slices(src)))
     // per-batch drop ledger: batchId -> rows the watermark rejected
     // (recentProgress retains 100 entries; this replay runs ≤ 6
     // batches). Keyed dedupe guards against a progress re-report.
@@ -1687,7 +1649,7 @@ object StreamGates {
         s"metric's true unit, post-partial-agg (window x type) GROUPS " +
         s"($nLateGroups groups from $nLate late rows); drops confined " +
         s"to $nDropBatches batch(es)")
-    val nWindows = s.read.parquet(out.getPath).count()
+    val nWindows = s.read.parquet(r.out.getPath).count()
     s.range(1).select(
       lit(nLate).as("n_late_staged"),
       lit(nLateGroups).as("n_late_groups"),
@@ -1766,26 +1728,16 @@ object StreamGates {
     * appends ≤ |buckets|·|tiers| map-side-combined rows per batch. */
   private def st22(s: SparkSession, d: String): DataFrame = {
     val src = stageSlices(s, d, 4)
-    val iso = s.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", streamParts)
-    val root = TmpDirs.exitScopedDir("graft-st22-")
-    val dimDir = new File(root, "dim")
-    val outDir = new File(root, "out")
+    val r = rig(s, "st22")
+    val dimDir = new File(r.root, "dim")
     // v0: every bucket serves 'base'
-    iso.range(4).select(col("id").as("bucket"), lit("base").as("tier"),
+    r.iso.range(4).select(col("id").as("bucket"), lit("base").as("tier"),
       lit(0L).as("version")).write.parquet(dimDir.getPath)
-    val bounds = Tables.events(s, d).agg(
-      min(unix_micros(col("ts"))).as("lo"),
-      max(unix_micros(col("ts"))).as("hi")).head()
-    val (lo, span) =
-      (bounds.getLong(0), (bounds.getLong(1) - bounds.getLong(0)) / 4 + 1)
-    val stream = iso.readStream.schema(Tables.events(iso, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.getPath)
-    val q = stream.writeStream
+    r.run(r.slices(src).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val mn = batch.agg(min(unix_micros(col("ts")))).head()
         if (!mn.isNullAt(0)) {
-          val sliceId = (mn.getLong(0) - lo) / span
+          val sliceId = src.sliceOf(mn.getLong(0))
           val sp = batch.sparkSession
           val eff = sp.read.parquet(dimDir.getPath)
             .groupBy(col("bucket"))
@@ -1799,21 +1751,17 @@ object StreamGates {
             .join(broadcast(eff), "bucket")
             .groupBy(col("bucket"), col("tier"))
             .agg(count(lit(1)).as("n_events"),
-              sum((col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-                .cast("long")).as("value_cents"))
+              sum(Tables.valueCents).as("value_cents"))
             .write.mode("overwrite")
-            .parquet(new File(outDir, s"batch_id=$batchId").getPath)
+            .parquet(new File(r.out, s"batch_id=$batchId").getPath)
           // publish THIS slice's upgrade — visible from the next batch on
           sp.range(1).select(lit(sliceId).as("bucket"),
             lit(s"t$sliceId").as("tier"), lit(sliceId + 1).as("version"))
             .write.mode("append").parquet(dimDir.getPath)
         }
         ()
-      }
-      .option("checkpointLocation", new File(root, "chk").getPath)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(outDir.getPath)
+      })
+    s.read.parquet(r.out.getPath)
       .groupBy(col("bucket"), col("tier"))
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("value_cents")).as("value_cents"))
@@ -1871,9 +1819,7 @@ object StreamGates {
     * which the gate's deterministic output deliberately drops. */
   private[graft] def st24Emitted(s: SparkSession, d: String): DataFrame =
     replayed(s, d, "st24", slices = 2) { ev =>
-      ev.select(col("ts"), col("event_type"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-            .cast("long").as("value_cents"))
+      ev.select(col("ts"), col("event_type"), Tables.valueCents.as("value_cents"))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(expr("kll_sketch(value_cents, 64)").as("sk"),
@@ -1891,8 +1837,7 @@ object StreamGates {
       expr(s"(unix_micros(ts) div ${HourUs}L) * ${HourUs}L")
         .as("window_start_us"),
       col("event_type"),
-      (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)) * 100)
-        .cast("long").as("value_cents"),
+      Tables.valueCents.as("value_cents"),
       col("event_id"))
     // the answer/rank/exact/certificate arithmetic is the SHARED
     // [[KllAudit]] — one definition with la25 (the batch spelling)

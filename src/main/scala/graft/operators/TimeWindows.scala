@@ -4,7 +4,6 @@ import graft.{GateQuery, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Time-window semantics (SURVEY §2.8 T1-T3, §2.5 A10): the reference's
   * quota tumbling windows (`APIKeyStats.reset_if_needed`,
@@ -30,7 +29,7 @@ object TimeWindows {
     Tables.events(s, d).select(
       col("event_id"), col("user_id"), col("event_type"),
       unix_micros(col("ts")).as("ts_us"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("value_cents"))
+      Tables.valueCents.as("value_cents"))
 
   private[operators] val evsSql =
     """WITH evs AS (
@@ -48,7 +47,7 @@ object TimeWindows {
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum((col("value").cast(DecimalType(18, 2)) * 100).cast("long")).as("value_cents"),
+        sum(Tables.valueCents).as("value_cents"),
         countDistinct(col("user_id")).as("n_users"))
       .select(unix_micros(col("w.start")).as("window_start_us"),
         col("n_events"), col("value_cents"), col("n_users"))
@@ -1068,7 +1067,7 @@ object TimeWindows {
       .groupBy(date_trunc("MONTH", col("ts")).as("month_start"))
       .agg(
         count(lit(1)).as("n_events"),
-        sum((col("value").cast(DecimalType(18, 2)) * 100).cast("long"))
+        sum(Tables.valueCents)
           .as("value_cents"),
         countDistinct(to_date(col("ts"))).as("n_active_days"))
       .withColumn("days_in_month",

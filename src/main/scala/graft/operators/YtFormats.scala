@@ -653,7 +653,7 @@ object YtFormats {
   private def yf11(s: SparkSession, d: String): DataFrame = {
     val full = concat(
       lit("{\"id\": "), col("event_id"),
-      lit(", \"v\": "), (col("value").cast(DecimalType(18, 2)) * 100).cast("long"),
+      lit(", \"v\": "), Tables.valueCents,
       lit(", \"t\": \""), col("event_type"), lit("\"}"))
     val parseSchema = StructType.fromDDL(
       "id BIGINT, v BIGINT, t STRING, _bad STRING")

@@ -1,9 +1,9 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
-import org.apache.spark.sql.types.DecimalType
 import java.sql.Timestamp
 
 /** Structured Streaming surface (SURVEY §2.8): the reference's
@@ -33,7 +33,7 @@ object EventStream {
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"),
-        sum((col("value").cast(DecimalType(18, 2)) * 100).cast("long"))
+        sum(Tables.valueCents)
           .as("value_cents"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_cents"))
@@ -279,7 +279,7 @@ object EventStream {
       .withWatermark("ts", "10 minutes")
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
       .agg(count(lit(1)).as("n_events"),
-        sum((col("value").cast(DecimalType(18, 2)) * 100).cast("long"))
+        sum(Tables.valueCents)
           .as("value_cents"))
       .select(col("user_id"), col("w.start").as("sess_start"),
         col("w.end").as("sess_end"), col("n_events"), col("value_cents"))

@@ -34,15 +34,15 @@ class GateRegistrySpec extends AnyFunSuite {
     * the DRIVER regenerates BENCH_DETAIL.json in an uncontrolled host
     * window each round: round 12's only red test was this lint
     * tripping on a contended-window worktree artifact with zero code
-    * change. The band's job is to gate what the BUILDER commits. */
+    * change. The band's job is to gate what the BUILDER commits.
+    * `!!` returns only after the output is fully read (it throws on a
+    * nonzero exit); a `#>` copy into an OutputStream can return with
+    * the last buffered KiB still uncopied. */
   private def committedText(rel: String): String =
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val rc = scala.sys.process.Process(Seq("git", "show", s"HEAD:$rel"),
+    try scala.sys.process.Process(Seq("git", "show", s"HEAD:$rel"),
         new java.io.File(sys.props.getOrElse("user.dir", ".")))
-        .#>(out).!(scala.sys.process.ProcessLogger(_ => ()))
-      if (rc == 0) out.toString("UTF-8") else repoText(rel)
-    } catch { case scala.util.control.NonFatal(_) => repoText(rel) }
+      .!!(scala.sys.process.ProcessLogger(_ => ()))
+    catch { case scala.util.control.NonFatal(_) => repoText(rel) }
 
   /** One cached run per gate, shared by the schema and rows lints
     * below: building a gate's DataFrame executes its side effects for
@@ -650,6 +650,21 @@ class GateRegistrySpec extends AnyFunSuite {
     val allowed = Set("Tables.scala", "LocalFs.scala")
     assert(mainSources.collect { case (f, t) if !allowed(f.getName) &&
       listing.findFirstIn(t).isDefined => f.getName }.sorted == Nil)
+  }
+
+  test("only the StreamGates rig starts a stream") {
+    // one drain and one replay session: a gate that hand-rolls its own
+    // start/processAllAvailable/stop copy fails here (comments skipped)
+    def code(t: String): String = t.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      .mkString("\n")
+    def calls(call: String, t: String): Int =
+      s"\\.$call\\(\\)".r.findAllIn(code(t)).length
+    val drains = mainSources.collect { case (f, t) if calls("processAllAvailable", t) > 0 =>
+      f.getName -> calls("processAllAvailable", t) }
+    assert(drains == Seq("StreamGates.scala" -> 1))
+    val streams = mainSources.collect { case (f, t) if f.getName == "StreamGates.scala" => t }
+    assert(streams.map(calls("newSession", _)) == Seq(1))
   }
 
   test("entry is the flagship and returns rows") {

@@ -591,6 +591,13 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!wide.exists(_.isInstanceOf[graft.functions.ScaledSum]))
   }
 
+  /** Each gate's Spark jobs in one execution, after one untimed run. */
+  private def jobsPerExecution(gates: Seq[String]): Seq[(String, Int)] =
+    gates.map { g =>
+      gate(g, sf0001).collect()
+      g -> jobsStarted(gate(g, sf0001).collect())._2
+    }
+
   test("Spark jobs per execution of the seven benchmark gates (sf0.001)") {
     // Deterministic counts pin the fixed per-call cost: a table read
     // that falls back to schema inference adds a job, and fails here
@@ -600,11 +607,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val pins = Seq("ca1_window_metrics" -> 2, "yf6_duration_parse" -> 1,
       "q1_agg" -> 2, "tw18_asof_plan" -> 3, "sim6_ivf_search" -> 5,
       "la6_sink_roundtrip" -> 3, "st16_stream_dsv2_sink" -> 7)
-    val counts = pins.map { case (g, _) =>
-      gate(g, sf0001).collect()
-      g -> jobsStarted(gate(g, sf0001).collect())._2
-    }
-    assert(counts == pins)
+    assert(jobsPerExecution(pins.map(_._1)) == pins)
   }
 
   test("Spark jobs per execution of the lakehouse and file-listing gates (sf0.001)") {
@@ -616,11 +619,22 @@ class PlanShapeSpec extends AnyFunSuite {
       "la19_optimistic_commit" -> 23, "la20_snapshot_expire" -> 10,
       "la21_write_audit_publish" -> 26, "la22_dynamic_overwrite" -> 11,
       "q24_dynamic_pruning" -> 7, "sim22_index_maintenance" -> 15, "q15_summary_rewrite" -> 6)
-    val counts = pins.map { case (g, _) =>
-      gate(g, sf0001).collect()
-      g -> jobsStarted(gate(g, sf0001).collect())._2
-    }
-    assert(counts == pins)
+    assert(jobsPerExecution(pins.map(_._1)) == pins)
+  }
+
+  test("Spark jobs per execution of the streaming replay gates (sf0.001)") {
+    // Every gate here starts its query through StreamGates' one rig;
+    // st1 and st8 run it through `replayed` / `replayedDf`. ob5 and
+    // st22 read the slice anchor from the staging instead of re-running
+    // the min/max `head()` (its partial-aggregate shuffle-map job and
+    // its result job: 6 and 38 jobs before).
+    val pins = Seq("st1_stream_quota" -> 5, "st8_stream_docprep" -> 7,
+      "ob5_stream_observe" -> 4, "st13_stream_upsert" -> 16,
+      "st17_stream_dsv2_source" -> 7, "st18_stream_source_restart" -> 8,
+      "st19_stream_state_restart" -> 11, "st20_stream_rocksdb_restart" -> 11,
+      "st22_stream_dim_refresh" -> 36, "st23_stream_drop_ledger" -> 15,
+      "st25_stream_mg_restart" -> 16)
+    assert(jobsPerExecution(pins.map(_._1)) == pins)
   }
 
   test("Diag profile runs mm11's served plan; a bare count() plans its join away") {
