@@ -1,8 +1,4 @@
 package graft
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import Verify.jsonString
@@ -10,8 +6,8 @@ import Verify.jsonString
 /** Benchmark main: runs every gate query at the given SF dir and prints
   * ONE JSON line {"metric":"total","value":wall_sec,"queries":{...}}.
   *
-  * The suite executes CONCURRENTLY (default 8 query threads on
-  * local[cpus]) — the engine-throughput measurement a multi-tenant Spark
+  * The suite executes CONCURRENTLY (`GateQueries.Par` = 8 query threads
+  * on local[cpus]) — the engine-throughput measurement a multi-tenant Spark
   * cluster actually delivers. Per-query job scheduling / AQE planning
   * overhead (~0.4 s each, dwarfing the sub-second data work at bench
   * SFs) overlaps instead of summing: measured at sf0.1 the suite drops
@@ -23,6 +19,14 @@ import Verify.jsonString
   * `queries_seq` is a SEQUENTIAL warm pass: one query at a time, so
   * per-query numbers are attributable and comparable across rounds
   * (the concurrent spans are not).
+  *
+  * The timed action is `count()`, not the served plan `Diag profile`
+  * times (`Diag.served`): `count()` lets Catalyst prune columns and
+  * unique-key outer joins (mm11: 0 joins counted, 1 served), so a time
+  * here can understate what consuming a gate's output costs. It stays
+  * because every committed band and snapshot, and every earlier bench
+  * round, compares `count()` times; `Diag profile` and perfbench price
+  * the served plan.
   *
   * Failures are NOT swallowed: a crashing query lands in `failed` and
   * flips the exit code — a broken gate must turn the bench red, not
@@ -47,20 +51,26 @@ object Bench {
       .split("\\s+").headOption.getOrElse("NA")
     catch { case scala.util.control.NonFatal(_) => "NA" }
 
-  /** Gates of `seq` (gate -> sequential seconds) over their limit in
-    * `band` (a parsed BENCH_BAND.json): seq > max(ceil × tol_rel,
-    * ceil + tol_abs), the rule of `tools/bench_band.py check` and of
-    * GateRegistrySpec's snapshot lint. Gates the band does not cover
-    * pass. Sorted by name. */
-  def bandBreaches(band: JValue, seq: Map[String, Double]): Seq[String] = {
+  /** Each gate's limit in `band` (a parsed BENCH_BAND.json):
+    * max(ceil × tol_rel, ceil + tol_abs), the rule of
+    * `tools/bench_band.py check` and of GateRegistrySpec's snapshot
+    * lint. */
+  def bandLimits(band: JValue): Map[String, Double] = {
     implicit val fmts: Formats = DefaultFormats
     val tolRel = (band \ "tol_rel").extract[Double]
     val tolAbs = (band \ "tol_abs").extract[Double]
-    val ceils = (band \ "gates").extract[Map[String, JValue]]
-      .map { case (g, v) => g -> (v \ "ceil").extract[Double] }
-    seq.toSeq.sortBy(_._1).collect {
-      case (g, t) if ceils.get(g).exists(c => t > math.max(c * tolRel, c + tolAbs)) => g
+    (band \ "gates").extract[Map[String, JValue]].map { case (g, v) =>
+      val ceil = (v \ "ceil").extract[Double]
+      g -> math.max(ceil * tolRel, ceil + tolAbs)
     }
+  }
+
+  /** Gates of `seq` (gate -> sequential seconds) over their
+    * [[bandLimits]]. Gates the band does not cover pass. Sorted by
+    * name. */
+  def bandBreaches(band: JValue, seq: Map[String, Double]): Seq[String] = {
+    val limits = bandLimits(band)
+    seq.toSeq.sortBy(_._1).collect { case (g, t) if limits.get(g).exists(t > _) => g }
   }
 
   /** The run's `band_note`: the breach count and the first gate names
@@ -79,51 +89,32 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadBefore = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val qpar = sys.env.getOrElse("SPARK_GRAFT_QUERY_PAR", "8").toInt
     val spark = GraftSession.build(GraftSession.cpus)
-    val pool = Executors.newFixedThreadPool(qpar)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-
-    def time(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double, Option[String]) = {
-      val q0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-        }
-      (name, (System.nanoTime() - q0) / 1e9, err)
-    }
-
-    def runSuite(): Seq[(String, Double, Option[String])] = {
-      val futures = SparkEntry.queries.toSeq.map { case (name, fn) =>
-        Future(time(name, fn))
-      }
-      futures.map(Await.result(_, Duration.Inf))
-    }
+    val queries = SparkEntry.queries
+    def runSuite(par: Int) =
+      GateQueries.each(queries.keys.toSeq, par)(n => queries(n)(spark, sfDir).count())
     // Warm-up pass (untimed): JIT + whole-stage-codegen compilation of
     // all plans and the parquet file-index/footer caches. Without it
     // the measured pass races janino compilation on the same cores and
     // wall-clock varies 2×. Then best-of-2 measured passes — a single
     // pass can still catch a full-GC pause.
-    val warm = runSuite()
+    val warm = runSuite(GateQueries.Par)
     val passes = (1 to 2).map { _ =>
       System.gc()
       val t0 = System.nanoTime()
-      val results = runSuite()
+      val results = runSuite(GateQueries.Par)
       (results, (System.nanoTime() - t0) / 1e9)
     }
     val (results, wall) = passes.minBy(_._2)
     // Sequential warm pass: attributable per-query latencies.
-    val seq = SparkEntry.queries.toSeq.map { case (name, fn) => time(name, fn) }
-    pool.shutdown()
+    val seq = runSuite(1)
     // EVERY pass reports: a query that crashes only cold (warm-up) or
     // only in the non-selected measured pass must still turn the
     // bench red, not vanish behind the best-of-2 selection.
     val failed = (warm ++ passes.flatMap(_._1) ++ seq)
-      .collect { case (n, _, Some(e)) => s"$n: $e" }.distinct
+      .collect { case (n, _, Left(e)) => s"$n: $e" }.distinct
     def r3(v: Double): String = f"$v%.3f"
-    def qmap(rs: Seq[(String, Double, Option[String])]): String =
+    def qmap(rs: Seq[(String, Double, Either[String, Long])]): String =
       rs.map { case (k, v, _) => jsonString(k) + ":" + r3(v) }.mkString("{", ",", "}")
     val seqTotal = seq.map(_._2).sum
     // Self-label: a run with any gate outside the committed per-gate
@@ -164,7 +155,7 @@ object Bench {
     val qs = qmap(seq.filter(r => headSet.contains(r._1)))
     val failedJson = failed.take(5)
       .map(f => jsonString(f.take(80))).mkString("[", ",", "]")
-    println(s"""{"metric":"total","value":${r3(wall)},"unit":"sec","regime":"wall=concurrent(x$qpar),queries=sequential","queries":$qs,"seq_total":${r3(seqTotal)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"detail":"BENCH_DETAIL.json","sf":${jsonString(sfDir)}}""")
+    println(s"""{"metric":"total","value":${r3(wall)},"unit":"sec","regime":"wall=concurrent(x${GateQueries.Par}),queries=sequential","queries":$qs,"seq_total":${r3(seqTotal)},"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"detail":"BENCH_DETAIL.json","sf":${jsonString(sfDir)}}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

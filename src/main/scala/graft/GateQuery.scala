@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration.Inf
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver-gated query: a Spark pipeline over the sfDir tables plus
@@ -48,4 +53,26 @@ object GateQueries {
       operators.Dedup.queries ++
       operators.Similarity.queries ++
       operators.Multimodal.queries
+
+  /** Gates the mains run at once on one session (Bench's concurrent
+    * passes, Verify, Diag's plan writers): per-gate job scheduling and
+    * AQE planning overlap instead of summing. */
+  val Par = 8
+
+  /** The one gate loop of the mains: `f` over `names` on `par` threads,
+    * returning per name its seconds and its result or its error
+    * (`Class: message`), in input order. A failing call never stops the
+    * others. */
+  def each[A](names: Seq[String], par: Int)(f: String => A)
+      : Seq[(String, Double, Either[String, A])] = {
+    val pool = Executors.newFixedThreadPool(par)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try names.map(n => Future {
+      val t0 = System.nanoTime()
+      val r = try Right(f(n)) catch { case e: Throwable =>
+        Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}") }
+      (n, (System.nanoTime() - t0) / 1e9, r: Either[String, A])
+    }).map(Await.result(_, Inf))
+    finally pool.shutdown()
+  }
 }

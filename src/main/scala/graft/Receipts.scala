@@ -5,8 +5,9 @@ package graft
   * inside an isolated session (q25's skew split), restart ledgers
   * (st19/st20's batch-numbering continuity), file-layout deltas
   * (la22's untouched partitions). Those gates already `require` the
-  * behavior on every run; recording the proven fact here lets
-  * [[PlanDump]] embed it in the gate's PLANS.md section, where the
+  * behavior on every run; recording the proven fact here lets the plan
+  * writer ([[Diag.planText]], behind `Diag plan` and `Diag showcase`)
+  * print it above the gate's plan and in its PLANS.md section, where the
   * GateRegistrySpec law lint machine-checks the claim on the COMMITTED
   * text — the same discipline plan-shape claims get.
   *

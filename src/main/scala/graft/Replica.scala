@@ -55,7 +55,7 @@ object Replica {
       .withColumn("ts", timestamp_micros(unix_micros(col("ts")) + col("rep") * span)))
     val docs = strided(Tables.documents(spark, sfDir), "doc_id", reps)
     save(out, "documents", if (!grown) docs else docs.withColumn("text", concat_ws(" ",
-      transform(split(trim(col("text")), "\\s+"), t =>
+      transform(Tables.tokens(col("text")), t =>
         when(col("rep") > 0 &&
             pmod(xxhash64(concat(t, col("rep").cast("string"))), lit(10)) === 0,
           concat(t, lit("v"), col("rep"))).otherwise(t)))))

@@ -139,6 +139,13 @@ object Tables {
     import org.apache.spark.sql.functions.col
     (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
   }
+  /** A text column's whitespace tokens: the unit the text, dedup and
+    * corpus gates count in. */
+  def tokens(text: Column): Column =
+    org.apache.spark.sql.functions.split(org.apache.spark.sql.functions.trim(text), "\\s+")
+  /** The hour and day grains of `ts_us`-style microsecond timestamps. */
+  val HourUs: Long = 3600L * 1000000
+  val DayUs: Long = 24L * HourUs
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

@@ -1,7 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json for the DuckDB oracle compare (tools/check.py),
   * and failed.json (gate → error, `{}` when every gate dumped).
@@ -46,37 +45,21 @@ object Verify {
   def dump(spark: SparkSession, sfDir: String, outDir: String,
       gates: Seq[String]): Seq[(String, String)] = {
     new java.io.File(outDir).mkdirs()
-    // Dump queries CONCURRENTLY (each to its own directory): the
-    // registry is ~100 gates whose per-query cost at sf0.01 is mostly
-    // fixed planning overhead, so 8 query threads cut the driver's
-    // verify wall ~4× (same scheduler-sharing shape as Bench).
-    // Failures print per-gate, never abort the dump, and are named in
-    // <out>/failed.json (gate → error) and a one-line summary.
-    val failed = new java.util.concurrent.ConcurrentHashMap[String, String]()
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        sys.env.getOrElse("SPARK_GRAFT_VERIFY_PAR", "8").toInt)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val queries = SparkEntry.queries
-      val futures = gates.map { name =>
-        Future {
-          try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          catch { case e: Throwable =>
-            System.err.println(s"[verify] $name failed: ${e.getMessage}")
-            failed.put(name, s"${e.getClass.getName}: ${e.getMessage}")
-          }
-        }
-      }
-      futures.foreach(Await.result(_, Duration.Inf))
-      pool.shutdown()
-    }
+    // Dump CONCURRENTLY, each gate to its own directory: a gate's cost
+    // at sf0.01 is mostly fixed planning overhead, so the gate loop's
+    // threads cut the verify wall ~4×. A failing gate is named on
+    // stderr and in <out>/failed.json; it never aborts the dump.
+    val queries = SparkEntry.queries
+    val failures = GateQueries.each(gates, GateQueries.Par) { name =>
+      queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+    }.collect { case (name, _, Left(e)) =>
+      System.err.println(s"[verify] $name failed: $e")
+      name -> e
+    }.sortBy(_._1)
     val selected = gates.toSet
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       jsonObject(SparkEntry.oracleSql.toSeq.filter(kv => selected(kv._1))))
-    val failures = failed.asScala.toSeq.sortBy(_._1)
     Files.writeString(Paths.get(s"$outDir/failed.json"), jsonObject(failures))
     val n = gates.size
     System.err.println(s"[verify] ${n - failures.size}/$n gates dumped, ${failures.size} failed" +

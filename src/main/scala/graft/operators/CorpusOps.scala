@@ -119,7 +119,7 @@ object CorpusOps {
     val ord = Window.partitionBy(col("shard")).orderBy(col("rk"), col("doc_id"))
     Tables.documents(s, d)
       .select(col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+        size(Tables.tokens(col("text"))).as("n_tokens"),
         rnd("cp3").as("rk"))
       .withColumn("shard", pmod(conv(substring(col("rk"), 1, 15), 16, 10).cast("long"), lit(8)))
       .withColumn("pos", row_number().over(ord))
@@ -198,7 +198,7 @@ object CorpusOps {
       .orderBy(col("brank"), col("rk"), col("doc_id"))
     Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
-        size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+        size(Tables.tokens(col("text"))).as("n_tokens"),
         regexp_count(col("text"), lit("[^a-z0-9\\s]")).as("punct_cnt"),
         regexp_count(col("text"), lit("\\b(the|a)\\b")).as("stopword_cnt"),
         rnd("cp5").as("rk"))
@@ -318,7 +318,7 @@ object CorpusOps {
     * shuffles, so the op composes with cp3's packing at any scale. */
   private def cp9(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .withColumn("tk", split(trim(col("text")), "\\s+"))
+      .withColumn("tk", Tables.tokens(col("text")))
       .select(col("doc_id"),
         array_join(expr(
           "transform(tk, (x, i) -> CASE WHEN (i + doc_id) % 7 = 0 THEN '<X>' ELSE x END)"),
@@ -413,7 +413,7 @@ object CorpusOps {
     // shuffle, never sort-merge (same rule as dd2/sim12)
     val packed = labeled.filter(col("final_decision") === "kept")
       .join(Tables.documents(s, d).select(col("doc_id"),
-        size(split(trim(col("text")), "\\s+")).as("n_tokens"))
+        size(Tables.tokens(col("text"))).as("n_tokens"))
         .hint("shuffle_hash"), Seq("doc_id"))
       .withColumn("rkk", rnd("cp7"))
       .withColumn("shard",
@@ -480,7 +480,7 @@ object CorpusOps {
     val counts = Tables.documents(s, d)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"))
+        sum(size(Tables.tokens(col("text"))).cast("long")).as("n_tokens"))
       .withColumn("weight",
         expr("CAST(floor(sqrt(CAST(n_docs AS DOUBLE))) AS BIGINT)"))
     val tot = counts.agg(sum(col("weight")).as("w_sum"),
@@ -715,7 +715,7 @@ object CorpusOps {
   private def cp15(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(
       col("doc_id"), col("source"), col("lang"), col("n_chars"),
-      size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+      size(Tables.tokens(col("text"))).as("n_tokens"),
       regexp_count(col("text"), lit("[^a-z0-9\\s]")).as("punct_cnt"),
       regexp_count(col("text"), lit("\\b(the|a)\\b")).as("stopword_cnt"),
       TextAnalysis.contentFp(col("text")).as("fp"))
@@ -814,9 +814,9 @@ object CorpusOps {
   private def cp16(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d).select(
       col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+      size(Tables.tokens(col("text"))).as("n_tokens"),
       TextAnalysis.qualityBucket(
-        size(split(trim(col("text")), "\\s+")),
+        size(Tables.tokens(col("text"))),
         regexp_count(col("text"), lit("\\b(the|a)\\b")),
         regexp_count(col("text"), lit("[^a-z0-9\\s]"))).as("bucket"))
       .withColumn("prio",
@@ -1017,7 +1017,7 @@ object CorpusOps {
       Window.unboundedFollowing)
     Tables.documents(s, d)
       .groupBy(col("source"))
-      .agg(sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("avail"))
+      .agg(sum(size(Tables.tokens(col("text"))).cast("long")).as("avail"))
       .withColumn("pos", row_number().over(byAvail).cast("long"))
       .withColumn("prefix", sum(col("avail")).over(byAvail))
       .withColumn("n_src", count(lit(1)).over(whole))

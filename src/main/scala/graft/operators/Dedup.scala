@@ -64,7 +64,7 @@ object Dedup {
     * array_distinct keeps identical first-occurrence semantics. */
   private[graft] def shingleCols(docs: DataFrame): DataFrame =
     docs
-      .withColumn("a", split(trim(col("text")), "\\s+"))
+      .withColumn("a", Tables.tokens(col("text")))
       .withColumn("shingles", expr(
         "array_distinct(zip_with(slice(a, 1, size(a)-1), " +
           "slice(a, 2, size(a)-1), (x, y) -> concat(x, ' ', y)))"))
@@ -288,7 +288,7 @@ object Dedup {
     // join that follows. Bit-identical votes/sketches (same md5-prefix
     // hash, same strict `> 0` bit rule) — the oracle is unchanged.
     val sim = Tables.documents(s, d)
-      .withColumn("toks", split(trim(col("text")), "\\s+"))
+      .withColumn("toks", Tables.tokens(col("text")))
       .select(col("doc_id"), expr("simhash64(toks)").as("simhash"))
     val bands = sim.select(col("doc_id"), col("simhash"),
       posexplode(array((0 until 4).map(bd =>
@@ -696,7 +696,7 @@ object Dedup {
     * pass and the bloom prefilter. */
   private def chunkStream(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("t"))
       .select(col("doc_id"), explode(transform(
         sequence(lit(0), ceil(size(col("t")) / 16.0).cast("int") - 1),
         i => struct(i.as("ci"),
@@ -770,9 +770,9 @@ object Dedup {
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
     val quality = Tables.documents(s, d).select(
       col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+      size(Tables.tokens(col("text"))).as("n_tokens"),
       TextAnalysis.qualityBucket(
-        size(split(trim(col("text")), "\\s+")),
+        size(Tables.tokens(col("text"))),
         regexp_count(col("text"), lit("\\b(the|a)\\b")),
         regexp_count(col("text"), lit("[^a-z0-9\\s]"))).as("bucket"))
       .withColumn("prio",
@@ -1030,9 +1030,9 @@ object Dedup {
         .select(col("id2").as("vec_id"), col("id1").as("partner"), col("cosine")))
     val quality = Tables.documents(s, d).select(
       col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
+      size(Tables.tokens(col("text"))).cast("long").as("n_tokens"),
       TextAnalysis.qualityBucket(
-        size(split(trim(col("text")), "\\s+")),
+        size(Tables.tokens(col("text"))),
         regexp_count(col("text"), lit("\\b(the|a)\\b")),
         regexp_count(col("text"), lit("[^a-z0-9\\s]"))).as("bucket"))
       .withColumn("prio",
@@ -1463,7 +1463,7 @@ object Dedup {
   private def dd19(s: SparkSession, d: String): DataFrame = {
     val K = 8
     val positioned = Tables.documents(s, d)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("a"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("a"))
       .filter(size(col("a")) >= K)
       .select(col("doc_id"), posexplode(expr(
         s"md5h60_array(transform(sequence(1, size(a) - ${K - 1}), " +
@@ -1554,7 +1554,7 @@ object Dedup {
   private def dd20(s: SparkSession, d: String): DataFrame = {
     val K = 8
     val toks = Tables.documents(s, d)
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("a"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("a"))
     val positioned = toks.filter(size(col("a")) >= K)
       .select(col("doc_id"), posexplode(expr(
         s"md5h60_array(transform(sequence(1, size(a) - ${K - 1}), " +
@@ -1661,7 +1661,7 @@ object Dedup {
     * long per doc) → re-assembly fingerprint of the survivors. */
   private[graft] def exactSubstrRemove(docs: DataFrame, K: Int): DataFrame = {
     val toks = docs
-      .select(col("doc_id"), split(trim(col("text")), "\\s+").as("a"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("a"))
     val positioned = toks.filter(size(col("a")) >= K)
       .select(col("doc_id"), posexplode(expr(
         s"md5h60_array(transform(sequence(1, size(a) - ${K - 1}), " +

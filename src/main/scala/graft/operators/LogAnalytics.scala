@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GateQuery, Tables}
+import graft.Tables.DayUs
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -56,12 +57,10 @@ object LogAnalytics {
       |  FROM events)
       |""".stripMargin
 
-  private val DayUs = 24L * 3600 * 1000000
-
-  /** The log view with its UTC day (`day_us`, the µs at midnight): the
-    * partition key of the lakehouse gates' tables. */
-  private def dayLogs(s: SparkSession, d: String): DataFrame =
-    logs(s, d).withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
+  /** `ts_us`'s UTC day, the µs at midnight: the `day_us` partition key
+    * of the lakehouse gates' tables, on the log view in `dayLogs`. */
+  private def dayUs: Column = expr(s"(ts_us div ${DayUs}L) * ${DayUs}L")
+  private def dayLogs(s: SparkSession, d: String): DataFrame = logs(s, d).withColumn("day_us", dayUs)
 
   /** A `day_us`-partitioned parquet table at `<root>/<name>`: the table
     * la9 and la12-la21 drop, compact, delete, merge, time-travel,
@@ -215,7 +214,7 @@ object LogAnalytics {
     val l = logs(s, d)
     val anchor = l.agg(max(col("ts_us")).as("max_us"))
     l.crossJoin(broadcast(anchor))
-      .filter(col("ts_us") > col("max_us") - expr("24L * 3600 * 1000000"))
+      .filter(col("ts_us") > col("max_us") - DayUs)
       .groupBy(col("level")).agg(count(lit(1)).as("n_last_24h"))
   }
 
@@ -233,9 +232,8 @@ object LogAnalytics {
     val l = logs(s, d)
     val anchor = l.agg(max(col("ts_us")).as("max_us"))
     l.crossJoin(broadcast(anchor))
-      .withColumn("day_us",
-        expr("(ts_us div (24L * 3600 * 1000000)) * (24L * 3600 * 1000000)"))
-      .withColumn("kept", col("ts_us") >= col("max_us") - expr("7L * 24 * 3600 * 1000000"))
+      .withColumn("day_us", dayUs)
+      .withColumn("kept", col("ts_us") >= col("max_us") - 7 * DayUs)
       .groupBy(col("day_us"), col("kept"))
       .agg(count(lit(1)).as("n"))
   }
@@ -273,8 +271,7 @@ object LogAnalytics {
     val (level, data) = sunk.schema.partition(_.name == "level")
     s.read.schema(StructType(data ++ level)).parquet(dir)
       .filter(col("level") === "ERROR")
-      .withColumn("day_us",
-        expr("(ts_us div (24L * 3600 * 1000000)) * (24L * 3600 * 1000000)"))
+      .withColumn("day_us", dayUs)
       .groupBy(col("day_us"))
       .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("value_cents"))
   }
@@ -1684,8 +1681,7 @@ object LogAnalytics {
       .partitionBy("level").orc(dir)
     s.read.orc(dir)
       .filter(col("level") === "PURCHASE" && col("value_cents") >= 1000L)
-      .withColumn("day_us",
-        expr("(ts_us div (24L * 3600 * 1000000)) * (24L * 3600 * 1000000)"))
+      .withColumn("day_us", dayUs)
       .groupBy(col("day_us"))
       .agg(count(lit(1)).as("n"),
         sum(col("value_cents")).as("value_cents"),

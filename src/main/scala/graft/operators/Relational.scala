@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GateQuery, Tables}
+import graft.Tables.DayUs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -625,7 +626,6 @@ object Relational {
     * (map-side-combined), then unpivot is a NARROW 5-way Expand over
     * it — |days|×5 rows, no exchange after the rollup. */
   private def q18(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 86400000000L
     val types = Seq("click", "view", "purchase", "error", "signup")
     val agged = Tables.events(s, d)
       .withColumn("day_us", expr(s"(unix_micros(ts) div ${DayUs}L) * ${DayUs}L"))
@@ -896,7 +896,6 @@ object Relational {
     * so DPP is free (`reuseBroadcastOnly`, the default). Mutating-
     * gate discipline: write → poison → serve → materialize → delete. */
   private def q24(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 86400L * 1000000
     TmpDirs.withRoot(s, "q24") { dir =>
     val e = Tables.events(s, d).select(
       col("event_id"), col("event_type"),

@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.file.Files
 
 import graft.{GateQuery, Tables}
+import graft.Tables.{DayUs, HourUs}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -140,10 +141,16 @@ object StreamGates {
       q
     }
 
+    @volatile private var outSchema: StructType = _
     /** `run` into the append-mode parquet sink at `out`. */
-    def toParquet(df: DataFrame): StreamingQuery =
+    def toParquet(df: DataFrame): StreamingQuery = {
+      outSchema = df.schema
       run(df.writeStream.format("parquet").option("path", out.getPath)
         .outputMode("append"))
+    }
+
+    /** `out` read through `s` with the schema written: no inference job. */
+    def sunk(s: SparkSession): DataFrame = s.read.schema(outSchema).parquet(out.getPath)
   }
 
   private def rig(s: SparkSession, gate: String,
@@ -235,10 +242,8 @@ object StreamGates {
       extraConfs: Map[String, String])(
       pipe: DataFrame => DataFrame): DataFrame = {
     val r = rig(s, gate, extraConfs)
-    val piped = pipe(r.slices(src))
-    r.toParquet(piped)
-    // the sink's known schema: no schema-inference job on the read-back
-    s.read.schema(piped.schema).parquet(r.out.getPath)
+    r.toParquet(pipe(r.slices(src)))
+    r.sunk(s)
   }
 
   /** Shuffle-partition count inside the replayed micro-batches. State-
@@ -256,8 +261,6 @@ object StreamGates {
     * to executor memory, never to the session-wide shuffle width. */
   private val streamParts = "4"
 
-  private val HourUs = 3600L * 1000000
-  private val DayUs  = 24L * HourUs
   private val RateUs = 600L * 1000000 // tw12's interval constant
 
   // ---------------------------------------------------------------- st1
@@ -955,6 +958,8 @@ object StreamGates {
     val src = stageSlices(s, d, 4)
     val r = rig(s, "st13")
     val lastV = new java.util.concurrent.atomic.AtomicLong(-1L)
+    // versions are read back with their written schema: no inference job
+    val vSchema = new java.util.concurrent.atomic.AtomicReference[StructType]()
     r.run(r.slices(src).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val agg = batch.groupBy(col("user_id")).agg(
@@ -968,7 +973,7 @@ object StreamGates {
         val merged =
           if (batchId == 0) agg
           else {
-            val prev = batch.sparkSession.read
+            val prev = batch.sparkSession.read.schema(agg.schema)
               .parquet(new File(r.root, s"v${batchId - 1}").getPath)
             prev.as("p").join(agg.as("b"), Seq("user_id"), "full_outer")
               .select(col("user_id"),
@@ -987,10 +992,11 @@ object StreamGates {
           }
         merged.write.mode("overwrite")
           .parquet(new File(r.root, s"v$batchId").getPath)
+        vSchema.set(agg.schema)
         lastV.updateAndGet(v => math.max(v, batchId))
         ()
       })
-    s.read.parquet(new File(r.root, s"v${lastV.get}").getPath)
+    s.read.schema(vSchema.get).parquet(new File(r.root, s"v${lastV.get}").getPath)
       .select(col("user_id"), col("n_events"), col("total_cents"),
         col("last_type"), col("last_ts_us"))
   }
@@ -1255,7 +1261,7 @@ object StreamGates {
       .map(_._2.count(l => l.startsWith("{") && l.contains("\"path\""))).sum
     require(sinkFiles == 21,
       s"expected 21 committed chunk-partition files (6+6+6+3), got $sinkFiles")
-    val drained = s.read.parquet(r.out.getPath)
+    val drained = r.sunk(s)
     val rolled = drained.groupBy(col("country"))
       .agg(count(lit(1)).as("n_channels"),
         sum(col("subscriber_count")).as("subs"),
@@ -1323,7 +1329,7 @@ object StreamGates {
     val l2 = ledger().drop(l1.size)
     require(l2.map(_._1) == Seq(2L, 3L) && l2.map(_._2) == Seq(900L, 1001L),
       s"restart did not resume from the committed offset: ${l2.mkString(",")}")
-    val drained = s.read.parquet(r.out.getPath)
+    val drained = r.sunk(s)
     val rolled = drained.groupBy(col("country"))
       .agg(count(lit(1)).as("n_channels"),
         countDistinct(col("channel_id")).as("n_distinct"),
@@ -1415,12 +1421,12 @@ object StreamGates {
     }
     land(0)
     val last1 = run() // run 1 ends here: the query object is gone
-    val rows1 = s.read.parquet(r.out.getPath).count()
+    val rows1 = r.sunk(s).count()
     land(1)
     val last2 = run() // run 2: SAME checkpoint, the grown backlog
     require(last2 > last1,
       s"restart did not continue the batch numbering: $last1 -> $last2")
-    val sunk = s.read.parquet(r.out.getPath)
+    val sunk = r.sunk(s)
     val total = sunk.count()
     require(rows1 > 0 && rows1 < total,
       s"kill point did not split emission: run1=$rows1 of $total — " +
@@ -1649,7 +1655,7 @@ object StreamGates {
         s"metric's true unit, post-partial-agg (window x type) GROUPS " +
         s"($nLateGroups groups from $nLate late rows); drops confined " +
         s"to $nDropBatches batch(es)")
-    val nWindows = s.read.parquet(r.out.getPath).count()
+    val nWindows = r.sunk(s).count()
     s.range(1).select(
       lit(nLate).as("n_late_staged"),
       lit(nLateGroups).as("n_late_groups"),
@@ -1730,16 +1736,19 @@ object StreamGates {
     val src = stageSlices(s, d, 4)
     val r = rig(s, "st22")
     val dimDir = new File(r.root, "dim")
-    // v0: every bucket serves 'base'
-    r.iso.range(4).select(col("id").as("bucket"), lit("base").as("tier"),
-      lit(0L).as("version")).write.parquet(dimDir.getPath)
+    // v0: every bucket serves 'base'. Dim and rollups are read back
+    // with their written schema: no inference job
+    val dim0 = r.iso.range(4).select(col("id").as("bucket"), lit("base").as("tier"),
+      lit(0L).as("version"))
+    dim0.write.parquet(dimDir.getPath)
+    val outSchema = new java.util.concurrent.atomic.AtomicReference[StructType]()
     r.run(r.slices(src).writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val mn = batch.agg(min(unix_micros(col("ts")))).head()
         if (!mn.isNullAt(0)) {
           val sliceId = src.sliceOf(mn.getLong(0))
           val sp = batch.sparkSession
-          val eff = sp.read.parquet(dimDir.getPath)
+          val eff = sp.read.schema(dim0.schema).parquet(dimDir.getPath)
             .groupBy(col("bucket"))
             .agg(max_by(col("tier"), col("version")).as("tier"))
           // batchId-keyed partition dir + OVERWRITE: foreachBatch is
@@ -1747,12 +1756,13 @@ object StreamGates {
           // prior output, never append a second copy (st13's upsert
           // discipline applied to the rollup side; the dim publish
           // below was already retry-idempotent via max_by(version)).
-          batch.withColumn("bucket", pmod(col("user_id"), lit(4L)))
+          val rolled = batch.withColumn("bucket", pmod(col("user_id"), lit(4L)))
             .join(broadcast(eff), "bucket")
             .groupBy(col("bucket"), col("tier"))
             .agg(count(lit(1)).as("n_events"),
               sum(Tables.valueCents).as("value_cents"))
-            .write.mode("overwrite")
+          outSchema.set(rolled.schema)
+          rolled.write.mode("overwrite")
             .parquet(new File(r.out, s"batch_id=$batchId").getPath)
           // publish THIS slice's upgrade — visible from the next batch on
           sp.range(1).select(lit(sliceId).as("bucket"),
@@ -1761,7 +1771,7 @@ object StreamGates {
         }
         ()
       })
-    s.read.parquet(r.out.getPath)
+    s.read.schema(outSchema.get).parquet(r.out.getPath)
       .groupBy(col("bucket"), col("tier"))
       .agg(sum(col("n_events")).as("n_events"),
         sum(col("value_cents")).as("value_cents"))

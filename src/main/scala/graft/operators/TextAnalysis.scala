@@ -19,9 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
-  /** Portable token array: split on whitespace runs after trim. */
-  private def toks(c: Column): Column = split(trim(c), "\\s+")
-
   /** Whitespace-normalized exact-content fingerprint — THE dedup key,
     * shared by dd1 (Dedup), tx5 and tx7 so the normalization can never
     * drift between the gates that must agree on it. */
@@ -64,7 +61,7 @@ object TextAnalysis {
       col("doc_id"),
       col("n_chars"),
       length(col("text")).as("len_chars"),
-      size(toks(col("text"))).as("n_tokens"),
+      size(Tables.tokens(col("text"))).as("n_tokens"),
       regexp_count(col("text"), lit(BpePat)).as("n_bpe_tokens"),
       length(regexp_replace(col("text"), "\\s", "")).as("nonspace_chars"))
       .withColumn("avg_token_len",
@@ -87,7 +84,7 @@ object TextAnalysis {
   private def tx2(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d).select(
       col("doc_id"),
-      toks(col("text")).as("tk"),
+      Tables.tokens(col("text")).as("tk"),
       regexp_count(col("text"), lit("[^a-z0-9\\s]")).as("punct_cnt"),
       regexp_count(col("text"), lit("[0-9]")).as("digit_cnt"),
       regexp_count(col("text"), lit("\\b(the|a)\\b")).as("stopword_cnt"))
@@ -260,7 +257,7 @@ object TextAnalysis {
     * map-side combined. */
   private def tx6(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(split(trim(col("text")), "\\s+").as("toks")) // split ONCE per doc
+      .select(Tables.tokens(col("text")).as("toks")) // split ONCE per doc
       .select(explode(expr(
         "zip_with(slice(toks, 1, size(toks)-1), slice(toks, 2, size(toks)-1), " +
           "(x, y) -> concat(x, ' ', y))"))
@@ -297,7 +294,7 @@ object TextAnalysis {
     * (partitionBy(decision) at the sink). */
   private[operators] def tx7(s: SparkSession, d: String): DataFrame = {
     val base = withLangScores(Tables.documents(s, d).select(col("doc_id"), col("text")))
-      .withColumn("n_tokens", size(toks(col("text"))))
+      .withColumn("n_tokens", size(Tables.tokens(col("text"))))
       .withColumn("punct_cnt", regexp_count(col("text"), lit("[^a-z0-9\\s]")))
       .withColumn("stopword_cnt", regexp_count(col("text"), lit("\\b(the|a)\\b")))
       .withColumn("fp", contentFp(col("text")))
@@ -524,7 +521,7 @@ object TextAnalysis {
   private def tx9(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("lang"))
     val ranked = Tables.documents(s, d)
-      .select(col("lang"), col("doc_id"), size(toks(col("text"))).as("n_tokens"))
+      .select(col("lang"), col("doc_id"), size(Tables.tokens(col("text"))).as("n_tokens"))
       .withColumn("rk", row_number().over(w.orderBy(col("n_tokens"), col("doc_id"))))
       .withColumn("n", count(lit(1)).over(w))
     val quantiles = Seq(("p50", 1, 2), ("p90", 9, 10), ("p99", 99, 100))
@@ -569,7 +566,7 @@ object TextAnalysis {
     * exchange is the per-doc regroup. */
   private def tx10(s: SparkSession, d: String): DataFrame = {
     val tok = Tables.documents(s, d)
-      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+      .select(col("doc_id"), explode(Tables.tokens(col("text"))).as("w"))
     val vocab = tok.groupBy(col("w")).agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("w").asc)
       .limit(20)
@@ -617,7 +614,7 @@ object TextAnalysis {
     * n-2)` descending-range trap, same guard family as mm2). */
   private def tx11(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("t"))
     val flat = base
       .select(col("doc_id"), explode(when(size(col("t")) >= 2,
         transform(sequence(lit(0), size(col("t")) - 2),
@@ -693,7 +690,7 @@ object TextAnalysis {
     * discipline, enforced by GateRegistrySpec's schema lint). */
   private def tx13(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(Tables.tokens(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
       .withColumn("rk", row_number().over(
@@ -739,7 +736,7 @@ object TextAnalysis {
   private def tx14(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val tf = docs
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+      .select(col("doc_id"), explode(Tables.tokens(col("text"))).as("term"))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
@@ -868,7 +865,7 @@ object TextAnalysis {
     * trap). */
   private def tx16(s: SparkSession, d: String): DataFrame = {
     val base = Tables.documents(s, d)
-      .select(col("doc_id"), toks(col("text")).as("t"))
+      .select(col("doc_id"), Tables.tokens(col("text")).as("t"))
     val tokStat = base.select(col("doc_id"), explode(col("t")).as("w"))
       .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
@@ -965,7 +962,7 @@ object TextAnalysis {
   private def tx17(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("source"),
-        size(split(trim(col("text")), "\\s+")).as("n_tokens"),
+        size(Tables.tokens(col("text"))).as("n_tokens"),
         regexp_count(col("text"), lit("[^a-z0-9\\s]")).as("punct_cnt"),
         regexp_count(col("text"), lit("\\b(the|a)\\b")).as("stopword_cnt"))
       .withColumn("bucket", qualityBucket(
@@ -1036,7 +1033,7 @@ object TextAnalysis {
       .withColumn("half", pmod(
         conv(substring(md5(concat(lit("drift|"), col("doc_id").cast("string"))),
           1, 15), 16, 10).cast("long"), lit(2)))
-      .select(col("half"), explode(toks(col("text"))).as("token"))
+      .select(col("half"), explode(Tables.tokens(col("text"))).as("token"))
     val counts = halves.groupBy(col("token"))
       .agg(sum(when(col("half") === 0, 1L).otherwise(0L)).as("na"),
         sum(when(col("half") === 1, 1L).otherwise(0L)).as("nb"))
@@ -1133,7 +1130,7 @@ object TextAnalysis {
     val hostIdx = hosts.select(col("source").as("dst"),
       (row_number().over(Window.orderBy(col("source"))) - 1).cast("long").as("didx"))
     val mentions = docs
-      .select(col("source").as("src"), explode(toks(col("text"))).as("tok"))
+      .select(col("source").as("src"), explode(Tables.tokens(col("text"))).as("tok"))
       .select(col("src"),
         expr(s"CAST(conv(substring(md5(concat('link|', tok)), 1, 15), 16, 10) AS BIGINT) % ${n}L")
           .as("didx"))
@@ -1245,7 +1242,7 @@ object TextAnalysis {
   private def tx21(s: SparkSession, d: String): DataFrame = {
     val (dRows, w) = (4, 256)
     val toksrc = Tables.documents(s, d)
-      .select(col("source"), explode(toks(col("text"))).as("tok"))
+      .select(col("source"), explode(Tables.tokens(col("text"))).as("tok"))
     def bucket(j: Int, c: Column): Column =
       pmod(conv(substring(md5(concat(lit(s"cm$j|"), c)), 1, 15), 16, 10)
         .cast("long"), lit(w))
@@ -1342,7 +1339,7 @@ object TextAnalysis {
       .mkString("CAST(CASE vz ", " ", " ELSE 0 END AS BIGINT)")
     val docs = Tables.documents(s, d)
     val grams = docs
-      .withColumn("a", toks(col("text")))
+      .withColumn("a", Tables.tokens(col("text")))
       .withColumn("g", expr(
         // guard: slice() throws on negative length, so docs under 3
         // tokens contribute an empty trigram list (matches range(1,
@@ -1578,7 +1575,7 @@ object TextAnalysis {
   private def bpeTrain(s: SparkSession, d: String): (DataFrame, Seq[(Int, String, String, Long, Long)]) = {
     val K = 8
     var wd = Tables.documents(s, d)
-      .select(explode(toks(col("text"))).as("word"))
+      .select(explode(Tables.tokens(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(col("word"), col("freq"),
@@ -1670,7 +1667,7 @@ object TextAnalysis {
     val dict = bpeTrain(s, d)._1
       .select(col("word"), size(col("syms")).cast("long").as("n_sub"))
     Tables.documents(s, d)
-      .select(col("source"), explode(toks(col("text"))).as("word"))
+      .select(col("source"), explode(Tables.tokens(col("text"))).as("word"))
       .filter(col("word") =!= "")
       .join(broadcast(dict), Seq("word"))
       .groupBy(col("source"))
@@ -1794,7 +1791,7 @@ object TextAnalysis {
     val n = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val toks = docs.select(
         expr(s"doc_id * 10 div ${n}L").as("decile"),
-        explode(split(trim(col("text")), "\\s+")).as("tok"))
+        explode(Tables.tokens(col("text"))).as("tok"))
       .filter(length(col("tok")) > 0)
     val perDecile = toks.groupBy(col("decile"))
       .agg(count(lit(1)).as("n_tokens"))
@@ -1860,7 +1857,7 @@ object TextAnalysis {
     Tables.documents(s, d)
       .select(col("source"),
         col("n_chars").cast("long").as("x"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("y"))
+        size(Tables.tokens(col("text"))).cast("long").as("y"))
       .groupBy(col("source"))
       .agg(
         count(lit(1)).cast(D).as("n"),
@@ -1963,7 +1960,7 @@ object TextAnalysis {
   private[graft] def tx28Score(docs: DataFrame): DataFrame = {
     val feats = docs.select(
       col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
+      size(Tables.tokens(col("text"))).cast("long").as("n_tokens"),
       col("n_chars").cast("long").as("n_chars"),
       regexp_count(col("text"), lit("[^a-z0-9\\s]")).cast("long").as("punct_cnt"),
       regexp_count(col("text"), lit("[0-9]")).cast("long").as("digit_cnt"),
@@ -2044,7 +2041,7 @@ object TextAnalysis {
     * at serving time. */
   private def tx29(s: SparkSession, d: String): DataFrame = {
     val K = 256
-    val tk = Tables.documents(s, d).select(explode(toks(col("text"))).as("tok"))
+    val tk = Tables.documents(s, d).select(explode(Tables.tokens(col("text"))).as("tok"))
     val sk = tk.agg(expr(s"mg_topk(tok, $K)").as("sk"))
     val top = tk.groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
       .orderBy(col("exact_cnt").desc, col("tok").asc).limit(20)

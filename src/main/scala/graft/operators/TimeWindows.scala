@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GateQuery, Tables}
+import graft.Tables.{DayUs, HourUs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,7 +23,6 @@ import org.apache.spark.sql.functions._
   */
 object TimeWindows {
 
-  private val HourUs  = 3600L * 1000000
   private val SlideUs = 1800L * 1000000
 
   private[operators] def evs(s: SparkSession, d: String): DataFrame =
@@ -132,7 +132,6 @@ object TimeWindows {
     * stand in for the 10k/1k quotas). Two-level rollup: hour counts →
     * day aggregate. */
   private def tw4(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * HourUs
     evs(s, d)
       .withColumn("day_us", expr(s"(ts_us div ${DayUs}L) * ${DayUs}L"))
       .withColumn("hour_us", expr(s"(ts_us div ${HourUs}L) * ${HourUs}L"))
@@ -148,7 +147,6 @@ object TimeWindows {
   }
 
   private val tw4Sql = {
-    val DayUs = 24L * HourUs
     evsSql +
       s"""SELECT user_id, day_us, CAST(sum(hn) AS BIGINT) AS daily_requests,
          |  max(hn) AS peak_hour_requests,
@@ -447,7 +445,6 @@ object TimeWindows {
     * dimension table, never the event stream; the event-scale work is
     * exactly tw4's one map-side-combinable two-level agg. */
   private def tw11(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * HourUs
     val w = Window.partitionBy(col("day_us"))
     // admitted DESC leads both rank orders, so rank 1 is always an
     // admitted key whenever one exists — no nested min-over-window
@@ -474,7 +471,6 @@ object TimeWindows {
   }
 
   private val tw11Sql = {
-    val DayUs = 24L * HourUs
     s"""WITH usage AS ($tw4Sql),
        |sel AS (
        |  SELECT *,
@@ -759,7 +755,6 @@ object TimeWindows {
     * TakeOrderedAndProject top-50, and a rank window over the
     * 50-row result (the ob3 bounded-frame class). */
   private def tw16(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * HourUs
     val anchor = evs(s, d).agg(max(col("ts_us")).as("now_us"))
     evs(s, d).crossJoin(broadcast(anchor))
       .withColumn("decay_steps",
@@ -1000,7 +995,6 @@ object TimeWindows {
     * the split is duration-preserving so the per-level totals equal
     * the oracle's global-window restatement exactly. */
   private def tw21(s: SparkSession, d: String): DataFrame = {
-    val DayUs = 24L * HourUs
     val sess = tw3(s, d).select(col("sess_start_us"), col("sess_end_us"))
     val pts0 = sess.select(col("sess_start_us").as("ts"), lit(1L).as("delta"))
       .unionAll(sess.select((col("sess_end_us") + 1).as("ts"), lit(-1L).as("delta")))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.Tables
+import graft.Tables.{DayUs, HourUs}
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
@@ -78,7 +79,7 @@ object EventStream {
     import graft.operators.TextAnalysis
     docs
       .withWatermark("ts", "10 minutes")
-      .withColumn("n_tokens", size(split(trim(col("text")), "\\s+")))
+      .withColumn("n_tokens", size(Tables.tokens(col("text"))))
       .withColumn("punct_cnt", regexp_count(col("text"), lit("[^a-z0-9\\s]")))
       .withColumn("stopword_cnt", regexp_count(col("text"), lit("\\b(the|a)\\b")))
       .withColumn("fp", TextAnalysis.contentFp(col("text")))
@@ -302,8 +303,6 @@ object EventStream {
   def quotaAdmission(spark: SparkSession, events: DataFrame,
       hourlyLimit: Long = 20, dailyLimit: Long = 80): DataFrame = {
     import spark.implicits._
-    val HourUs = 3600L * 1000000
-    val DayUs = 24L * HourUs
     events
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .as[(Long, Long)]

@@ -233,7 +233,7 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(undocumented.isEmpty,
       s"gates absent from COVERAGE.md and PLANS.md (showcase rot): $undocumented")
     // and the reverse: a PLANS.md `## <gate>` section for a deleted
-    // gate means the evidence file is stale — PlanDump regenerates it
+    // gate means the evidence file is stale — `Diag showcase` regenerates it
     val sectionRe = "(?m)^## ([a-z0-9_]+)$".r
     val staleSections = sectionRe.findAllMatchIn(repoText("PLANS.md"))
       .map(_.group(1)).toSeq
@@ -248,7 +248,8 @@ class GateRegistrySpec extends AnyFunSuite {
     // level 1.00-1.27x pure-query band hides per-gate regressions
     // smaller than the total's swing (round-11's sim2 0.38→0.47 s was
     // presumed noise, not shown noise); this lint makes the committed
-    // snapshot prove each gate individually. Rule mirrors the tool:
+    // snapshot prove each gate individually. The rule is Bench's
+    // (`Bench.bandBreaches`, the tool's too):
     // fail iff seq > max(ceil * tol_rel, ceil + tol_abs) — relative
     // guard for real gates, absolute slack so planning-floor gates
     // (fixed-overhead-dominated) never flap. Gates newer than the band
@@ -279,8 +280,6 @@ class GateRegistrySpec extends AnyFunSuite {
         "BENCH_DETAIL.json has no 'sf' field — the band lint cannot " +
           "verify the snapshot's scale factor")
     }
-    val tolRel = (band \ "tol_rel").extract[Double]
-    val tolAbs = (band \ "tol_abs").extract[Double]
     val gates: Map[String, (Double, Double)] = (band \ "gates") match {
       case JObject(fs) => fs.map { case (g, v) =>
         g -> (((v \ "floor").extract[Double], (v \ "ceil").extract[Double]))
@@ -293,12 +292,12 @@ class GateRegistrySpec extends AnyFunSuite {
         case (g, JInt(t)) => g -> t.toDouble }.toMap
       case other => fail(s"BENCH_DETAIL.json queries_seq: unexpected $other")
     }
-    def breaches(seqTimes: Map[String, Double]): Seq[String] = for {
-      (g, t) <- seqTimes.toSeq.sortBy(_._1)
-      (floor, ceil) <- gates.get(g).toSeq
-      limit = math.max(ceil * tolRel, ceil + tolAbs)
-      if t > limit
-    } yield f"$g: $t%.3f s > limit $limit%.3f s (band [$floor%.3f, $ceil%.3f])"
+    val limits = Bench.bandLimits(band)
+    def breaches(seqTimes: Map[String, Double]): Seq[String] =
+      Bench.bandBreaches(band, seqTimes).map { g =>
+        val (floor, ceil) = gates(g)
+        f"$g: ${seqTimes(g)}%.3f s > limit ${limits(g)}%.3f s (band [$floor%.3f, $ceil%.3f])"
+      }
     val slow = breaches(seq)
     // the snapshot's own regime rides in the message: a breach from a
     // different core count or a loaded host reads as such at once
@@ -338,10 +337,9 @@ class GateRegistrySpec extends AnyFunSuite {
     val band = JsonMethods.parse(committedText("BENCH_BAND.json"))
     val snap = (JsonMethods.parse(committedText("BENCH_DETAIL.json")) \ "queries_seq")
       .extract[Map[String, Double]]
-    val (tolRel, tolAbs) = ((band \ "tol_rel").extract[Double], (band \ "tol_abs").extract[Double])
     val ceils = (band \ "gates").extract[Map[String, JValue]]
       .map { case (g, v) => g -> (v \ "ceil").extract[Double] }
-    def limit(g: String): Double = math.max(ceils(g) * tolRel, ceils(g) + tolAbs)
+    val limit = Bench.bandLimits(band)
     // the committed calm snapshot is inside the band: no label
     assert(Bench.bandNote(band, snap).isEmpty)
     // one gate just over its limit: labelled, and the label names it
@@ -359,7 +357,7 @@ class GateRegistrySpec extends AnyFunSuite {
   test("PLANS.md plan-shape claims are machine-checked (law lint)") {
     // Round-10 advice discipline extended to PLANS.md: every showcase
     // section's English claim carries pinned laws evaluated against
-    // the COMMITTED plan text, so a PlanDump regeneration that quietly
+    // the COMMITTED plan text, so a `Diag showcase` regeneration that quietly
     // loses a property (a broadcast flipping to shuffle, an exchange
     // appearing on a zero-exchange path) fails CI — and adding a NEW
     // showcase gate without deciding its laws fails the completeness
@@ -462,7 +460,7 @@ class GateRegistrySpec extends AnyFunSuite {
         Law("join-free", (f, _) => joins(f) == 0)),
       // receipt-backed sections (round-12): these gates return
       // collected rows or sink read-backs, so their evidence is the
-      // in-gate require'd RECEIPT that PlanDump embeds in the fence —
+      // in-gate require'd RECEIPT the plan writer embeds in the fence —
       // the laws pin the receipt's decisive phrases on committed text
       "q25_skew_join" -> Seq(bodyHas("-- RECEIPT"), bodyHas("skew=true")),
       "st19_stream_state_restart" -> Seq(
@@ -575,6 +573,18 @@ class GateRegistrySpec extends AnyFunSuite {
       .readTree(new java.io.File(out, "oracle_sql.json"))
     assert(oracles.fieldNames().asScala.toSet == gates.toSet)
     assert(java.nio.file.Files.readString(new java.io.File(out, "failed.json").toPath) == "{}")
+    // the gate loop under it: a failing gate is named and the others
+    // still run, results in input order whatever finishes first
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val runs = GateQueries.each(Seq("slow", "boom", "b", "a"), 2) { n =>
+      ran.add(n)
+      if (n == "slow") Thread.sleep(200)
+      if (n == "boom") throw new IllegalStateException("gate boom broke")
+      n.toUpperCase
+    }
+    assert(runs.map(r => r._1 -> r._3) == Seq("slow" -> Right("SLOW"),
+      "boom" -> Left("IllegalStateException: gate boom broke"), "b" -> Right("B"), "a" -> Right("A")))
+    assert(ran.asScala.toSet == Set("slow", "boom", "b", "a"))
   }
 
   test("Verify and Diag reject a bad command line before any session exists") {
@@ -600,6 +610,8 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(Diag.parse(Seq("replica", "/tmp/r", "2", "grown"))._1 ==
       Diag.Replicate("/tmp/r", 2, grown = true))
     assert(Diag.parse(Seq("scale"))._1 == Diag.Scale(Replica.checks.keys.toSeq))
+    assert(Diag.parse(Seq("showcase"))._1 == Diag.Showcase)
+    rejects("Diag", "showcase", "PLANS.md")("usage: Diag")
   }
 
   private def mainFiles: Seq[java.io.File] = {
@@ -617,20 +629,24 @@ class GateRegistrySpec extends AnyFunSuite {
     val texts = mainSources
     assert(texts.collect { case (f, t) if t.contains("SparkSession.builder") => f.getName } ==
       Seq("GraftSession.scala"))
+    // each main's enclosing top-level object (a nested `case object`
+    // such as Diag.Showcase declared above a main is not it)
     val mains = texts.flatMap { case (_, t) =>
       "def main\\(".r.findAllMatchIn(t).map { m =>
-        "object (\\w+)".r.findAllMatchIn(t.take(m.start)).toSeq.last.group(1)
+        "(?m)^object (\\w+)".r.findAllMatchIn(t.take(m.start)).toSeq.last.group(1)
       }
     }
-    assert(mains.sorted == Seq("Bench", "Diag", "PlanDump", "Verify"))
+    assert(mains.sorted == Seq("Bench", "Diag", "Verify"))
+    // and one gate loop: the mains share GateQueries.each's pool
+    assert(texts.collect { case (f, t) if t.contains("newFixedThreadPool") =>
+      f.getName -> "newFixedThreadPool".r.findAllIn(t).size } == Seq("GateQuery.scala" -> 1))
     assert(all.map(_.getName).filter("R\\d+".r.findFirstIn(_).isDefined).isEmpty)
   }
 
-  test("src/main names exactly the seven SPARK_GRAFT_ env knobs") {
+  test("src/main names exactly the pinned SPARK_GRAFT_ env knobs") {
     // a new knob fails here: sizes and modes belong on a command line
     val knobs = mainSources.flatMap { case (_, t) => "SPARK_GRAFT_\\w+".r.findAllIn(t) }.toSet
-    assert(knobs == Set("CPUS", "MASTER", "JARS", "SF_DIR", "QUERY_PAR", "VERIFY_PAR",
-      "SCRATCH").map("SPARK_GRAFT_" + _))
+    assert(knobs == Set("CPUS", "MASTER", "JARS", "SF_DIR", "SCRATCH").map("SPARK_GRAFT_" + _))
   }
 
   test("every table-file read in src/main goes through Tables") {

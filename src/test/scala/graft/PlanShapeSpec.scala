@@ -627,13 +627,16 @@ class PlanShapeSpec extends AnyFunSuite {
     // st1 and st8 run it through `replayed` / `replayedDf`. ob5 and
     // st22 read the slice anchor from the staging instead of re-running
     // the min/max `head()` (its partial-aggregate shuffle-map job and
-    // its result job: 6 and 38 jobs before).
+    // its result job: 6 and 38 jobs before). Every sink, dim and
+    // version read-back passes the schema it was written with, so none
+    // runs a schema-inference job (st13 16, st17 7, st18 8, st19 11,
+    // st20 11, st22 36, st23 15, st25 16 before).
     val pins = Seq("st1_stream_quota" -> 5, "st8_stream_docprep" -> 7,
-      "ob5_stream_observe" -> 4, "st13_stream_upsert" -> 16,
-      "st17_stream_dsv2_source" -> 7, "st18_stream_source_restart" -> 8,
-      "st19_stream_state_restart" -> 11, "st20_stream_rocksdb_restart" -> 11,
-      "st22_stream_dim_refresh" -> 36, "st23_stream_drop_ledger" -> 15,
-      "st25_stream_mg_restart" -> 16)
+      "ob5_stream_observe" -> 4, "st13_stream_upsert" -> 12,
+      "st17_stream_dsv2_source" -> 6, "st18_stream_source_restart" -> 7,
+      "st19_stream_state_restart" -> 9, "st20_stream_rocksdb_restart" -> 9,
+      "st22_stream_dim_refresh" -> 31, "st23_stream_drop_ledger" -> 14,
+      "st25_stream_mg_restart" -> 14)
     assert(jobsPerExecution(pins.map(_._1)) == pins)
   }
 
