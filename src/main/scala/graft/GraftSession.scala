@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session bootstrap: every main (Bench, Verify, Diag) and the
-  * perfbench harness build their session here.
+/** The one session bootstrap: every main (Bench, Verify, Diag), the
+  * perfbench harness and the test suites build their session here.
   * Defaults to `local[cpus]`; two env knobs exist for the DISTRIBUTION
   * smoke:
   *

@@ -6,14 +6,13 @@ package graft
   * (st19/st20's batch-numbering continuity), file-layout deltas
   * (la22's untouched partitions). Those gates already `require` the
   * behavior on every run; recording the proven fact here lets the plan
-  * writer ([[Diag.planText]], behind `Diag plan` and `Diag showcase`)
-  * print it above the gate's plan and in its PLANS.md section, where the
-  * GateRegistrySpec law lint machine-checks the claim on the COMMITTED
-  * text — the same discipline plan-shape claims get.
+  * writer ([[Diag.planText]], behind `Diag plan`) print it above the
+  * gate's plan, where PlanShapeSpec's plan-shape laws check the claim
+  * on the live plan text — the same discipline plan-shape claims get.
   *
-  * Receipts must be deterministic at a fixed sf (PLANS.md is
-  * committed; a regen should be byte-stable) — normalize away exprIds
-  * and anything host-dependent before recording.
+  * Keep a receipt deterministic at a fixed sf: anything host-dependent
+  * in it makes two plan dumps of unchanged code differ (`planText`
+  * masks expression ids itself).
   */
 object Receipts {
   private val m =

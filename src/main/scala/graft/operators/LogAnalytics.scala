@@ -1524,8 +1524,8 @@ object LogAnalytics {
       require(rows.map(_.getAs[Long]("n_events")).sum ==
         Tables.events(iso, d).count(),
         "backfill changed the row universe")
-      // PLANS.md receipt: the layout facts `require`d above, made
-      // law-lintable on the committed text
+      // receipt: the layout facts `require`d above, printed with the
+      // gate's plan and checked by PlanShapeSpec's plan-shape laws
       graft.Receipts.record("la22_dynamic_overwrite",
         s"dynamic overwrite touched ${touched.size} day partitions; " +
           s"${untouched.size} untouched partitions byte-identical " +
@@ -1662,7 +1662,7 @@ object LogAnalytics {
     * writer/reader. The read-back plan must prune to the single
     * `level=PURCHASE` directory (partition pruning on the layout) AND
     * push the value predicate into the ORC reader (row-group stats
-    * skipping — `PushedFilters` in the scan, law-linted in PLANS.md),
+    * skipping — `PushedFilters` in the scan, a PlanShapeSpec plan-shape law),
     * so the rollup reads one partition's row groups, never the table.
     * min/max ride along because ORC's stride stats answer them
     * per-row-group — the columnar-format contract parquet gates

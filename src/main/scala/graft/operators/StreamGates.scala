@@ -1447,11 +1447,11 @@ object StreamGates {
             "the RocksDB changelog-checkpointing conf did not take")
         "; RocksDB .changelog files present under the checkpoint state dir"
       } else ""
-    // PLANS.md receipt: the restart facts this gate `require`s, made
-    // law-lintable on the committed text (deterministic at a fixed sf)
+    // receipt: the restart facts this gate `require`s, printed with the
+    // gate's plan and checked by PlanShapeSpec's plan-shape laws,
     // keyed by the REGISTRY name passed from the call site — string-
     // rebuilding it here would silently detach the receipt from the
-    // gate on a rename and fail the PLANS law lint far from the cause
+    // gate on a rename and fail the law far from the cause
     graft.Receipts.record(registryName,
       s"run2 continued the batch numbering ($last1 -> $last2) from the " +
         s"same checkpoint; run1 sank $rows1 of $total rows " +

@@ -49,21 +49,13 @@ class GateRegistrySpec extends AnyFunSuite {
     * the MUTATING gates (la9 writes + drops partitions + deletes its
     * dir, la11 publishes + drops a sink table, dd6/dd12 checkpoint),
     * so each gate must be constructed exactly once per suite run —
-    * the earlier shape built every gate twice. Parallel: the runs
-    * share the session's scheduler, wall ~ slowest gate. */
-  private lazy val gateRuns: Map[String, Either[String, (org.apache.spark.sql.types.StructType, Long)]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    GateQueries.all.map(q => Future(q.name -> {
-      try {
-        val df = q.run(spark, sf0001)
-        Right((df.schema, df.count()))
-      } catch { case e: Throwable =>
-        Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(200)}")
-      }
-    })).map(Await.result(_, Duration.Inf)).toMap
-  }
+    * the earlier shape built every gate twice. The runs go through
+    * the mains' gate loop and share the session's scheduler. */
+  private lazy val gateRuns: Map[String, Either[String, (org.apache.spark.sql.types.StructType, Long)]] =
+    GateQueries.each(GateQueries.all.map(_.name), GateQueries.Par) { g =>
+      val df = SparkEntry.queries(g)(spark, sf0001)
+      (df.schema, df.count())
+    }.map { case (g, _, r) => g -> r }.toMap
 
   test("repoFile from a non-repo CWD fails NAMED, not with an NPE") {
     // The lint must stay diagnosable from any runner: with the base
@@ -220,26 +212,16 @@ class GateRegistrySpec extends AnyFunSuite {
       s"README.md registry line must say ($total queries, $oracled oracled)")
   }
 
-  test("every gate is documented in COVERAGE.md; PLANS.md sections are live gates") {
-    // Artifact lint: the showcase docs are graded alongside the code,
+  test("every gate is documented in COVERAGE.md") {
+    // Artifact lint: the coverage doc is graded alongside the code,
     // and a gate that exists only in the registry silently rots out of
-    // them as families grow (q1_agg did exactly this for seven
-    // rounds). A mention is the full name anywhere, or the backticked
-    // short token (`tx1`) the COVERAGE gate tables use — deleting a
-    // gate's COVERAGE row turns this red unless PLANS still shows it.
-    val docs = repoText("COVERAGE.md") + repoText("PLANS.md")
+    // it as families grow (q1_agg did exactly this for seven rounds).
+    // A mention is the full name anywhere, or the backticked short
+    // token (`tx1`) the COVERAGE gate tables use.
+    val docs = repoText("COVERAGE.md")
     val undocumented = GateQueries.all.map(_.name).filterNot(n =>
       docs.contains(n) || docs.contains(s"`${n.takeWhile(_ != '_')}`"))
-    assert(undocumented.isEmpty,
-      s"gates absent from COVERAGE.md and PLANS.md (showcase rot): $undocumented")
-    // and the reverse: a PLANS.md `## <gate>` section for a deleted
-    // gate means the evidence file is stale — `Diag showcase` regenerates it
-    val sectionRe = "(?m)^## ([a-z0-9_]+)$".r
-    val staleSections = sectionRe.findAllMatchIn(repoText("PLANS.md"))
-      .map(_.group(1)).toSeq
-      .filterNot(GateQueries.all.map(_.name).toSet)
-    assert(staleSections.isEmpty,
-      s"PLANS.md sections with no registered gate (stale evidence): $staleSections")
+    assert(undocumented.isEmpty, s"gates absent from COVERAGE.md: $undocumented")
   }
 
   test("committed bench snapshot sits inside the per-gate noise band") {
@@ -354,208 +336,6 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(Bench.bandNote(band, r16).exists(n => hot.forall(n.contains)))
   }
 
-  test("PLANS.md plan-shape claims are machine-checked (law lint)") {
-    // Round-10 advice discipline extended to PLANS.md: every showcase
-    // section's English claim carries pinned laws evaluated against
-    // the COMMITTED plan text, so a `Diag showcase` regeneration that quietly
-    // loses a property (a broadcast flipping to shuffle, an exchange
-    // appearing on a zero-exchange path) fails CI — and adding a NEW
-    // showcase gate without deciding its laws fails the completeness
-    // check below. Laws run on the FINAL-plan tree region (adaptive
-    // dumps include an Initial Plan and a detail list that would
-    // double-count nodes); whole-body checks are for detail-only
-    // markers (PushedFilters, Scan ExistingRDD).
-    val text = repoText("PLANS.md")
-    val secRe = "(?ms)^## ([a-z0-9_]+)$(.*?)(?=^## |\\z)".r
-    val sections: Map[String, String] =
-      secRe.findAllMatchIn(text).map(m => m.group(1) -> m.group(2)).toMap
-    def finalRegion(b: String): String =
-      if (b.contains("== Final Plan =="))
-        b.split("== Final Plan ==")(1).split("== Initial Plan ==")(0)
-      else b.split("(?m)^\\(\\d+\\) ")(0) // plain dump: tree before details
-    def nodes(b: String, pat: String): Int =
-      (pat + " \\(\\d+\\)").r.findAllMatchIn(b).size
-    // ReusedExchange excluded too: it references an exchange counted at
-    // its definition site (often a BroadcastExchange) — counting the
-    // reuse would both pad shuffle counts and flip on a harmless
-    // broadcast-reuse appearing in a regenerated plan (round-11 advice).
-    def sh(b: String): Int =
-      nodes(b, "(?<!Reused)(?<!Broadcast)(?<!AQEShuffleRead )Exchange")
-    def scans(b: String): Int = "Scan parquet".r.findAllMatchIn(b).size
-    def joins(b: String): Int = nodes(b, "SortMergeJoin \\w+") +
-      nodes(b, "ShuffledHashJoin \\w+ \\w+") + nodes(b, "BroadcastHashJoin \\w+ \\w+")
-    case class Law(desc: String, ok: (String, String) => Boolean) // (final, whole)
-    def shufflesAtMost(n: Int) = Law(s"<=$n shuffle exchanges", (f, _) => sh(f) <= n)
-    def scansAtMost(n: Int) = Law(s"<=$n parquet scans", (f, _) => scans(f) <= n)
-    def node(p: String, n: Int = 1) = Law(s">=$n $p", (f, _) => nodes(f, p) >= n)
-    def noNode(p: String) = Law(s"no $p", (f, _) => nodes(f, p) == 0)
-    def bodyHas(s: String) = Law(s"body has '$s'", (_, w) => w.contains(s))
-    def bodyNot(s: String) = Law(s"body lacks '$s'", (_, w) => !w.contains(s))
-    val noSmj = noNode("SortMergeJoin \\w+")
-    val noNlj = Law("no nested-loop/cartesian",
-      (f, _) => !f.contains("NestedLoop") && !f.contains("CartesianProduct"))
-    val laws: Map[String, Seq[Law]] = Map(
-      "ca6_final_metrics" -> Seq(shufflesAtMost(2), scansAtMost(2)),
-      "q2_dim_join" -> Seq(node("BroadcastHashJoin \\w+ \\w+", 3), noSmj,
-        noNode("ShuffledHashJoin \\w+ \\w+"), shufflesAtMost(1)),
-      "q10_bucketed_join" -> Seq(node("SortMergeJoin \\w+"), noNode("Sort"),
-        shufflesAtMost(1)),
-      "la1_filter_paginate" -> Seq(node("TakeOrderedAndProject"),
-        shufflesAtMost(0)),
-      "tw7_range_join" -> Seq(node("Generate"), noNlj,
-        node("BroadcastHashJoin \\w+ \\w+")),
-      "s6_connector_group_agg" -> Seq(bodyNot("HashAggregate"),
-        bodyNot("SortAggregate")),
-      "cp1_stratified_sample" -> Seq(node("WindowGroupLimit"), shufflesAtMost(1)),
-      "tx8_kmv_cardinality" -> Seq(node("ObjectHashAggregate")),
-      "dd3_minhash_lsh" -> Seq(scansAtMost(2), node("ObjectHashAggregate")),
-      "dd4_simhash" -> Seq(scansAtMost(2), noSmj, shufflesAtMost(1)),
-      "sim9_ann_multiband" -> Seq(node("BroadcastHashJoin \\w+ \\w+", 3), noSmj),
-      "sim10_pq_encode" -> Seq(shufflesAtMost(0), scansAtMost(1)),
-      "sim11_adc_search" -> Seq(noNode("HashAggregate"), node("WindowGroupLimit")),
-      "tw9_event_gaps" -> Seq(shufflesAtMost(1), node("TakeOrderedAndProject")),
-      "dd9_chunk_dedup" -> Seq(noNode("Sort"), noSmj),
-      "sim12_ivfpq_search" -> Seq(node("ShuffledHashJoin \\w+ \\w+"), noSmj),
-      "q12_sql_exists" -> Seq(bodyHas("LeftSemi"), noSmj),
-      "dd13_incremental_dedup" -> Seq(noSmj, node("BroadcastExchange")),
-      "tw12_rate_limit" -> Seq(shufflesAtMost(1)),
-      "dd10_canonical_select" -> Seq(bodyHas("Scan ExistingRDD"),
-        node("WindowGroupLimit"), shufflesAtMost(1)),
-      "dd15_containment_score" -> Seq(node("BroadcastExchange", 2), node("Generate")),
-      "sim14_lloyd_refine" -> Seq(node("BroadcastExchange"), shufflesAtMost(2)),
-      "q13_sql_not_exists" -> Seq(bodyHas("LeftAnti"), noNode("Sort")),
-      "q14_bag_setops" -> Seq(Law("join-free", (f, _) => joins(f) == 0),
-        node("Generate")),
-      "la10_histogram_p95" -> Seq(noSmj),
-      "tx13_inverted_index" -> Seq(shufflesAtMost(2), scansAtMost(1),
-        node("Window")),
-      "mm8_crossmodal_dedup" -> Seq(bodyNot("FullOuter"), noSmj),
-      "tw15_scd2_intervals" -> Seq(shufflesAtMost(1),
-        Law("<=1 Sort (windows share it)", (f, _) => nodes(f, "Sort") <= 1),
-        node("Window", 2)),
-      "sim16_filtered_ivfpq" -> Seq(node("ShuffledHashJoin \\w+ \\w+"), noSmj),
-      "mm7_perceptual_neardup" -> Seq(noSmj, shufflesAtMost(2)),
-      "dd17_bloom_history" -> Seq(node("BroadcastExchange", 3),
-        node("BroadcastHashJoin \\w+ \\w+", 5), noSmj),
-      "mm9_static_payload" -> Seq(shufflesAtMost(0), scansAtMost(1)),
-      "cp15_dataset_card" -> Seq(node("BroadcastHashJoin \\w+ \\w+", 2), noSmj),
-      "s7_connector_topn" -> Seq(bodyHas("PushedTopN"), noNode("Sort"),
-        noNode("TakeOrderedAndProject"), bodyNot("CollectLimit")),
-      "dd19_repeated_spans" -> Seq(shufflesAtMost(3), node("Generate"), noSmj),
-      "sim19_sq8_search" -> Seq(node("WindowGroupLimit"), shufflesAtMost(1)),
-      "tx20_host_centrality" -> Seq(bodyNot("CartesianProduct"),
-        node("BroadcastHashJoin \\w+ \\w+", 10)),
-      "q16_sql_lateral" -> Seq(node("WindowGroupLimit"), noNlj),
-      "q17_incremental_summary" -> Seq(bodyHas("Scan ExistingRDD")),
-      "q18_unpivot_melt" -> Seq(bodyHas("Expand"), shufflesAtMost(1)),
-      "mm11_cdc_chunk_dedup" -> Seq(shufflesAtMost(3), noSmj),
-      "la16_time_travel" -> Seq(bodyNot("SortMergeJoin")),
-      "tw18_asof_plan" -> Seq(node("AsOfJoin"), noNode("Window"), bodyNot("Union")),
-      "q22_json_analytics" -> Seq(bodyHas("from_json"), scansAtMost(1)),
-      "cp17_pps_sample" -> Seq(bodyHas("hashpartitioning(pid"),
-        node("BroadcastExchange"), shufflesAtMost(3)),
-      "sim23_radius_search" -> Seq(bodyNot("SortMergeJoin")),
-      "sim24_dominant_direction" -> Seq(bodyNot("SortMergeJoin")),
-      "mm12_aspect_buckets" -> Seq(shufflesAtMost(1),
-        Law("join-free", (f, _) => joins(f) == 0)),
-      // receipt-backed sections (round-12): these gates return
-      // collected rows or sink read-backs, so their evidence is the
-      // in-gate require'd RECEIPT the plan writer embeds in the fence —
-      // the laws pin the receipt's decisive phrases on committed text
-      "q25_skew_join" -> Seq(bodyHas("-- RECEIPT"), bodyHas("skew=true")),
-      "st19_stream_state_restart" -> Seq(
-        bodyHas("continued the batch numbering"),
-        bodyHas("nonempty proper prefix")),
-      "st20_stream_rocksdb_restart" -> Seq(
-        bodyHas("continued the batch numbering"),
-        bodyHas(".changelog files present")),
-      "la22_dynamic_overwrite" -> Seq(
-        bodyHas("untouched partitions byte-identical"),
-        bodyHas("retry idempotent")),
-      "q26_cube" -> Seq(bodyHas("Expand"), scansAtMost(1), shufflesAtMost(1),
-        bodyNot("Union")),
-      "cp18_water_fill" -> Seq(scansAtMost(1), shufflesAtMost(2),
-        node("Window", 3),
-        Law("<=1 Sort (windows share it)", (f, _) => nodes(f, "Sort") <= 1)),
-      "sim25_maxsim_rerank" -> Seq(node("WindowGroupLimit"), noSmj, noNlj,
-        node("BroadcastHashJoin \\w+ \\w+", 2), shufflesAtMost(2)),
-      "tx27_linear_probe" -> Seq(scansAtMost(1), shufflesAtMost(1),
-        Law("join-free", (f, _) => joins(f) == 0), noNode("Window")),
-      "mm13_scene_cuts" -> Seq(scansAtMost(1), shufflesAtMost(1),
-        node("Generate"), node("Window"), noSmj),
-      "tx28_classifier_inference" -> Seq(scansAtMost(1), shufflesAtMost(1),
-        Law("join-free", (f, _) => joins(f) == 0), noNode("Window")),
-      "mm14_prep_funnel" -> Seq(noSmj,
-        node("ShuffledHashJoin \\w+ \\w+", 2), scansAtMost(3),
-        shufflesAtMost(8)),
-      "st23_stream_drop_ledger" -> Seq(
-        bodyHas("numRowsDroppedByWatermark summed"),
-        bodyHas("== the staged late set exactly")),
-      "sim27_ivf_sq8" -> Seq(node("ShuffledHashJoin \\w+ \\w+"), noSmj,
-        node("WindowGroupLimit"), node("BroadcastExchange", 2)),
-      "mm15_clip_sample" -> Seq(scansAtMost(1), shufflesAtMost(3),
-        Law("join-free", (f, _) => joins(f) == 0), node("Generate"),
-        node("Window", 2)),
-      "la24_orc_roundtrip" -> Seq(bodyHas("Scan orc"),
-        bodyHas("PartitionFilters: [isnotnull(level"),
-        bodyHas("PushedFilters: [IsNotNull(value_cents), " +
-          "GreaterThanOrEqual(value_cents,1000)]"),
-        bodyHas("ReadSchema: struct<ts_us:bigint,value_cents:bigint>"),
-        shufflesAtMost(1)),
-      // la25: the sketch is a bounded-state ObjectHashAggregate; the
-      // ≤levels-row answer frame joins back BROADCAST; never a
-      // sort-merge join; 4 exchanges = sketch agg + ranks agg + the
-      // audit window + the final level joins (shuffle-hash, slim).
-      "la25_kll_quantiles" -> Seq(node("ObjectHashAggregate"),
-        node("BroadcastHashJoin \\w+ \\w+"), noSmj, noNlj,
-        shufflesAtMost(4), scansAtMost(4)),
-      // dd21: window hashes + token stream explode narrow (3
-      // Generates); both corpus joins are SHUFFLE-HASH on fixed-width
-      // keys; never sort-merge, never a nested loop.
-      "dd21_exact_substring" -> Seq(node("Generate", 3),
-        node("ShuffledHashJoin \\w+ \\w+", 2), noSmj, noNlj,
-        shufflesAtMost(5), scansAtMost(3)),
-      // tx29: one bounded-state sketch agg + the exact top-20 audit
-      // (TakeOrderedAndProject); the 1-row sketch anchor is the suite's
-      // permitted BNLJ shape, so noNlj is deliberately NOT pinned here.
-      "tx29_mg_heavy_hitters" -> Seq(node("ObjectHashAggregate"),
-        node("TakeOrderedAndProject"), noSmj,
-        shufflesAtMost(2), scansAtMost(2)),
-      // q28: the gate returns an assembled 2-row frame; the decisive
-      // evidence is the receipt — the decision ledger with both
-      // directions of the sketch-vs-budget comparison.
-      "q28_sketch_planner" -> Seq(bodyHas("-- RECEIPT"),
-        bodyHas("-> broadcast"), bodyHas("-> shuffle_hash")),
-      // st25: restart + compaction receipts (st19's discipline plus
-      // the MG-specific err>0 law).
-      "st25_stream_mg_restart" -> Seq(
-        bodyHas("continued the batch numbering"),
-        bodyHas("nonempty proper prefix"),
-        bodyHas("MG compacted (err>0)")),
-      // q29: the decisive evidence is the in-gate require'd receipt
-      // (plan marker present ON / absent OFF, aggregates identical).
-      "q29_runtime_bloom" -> Seq(bodyHas("-- RECEIPT"),
-        bodyHas("might_contain present in the ON leg"),
-        bodyHas("absent in the OFF leg"),
-        bodyHas("aggregates identical")))
-    val missingLaws = sections.keySet -- laws.keySet
-    assert(missingLaws.isEmpty,
-      s"PLANS.md sections without pinned laws (add them here): $missingLaws")
-    val staleLaws = laws.keySet -- sections.keySet
-    assert(staleLaws.isEmpty,
-      s"laws for sections no longer in PLANS.md: $staleLaws")
-    val failures = for {
-      (g, ls) <- laws.toSeq.sortBy(_._1)
-      // body checks run on the fenced plan only — the English caption
-      // would otherwise satisfy/violate its own claim ("no Union")
-      body = sections(g).dropWhile(_ != '`')
-      fr = finalRegion(body)
-      l <- ls if !l.ok(fr, body)
-    } yield s"$g: ${l.desc}"
-    assert(failures.isEmpty,
-      s"PLANS.md claims no longer hold in the committed plans:\n${failures.mkString("\n")}")
-  }
-
   test("every gate query returns rows at sf0.001") {
     val bad = gateRuns.toSeq.sortBy(_._1).collect {
       case (name, Left(err)) => s"$name FAILED: $err"
@@ -610,27 +390,31 @@ class GateRegistrySpec extends AnyFunSuite {
     assert(Diag.parse(Seq("replica", "/tmp/r", "2", "grown"))._1 ==
       Diag.Replicate("/tmp/r", 2, grown = true))
     assert(Diag.parse(Seq("scale"))._1 == Diag.Scale(Replica.checks.keys.toSeq))
-    assert(Diag.parse(Seq("showcase"))._1 == Diag.Showcase)
-    rejects("Diag", "showcase", "PLANS.md")("usage: Diag")
+    rejects("Diag", "showcase")("usage: Diag")
   }
 
-  private def mainFiles: Seq[java.io.File] = {
+  private def filesUnder(rel: String): Seq[java.io.File] = {
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    files(repoFile("src/main"))
+    files(repoFile(rel))
   }
 
-  private def mainSources: Seq[(java.io.File, String)] =
-    mainFiles.filter(_.getName.endsWith(".scala"))
+  private def sources(rel: String): Seq[(java.io.File, String)] =
+    filesUnder(rel).filter(_.getName.endsWith(".scala"))
       .map(f => f -> scala.io.Source.fromFile(f, "UTF-8").mkString)
 
+  private def mainSources: Seq[(java.io.File, String)] = sources("src/main")
+
   test("one session builder, no round-stamped files, and the pinned set of mains") {
-    val all = mainFiles
+    val all = filesUnder("src/main")
     val texts = mainSources
-    assert(texts.collect { case (f, t) if t.contains("SparkSession.builder") => f.getName } ==
-      Seq("GraftSession.scala"))
-    // each main's enclosing top-level object (a nested `case object`
-    // such as Diag.Showcase declared above a main is not it)
+    // the test session too: exactly one builder call in main and test
+    val builder = "SparkSession\\.builder".r
+    assert((texts ++ sources("src/test")).collect {
+      case (f, t) if builder.findFirstIn(t).isDefined => f.getName -> builder.findAllIn(t).size
+    } == Seq("GraftSession.scala" -> 1))
+    // each main's enclosing top-level object (a nested `case class`
+    // such as Diag.Plan declared above a main is not it)
     val mains = texts.flatMap { case (_, t) =>
       "def main\\(".r.findAllMatchIn(t).map { m =>
         "(?m)^object (\\w+)".r.findAllMatchIn(t.take(m.start)).toSeq.last.group(1)

@@ -13,17 +13,7 @@ import java.sql.Timestamp
   * testdata dirs.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.build("4")
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001  = "/root/testdata/sf0.01"
