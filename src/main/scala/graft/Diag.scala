@@ -1,10 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** The diagnostics entry point; no contract output depends on it. Tables
@@ -22,8 +21,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * is named and the run exits 1. PlanShapeSpec checks the plan-shape
   * laws on the same text.
   * `profile` runs each gate `reps` times (default 3) and prints per rep
-  * the rows, wall and every Spark job the gate spawned, then the gate's
-  * walls and their warm (rep ≥ 2) minimum.
+  * the rows, wall and every Spark job the gate spawned ([[jobs]]: by job
+  * tag, so a stream thread's jobs count and a straggler from the last
+  * rep does not), then the gate's walls and their warm (rep ≥ 2) minimum.
   * `replica` writes the tables `factor`× into `outDir` ([[Replica.write]]);
   * `scale` runs the named [[Replica.checks]] (all when none is named)
   * and exits 1 naming every check that failed. Point
@@ -82,26 +82,27 @@ object Diag {
     if (failed.nonEmpty) sys.exit(1)
   }
 
-  /** The plan a gate serves: runs it ([[served]]), then returns its
+  /** The plan of a gate's frame after [[served]] ran it: the gate's
     * [[Receipts]] line, if any, over the AQE-final formatted explain.
     * JVM-global counters are masked in both (expression ids `#12`,
     * exchange `plan_id`s, lambda variables `x_30`) so two dumps of
     * unchanged code diff cleanly. */
-  def planText(spark: SparkSession, sfDir: String, gate: String): String = {
-    val df = SparkEntry.queries.getOrElse(gate, sys.error(s"unknown gate '$gate'"))(spark, sfDir)
-    served(df)
+  def planText(gate: String, df: DataFrame): String =
     (Receipts.get(gate).fold("")(r => s"-- RECEIPT: $r\n\n") +
       df.queryExecution.explainString(FormattedMode).trim)
       .replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("(lambda \\w+_)\\d+", "$1N")
-  }
 
-  /** Writes each gate's plan ([[planText]], through the gate loop);
-    * returns (and names) the gates it could not dump. */
+  /** Serves each gate and writes its plan ([[planText]], through the
+    * gate loop); returns (and names) the gates it could not dump. */
   private def plan(spark: SparkSession, sfDir: String, p: Plan): Seq[String] = {
     val out = Paths.get(p.outDir)
     Files.createDirectories(out)
-    val runs = GateQueries.each(p.gates, GateQueries.Par)(planText(spark, sfDir, _))
+    val runs = GateQueries.each(p.gates, GateQueries.Par) { g =>
+      val df = SparkEntry.queries.getOrElse(g, sys.error(s"unknown gate '$g'"))(spark, sfDir)
+      served(df)
+      planText(g, df)
+    }
     runs.foreach {
       case (g, _, Right(text)) =>
         Files.writeString(out.resolve(s"${g}_${p.suffix}.txt"),
@@ -134,44 +135,45 @@ object Diag {
     * replica: 1.1 s counted vs 17.5 s served). */
   def served(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
-  private def profile(spark: SparkSession, sfDir: String, p: Profile): Unit = {
-    val started = new ConcurrentHashMap[Int, (Long, String)]()
-    val done = new ConcurrentLinkedQueue[(Int, Long, Long, String)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
+  /** A Spark job: id, start and end (epoch ms; end -1 if no end event
+    * came), and its description or else its first stage's call site. */
+  final case class Job(id: Int, start: Long, end: Long, desc: String)
+
+  /** `body`'s result and the jobs it started, by id: attributed by a job
+    * tag (threads `body` starts, a stream's, inherit it; other threads'
+    * jobs lack it), read after the listener bus delivered every event. */
+  def jobs[T](spark: SparkSession)(body: => T): (T, Seq[Job]) = {
+    val (sc, tag) = (spark.sparkContext, s"graft-jobs-${java.util.UUID.randomUUID}")
+    val seen = scala.collection.concurrent.TrieMap.empty[Int, Job]
+    val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(js.stageInfos.headOption.map(_.name)) // the call site
-          .getOrElse("")
-        started.put(js.jobId, (js.time, desc))
+        def prop(k: String) = Option(js.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.tags").exists(_.split(",").contains(tag)))
+          seen(js.jobId) = Job(js.jobId, js.time, -1, prop("spark.job.description")
+            .orElse(js.stageInfos.headOption.map(_.name)).getOrElse(""))
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
-        Option(started.remove(je.jobId)).foreach { case (start, desc) =>
-          done.add((je.jobId, start, je.time, desc))
-        }
-    })
-    val queries = SparkEntry.queries
-    p.gates.foreach { gate =>
-      val walls = (1 to p.reps).map { rep =>
-        done.clear()
-        started.clear() // a straggler from the last rep must not leak in
-        val (n, wall) = Replica.timed(served(queries(gate)(spark, sfDir)))
-        // the listener bus is async: wait (bounded) until every started
-        // job reported its end
-        var waited = 0
-        while (!started.isEmpty && waited < 2000) { Thread.sleep(100); waited += 100 }
-        Thread.sleep(200)
-        val jobs = done.toArray(Array.empty[(Int, Long, Long, String)]).sortBy(_._1)
-        val first = jobs.headOption.fold(0L)(_._2)
-        println(f"== $gate rep $rep: wall $wall%.3f s, rows=$n, jobs=${jobs.length} ==")
-        jobs.foreach { case (id, s, e, desc) =>
-          println(f"  job $id%4d  +${(s - first) / 1e3}%7.3f  ${(e - s) / 1e3}%7.3f s  ${desc.take(100)}")
-        }
-        println(f"  job-time sum ${jobs.map(j => j._3 - j._2).sum / 1e3}%.3f s over ${jobs.length} jobs")
-        wall
-      }
-      println(f"gate=$gate%-28s " + walls.map(w => f"$w%.3f").mkString(" ") +
-        f"  warm-min=${walls.tail.minOption.getOrElse(walls.head)}%.3f")
+        seen.updateWith(je.jobId)(_.map(_.copy(end = je.time)))
     }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try { val r = body; GraftSqlShims.drainListenerBus(sc); (r, seen.values.toSeq.sortBy(_.id)) }
+    finally { sc.removeJobTag(tag); sc.removeSparkListener(listener) }
+  }
+
+  private def profile(spark: SparkSession, sfDir: String, p: Profile): Unit = p.gates.foreach { gate =>
+    val walls = (1 to p.reps).map { rep =>
+      val ((n, wall), js) = jobs(spark)(Replica.timed(served(SparkEntry.queries(gate)(spark, sfDir))))
+      val first = js.headOption.fold(0L)(_.start)
+      println(f"== $gate rep $rep: wall $wall%.3f s, rows=$n, jobs=${js.length} ==")
+      js.foreach { j => // a stream batch's description spans lines: one line per job
+        println(f"  job ${j.id}%4d  +${(j.start - first) / 1e3}%7.3f  ${(j.end - j.start) / 1e3}%7.3f s  " +
+          j.desc.trim.replaceAll("\\s+", " ").take(100))
+      }
+      println(f"  job-time sum ${js.map(j => j.end - j.start).sum / 1e3}%.3f s over ${js.length} jobs")
+      wall
+    }
+    println(f"gate=$gate%-28s " + walls.map(w => f"$w%.3f").mkString(" ") +
+      f"  warm-min=${walls.tail.minOption.getOrElse(walls.head)}%.3f")
   }
 }

@@ -39,15 +39,6 @@ object EventStream {
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n_events"), col("value_cents"))
 
-  /** Sliding 1h/30m per-user activity — the "last hour, refreshed every
-    * half hour" quota view (T2/A10). */
-  def slidingUserActivity(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("w.start").as("window_start"), col("user_id"), col("n_events"))
-
   /** Streaming exact dedup — the streaming twin of the dd1 batch
     * operator (and of the reference's idempotent cache-key lookups):
     * duplicate `event_id`s arriving within the watermark delay are

@@ -8,7 +8,10 @@ import scala.jdk.CollectionConverters._
   * `queries` entry against its `oracleSql`, and smoke-checks rows>0
   * only for the flagship — so a refactor that silently empties a gate
   * query would otherwise surface only as a round-level correctness
-  * drop. Every gate query must run and return rows at sf0.001. */
+  * drop. Every gate query must run and return rows at sf0.001. The
+  * schema and rows lints read the shared served run of every gate
+  * (`TestSpark.served`), which PlanShapeSpec's sweep and law table read
+  * too. */
 class GateRegistrySpec extends AnyFunSuite {
 
   /** Repo files resolved from the forked test JVM's working dir (sbt
@@ -43,19 +46,6 @@ class GateRegistrySpec extends AnyFunSuite {
         new java.io.File(sys.props.getOrElse("user.dir", ".")))
       .!!(scala.sys.process.ProcessLogger(_ => ()))
     catch { case scala.util.control.NonFatal(_) => repoText(rel) }
-
-  /** One cached run per gate, shared by the schema and rows lints
-    * below: building a gate's DataFrame executes its side effects for
-    * the MUTATING gates (la9 writes + drops partitions + deletes its
-    * dir, la11 publishes + drops a sink table, dd6/dd12 checkpoint),
-    * so each gate must be constructed exactly once per suite run —
-    * the earlier shape built every gate twice. The runs go through
-    * the mains' gate loop and share the session's scheduler. */
-  private lazy val gateRuns: Map[String, Either[String, (org.apache.spark.sql.types.StructType, Long)]] =
-    GateQueries.each(GateQueries.all.map(_.name), GateQueries.Par) { g =>
-      val df = SparkEntry.queries(g)(spark, sf0001)
-      (df.schema, df.count())
-    }.map { case (g, _, r) => g -> r }.toMap
 
   test("repoFile from a non-repo CWD fails NAMED, not with an NPE") {
     // The lint must stay diagnosable from any runner: with the base
@@ -171,8 +161,8 @@ class GateRegistrySpec extends AnyFunSuite {
     // joined strings (cp6/tx13 pattern: array_join / array_to_string).
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
     val offenders = for {
-      (name, Right((schema, _))) <- gateRuns.toSeq.sortBy(_._1)
-      f <- schema.fields
+      (name, Right(run)) <- served.toSeq.sortBy(_._1)
+      f <- run.schema.fields
       if f.dataType.isInstanceOf[ArrayType] ||
         f.dataType.isInstanceOf[MapType] ||
         f.dataType.isInstanceOf[StructType]
@@ -337,9 +327,11 @@ class GateRegistrySpec extends AnyFunSuite {
   }
 
   test("every gate query returns rows at sf0.001") {
-    val bad = gateRuns.toSeq.sortBy(_._1).collect {
+    // served rows (TestSpark.served): every output column materialized,
+    // so a join a bare count() would prune away still runs
+    val bad = served.toSeq.sortBy(_._1).collect {
       case (name, Left(err)) => s"$name FAILED: $err"
-      case (name, Right((_, n))) if n <= 0 => s"$name EMPTY"
+      case (name, Right(run)) if run.rows <= 0 => s"$name EMPTY"
     }
     assert(bad.isEmpty, s"empty or failing gate queries: $bad")
   }

@@ -6,27 +6,35 @@ import TestSpark._
 /** Physical-plan assertions (SURVEY §4): the optimizations we rely on
   * at 100 TB must actually appear in the plan — broadcast joins for
   * dimension sides, predicate/projection pushdown into the parquet
-  * scan, and no more exchanges than the operator needs. The law table
-  * checks the served plan `Diag plan` writes; the other tests assert
-  * what it does not (the initial plan, optimized-plan scan counts,
-  * expressions, jobs per execution).
+  * scan, and no more exchanges than the operator needs. The law table,
+  * the suite-wide join sweep and the tests that read only a gate's
+  * executed plan read the one served run of every gate
+  * (`TestSpark.served`): the law table its `Diag plan` text, the others
+  * its whole `executedPlan` string. The remaining tests assert what
+  * that run does not show (the unexecuted plan, optimized-plan scan
+  * counts, expressions, metrics, rows, jobs per execution).
   */
 class PlanShapeSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     gate(name, sf0001).queryExecution.executedPlan.toString
 
+  /** The gate's executed plan after its served run: AQE-final, with
+    * the pre-execution Initial Plan appended. */
+  private def servedPlan(name: String): String =
+    served(name).fold(e => fail(s"$name: served run failed: $e"), _.executedPlan)
+
   /** AQE's toString appends the pre-execution "Initial Plan", which
     * duplicates every operator — assert on the final plan only. */
-  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  private def finalPlan(p: String): String = p.split("== Initial Plan ==").head
 
   test("plan-shape laws hold on each law gate's live served plan (sf0.001)") {
     // Each row pairs a gate's English claim with pinned laws evaluated
-    // on `Diag.planText` — the served plan, AQE-final, ids masked, any
-    // receipt line on top — so a code change that quietly loses a
-    // property (a broadcast flipping to shuffle, an exchange appearing
-    // on a zero-exchange path) fails here. Laws run on the FINAL-plan
+    // on its `Diag.planText` from TestSpark.served — the served plan,
+    // AQE-final, ids masked, any receipt line on top — so a code
+    // change that quietly loses a property (a broadcast flipping to
+    // shuffle, an exchange appearing on a zero-exchange path) fails
+    // here. Laws run on the FINAL-plan
     // tree region (adaptive dumps include an Initial Plan and a detail
     // list that would double-count nodes); whole-body checks are for
     // detail-only markers (PushedFilters, Scan ExistingRDD) and receipts.
@@ -334,13 +342,14 @@ class PlanShapeSpec extends AnyFunSuite {
         bodyHas("absent in the OFF leg"),
         bodyHas("aggregates identical")))
     assert(claims.map(_.gate).distinct.size == claims.size, "a gate has two rows")
-    val plans = GateQueries.each(claims.map(_.gate), GateQueries.Par)(Diag.planText(spark, sf0001, _))
-    val failures = claims.zip(plans).flatMap {
-      case (c, (_, _, Left(e))) => Seq(s"${c.gate}: no plan ($e)")
-      case (c, (_, _, Right(body))) =>
-        val broken = c.laws.filterNot(_.ok(finalRegion(body), body)).map(_.desc)
-        if (broken.isEmpty) Nil
-        else Seq(s"${c.gate}: ${broken.mkString("; ")}\n  claim: ${c.text}")
+    val failures = claims.flatMap { c =>
+      served.getOrElse(c.gate, Left("not in the registry")).map(_.planText) match {
+        case Left(e) => Seq(s"${c.gate}: no plan ($e)")
+        case Right(body) =>
+          val broken = c.laws.filterNot(_.ok(finalRegion(body), body)).map(_.desc)
+          if (broken.isEmpty) Nil
+          else Seq(s"${c.gate}: ${broken.mkString("; ")}\n  claim: ${c.text}")
+      }
     }
     assert(failures.isEmpty, s"plan-shape claims that no longer hold:\n${failures.mkString("\n")}")
   }
@@ -381,11 +390,9 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("whole-stage codegen covers the hot path of q1") {
-    // AQE finalizes the plan only after execution
-    val df = gate("q1_agg", sf0001)
-    df.collect()
-    // codegen stages print as "*(n) Operator" in the executed plan
-    assert(df.queryExecution.executedPlan.toString.contains("*(1)"))
+    // AQE finalizes the plan only after execution, so this reads the
+    // served run's; codegen stages print as "*(n) Operator" in it
+    assert(servedPlan("q1_agg").contains("*(1)"))
   }
 
   test("ca6 flagship: one scan of events, ≤2 exchanges (window + agg)") {
@@ -428,18 +435,14 @@ class PlanShapeSpec extends AnyFunSuite {
     // a codegen'd self-join, NOT bucket-group pair-gen: 16-bit bands
     // are low-entropy under duplication (a 20× probe hit a 3 400-deep
     // bucket where interpreted per-bucket lambdas went quadratic).
-    val df = gate("dd4_simhash", sf0001)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = servedPlan("dd4_simhash")
     assert(!p.contains("partial_min") && !p.contains("partial_sum"),
       s"sketch computation must not aggregate\n$p")
     assert(p.contains("simhash64"), s"native sketch expression missing\n$p")
   }
 
   test("la1 pagination is TakeOrderedAndProject, not a global-sort window") {
-    val df = gate("la1_filter_paginate", sf0001)
-    df.collect() // finalize AQE plan
-    val p = df.queryExecution.executedPlan.toString
+    val p = servedPlan("la1_filter_paginate") // the AQE-final plan
     assert(p.contains("TakeOrderedAndProject"),
       s"pagination must plan as per-partition top-k\n$p")
     // the survivor-ranking window must carry a partition spec (an
@@ -482,7 +485,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("suite-wide: no sort-merge joins; nested-loop only at known anchors") {
-    // Every gate's executed plan, swept: a SortMergeJoin anywhere
+    // Every gate's executed plan from its served run (the whole string,
+    // Initial Plan included), swept: a SortMergeJoin anywhere
     // means a dimension stopped broadcasting or a candidate set
     // stopped being slim; a BroadcastNestedLoopJoin is legal ONLY
     // where the build side is a 1-row anchor (la2/la4/la5 totals,
@@ -533,23 +537,21 @@ class PlanShapeSpec extends AnyFunSuite {
     // buying the layout. Everywhere else an SMJ means a broadcast or
     // slim-candidate shape silently regressed.
     val smjAllowed = Set("q10_bucketed_join")
-    GateQueries.all.foreach { q =>
-      val df = q.run(spark, sf0001)
-      df.collect() // finalize AQE
-      val p = df.queryExecution.executedPlan.toString
-      if (!smjAllowed(q.name))
-        assert(!p.contains("SortMergeJoin"), s"${q.name} plans a SortMergeJoin")
-      if (!nljAllowed(q.name))
-        assert(!p.contains("BroadcastNestedLoopJoin") &&
-          !p.contains("CartesianProduct"),
-          s"${q.name} plans a nested-loop/cartesian join")
+    val bad = served.toSeq.sortBy(_._1).flatMap {
+      case (g, Left(e)) => Seq(s"$g: served run failed: $e")
+      case (g, Right(run)) =>
+        val p = run.executedPlan
+        Seq(
+          Option.when(!smjAllowed(g) && p.contains("SortMergeJoin"))(s"$g plans a SortMergeJoin"),
+          Option.when(!nljAllowed(g) &&
+            (p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct")))(
+            s"$g plans a nested-loop/cartesian join")).flatten
     }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 
   test("dd14 soft dedup rides ONE fingerprint exchange (dd1's cost, kept rows)") {
-    val df = gate("dd14_soft_dedup", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("dd14_soft_dedup"))
     assert(shuffleCount(p) <= 1, s"expected <=1 exchange, got ${shuffleCount(p)}\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("Join"),
       s"soft dedup must be windowed, never joined:\n$p")
@@ -557,9 +559,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("tx17/mm6 source and digest rollups combine map-side") {
     for (name <- Seq("tx17_source_reputation", "mm6_payload_dedup")) {
-      val df = gate(name, sf0001)
-      df.collect()
-      val p = finalPlan(df)
+      val p = finalPlan(servedPlan(name))
       assert(p.contains("partial_"), s"$name: no partial aggregation\n$p")
       assert(!p.contains("Join"), s"$name must be a pure rollup, no joins\n$p")
       assert(shuffleCount(p) <= 2,
@@ -568,18 +568,14 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("tw15 SCD2 build: both window passes share one user exchange") {
-    val df = gate("tw15_scd2_intervals", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("tw15_scd2_intervals"))
     assert(shuffleCount(p) <= 1,
       s"lag + lead/version windows must share one exchange, got ${shuffleCount(p)}\n$p")
     assert(!p.contains("Join"), s"SCD2 build must be windowed, never joined:\n$p")
   }
 
   test("tw13 spike windows ride hour-grain exchanges, never event-grain") {
-    val df = gate("tw13_rate_spike", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("tw13_rate_spike"))
     assert(p.contains("partial_"), s"hourly pre-agg must combine map-side:\n$p")
     assert(shuffleCount(p) <= 2,
       s"expected <=2 exchanges (hour agg + user window), got ${shuffleCount(p)}\n$p")
@@ -587,17 +583,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q13 NOT EXISTS decorrelates to a hash anti join, no sort") {
-    val df = gate("q13_sql_not_exists", sf0001)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = servedPlan("q13_sql_not_exists")
     assert(p.contains("LeftAnti"), s"no anti join in:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"))
   }
 
   test("dd15 benchmark universe broadcasts; corpus side never shuffles pre-join") {
-    val df = gate("dd15_containment_score", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("dd15_containment_score"))
     assert(p.contains("BroadcastHashJoin"), s"bench universe not broadcast:\n$p")
     // exchanges: the per-doc hit regroup + the doc-spine join side(s) —
     // corpus-proportional slim rows only; the shingle match itself is
@@ -606,9 +598,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("sim14 assignment stays a narrow map: one agg exchange, seed dim broadcast") {
-    val df = gate("sim14_lloyd_refine", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("sim14_lloyd_refine"))
     assert(p.contains("BroadcastHashJoin"), s"seed centroids not broadcast:\n$p")
     // the (cell, dim) regroup is the only corpus-fed exchange; the
     // folded-codebook assignment itself must not shuffle (sim5's
@@ -622,8 +612,8 @@ class PlanShapeSpec extends AnyFunSuite {
     // the folded-codebook pq_encode expression must keep the whole
     // index build inside one stage: scan → project, no Exchange at
     // all (the composed spelling shuffled 64·nlist rows per vector)
-    val p5 = finalPlan(gate("sim5_ivf_assign", sf0001))
-    val p10 = finalPlan(gate("sim10_pq_encode", sf0001))
+    val p5 = finalPlan(plan("sim5_ivf_assign"))
+    val p10 = finalPlan(plan("sim10_pq_encode"))
     assert(shuffleCount(p5) == 0, s"sim5 encode shuffles\n$p5")
     assert(shuffleCount(p10) == 0, s"sim10 encode shuffles\n$p10")
   }
@@ -633,9 +623,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // (query, vec) aggregation the composed form shuffled is gone,
     // and the only exchange left is the top-10 window, pre-pruned by
     // a partial WindowGroupLimit
-    val df = gate("sim11_adc_search", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("sim11_adc_search"))
     assert(!p.contains("HashAggregate"), s"sim11 still aggregates\n$p")
     assert(p.contains("WindowGroupLimit"), s"no map-side top-k prune\n$p")
     assert(shuffleCount(p) == 1, s"expected 1 exchange (top-k window)\n$p")
@@ -647,9 +635,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // (each task keeps only its local top-3 per priority) and a
     // broadcast join against the 5-row priority dim — never a
     // per-driver-row re-execution of the subquery.
-    val df = gate("q16_sql_lateral", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("q16_sql_lateral"))
     assert(p.contains("WindowGroupLimit"), s"no map-side top-k prune:\n$p")
     assert(p.contains("BroadcastHashJoin"), s"priority dim not broadcast:\n$p")
     assert(!p.contains("CartesianProduct"), s"lateral fell back to a loop:\n$p")
@@ -662,17 +648,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // (term, doc_id), then term — and no join gluing branches back.
     // The 128-entry head stays bounded inside the agg (collect_list of
     // a CASE that nulls past rank 128), not via a pre-prune.
-    val df13 = gate("tx13_inverted_index", sf0001)
-    df13.collect()
-    val p13 = finalPlan(df13)
+    val p13 = finalPlan(servedPlan("tx13_inverted_index"))
     assert(!p13.contains("Join"),
       s"tx13 must not join its aggregate branches:\n$p13")
     assert(shuffleCount(p13) <= 2,
       s"expected <=2 exchanges (tf + term), got ${shuffleCount(p13)}\n$p13")
     assert(p13.contains("Window"), s"tx13 lost its rank window:\n$p13")
-    val df14 = gate("tx14_scored_retrieval", sf0001)
-    df14.collect()
-    val p14 = finalPlan(df14)
+    val p14 = finalPlan(servedPlan("tx14_scored_retrieval"))
     assert(p14.contains("TakeOrderedAndProject"),
       "tx14's rarest-term query dim must be per-partition top-k, not a global sort")
     assert(p14.contains("WindowGroupLimit"),
@@ -683,9 +665,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // cp3's shard window, cp6's (shard, bin) agg, and cp8's
     // (epoch, shard) rank all align on the shard partitioning — the
     // whole manifest→epoch-order chain costs ONE shuffle
-    val df = gate("cp8_epoch_order", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("cp8_epoch_order"))
     assert(shuffleCount(p) == 1, s"expected 1 exchange, got ${shuffleCount(p)}\n$p")
   }
 
@@ -700,9 +680,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("cp2 weights dim joins broadcast; cp4 head is TakeOrderedAndProject") {
     assert(plan("cp2_weighted_mixture").contains("BroadcastHashJoin"))
-    val df = gate("cp4_interleave_head", sf0001)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val p = servedPlan("cp4_interleave_head")
     assert(p.contains("TakeOrderedAndProject"),
       s"interleave head must be per-partition top-k, not a global sort\n$p")
   }
@@ -720,12 +698,10 @@ class PlanShapeSpec extends AnyFunSuite {
     // the join key, so the SMJ consumes them directly — zero shuffle
     // exchanges and zero Sort nodes anywhere under the join; the only
     // exchange in the whole plan is the final 5-group rollup.
-    val df = gate("q10_bucketed_join", sf0001)
-    df.collect()
     // AQE's toString appends the pre-execution "Initial Plan" (which
     // legitimately shows the agg exchange again) — assert on the
     // final plan only.
-    val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val p = finalPlan(servedPlan("q10_bucketed_join"))
     assert(p.contains("SortMergeJoin"), s"expected the co-located SMJ\n$p")
     val below = p.substring(p.indexOf("SortMergeJoin"))
     assert(!below.contains("Exchange hashpartitioning"),
@@ -755,9 +731,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // rows (map-side combined), never raw events. An Expand, a
     // per-value re-scan, or a missing partial agg means the explicit
     // value list stopped doing its job.
-    val df = gate("la8_level_pivot", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("la8_level_pivot"))
     assert(!p.contains("Expand"), s"explicit-values pivot must not Expand\n$p")
     assert(p.contains("partial_count") && p.contains("partial_pivotfirst"),
       s"both pivot phases must map-side combine\n$p")
@@ -773,9 +747,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // membership join may each re-read the chunk stream (2 documents
     // scans), but nothing may globally sort and the reassembly agg
     // must map-side combine its struct collection.
-    val df = gate("dd9_chunk_dedup", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("dd9_chunk_dedup"))
     val scans = p.linesIterator.count(l =>
       l.contains("Scan parquet") && l.contains("documents"))
     assert(scans <= 2, s"expected <=2 documents scans, got $scans\n$p")
@@ -787,9 +759,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // c(w1 w2) and c(w1) are vocab-bounded aggregates — they must
     // join back as broadcasts so the only corpus-wide exchange is the
     // per-doc regroup.
-    val df = gate("tx11_bigram_surprisal", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("tx11_bigram_surprisal"))
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 2,
       s"both count dims must broadcast\n$p")
   }
@@ -798,9 +768,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // groupBy(shard, bin_id) sits on data already hash-partitioned by
     // shard (a subset of the grouping key), so the manifest adds ZERO
     // exchanges beyond cp3's one shard shuffle.
-    val df = gate("cp6_pack_manifest", sf0001)
-    df.collect()
-    val p = finalPlan(df)
+    val p = finalPlan(servedPlan("cp6_pack_manifest"))
     assert(shuffleCount(p) <= 1,
       s"manifest must reuse the shard exchange, not add one\n$p")
   }

@@ -21,28 +21,37 @@ object TestSpark {
   def gate(name: String, dir: String): DataFrame =
     SparkEntry.queries(name)(spark, dir)
 
-  /** The result of `body` and the number of Spark jobs it started,
-    * counted by job tag (so jobs of other threads never leak in) after
-    * the listener bus has delivered every job-start event. */
+  /** The result of `body` and the number of Spark jobs it started
+    * ([[Diag.jobs]]: by job tag, after the listener bus drained). */
   def jobsStarted[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"graft-test-jobs-${java.util.UUID.randomUUID}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(js.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      val r = body
-      org.apache.spark.ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
+    val (r, jobs) = Diag.jobs(spark)(body)
+    (r, jobs.size)
+  }
+
+  /** What one served run of a gate leaves behind: its output schema,
+    * served row count ([[Diag.served]], every column materialized),
+    * the whole post-execution `executedPlan.toString` (AQE's Final
+    * Plan and its Initial Plan) and its [[Diag.planText]]. Strings
+    * only: holding the frame would keep its broadcast relations and
+    * query stages alive. */
+  final case class Served(schema: StructType, rows: Long, executedPlan: String, planText: String)
+
+  /** Every gate run once at sf0.001 through the mains' gate loop, per
+    * gate its [[Served]] or its error. The schema and rows lints, the
+    * suite-wide join sweep, the plan-shape law table and the plan tests
+    * that read only the executed plan all read this one run. Building a
+    * gate executes its side effects for the MUTATING gates (la9 writes +
+    * drops partitions + deletes its dir, la11 publishes + drops a sink
+    * table, dd6/dd12 checkpoint), so each is built exactly once here. */
+  lazy val served: Map[String, Either[String, Served]] = {
+    // the pool threads must not touch `spark` while this initializer
+    // holds the object's lazy-val lock: start the session here first
+    val s = spark
+    GateQueries.each(GateQueries.all.map(_.name), GateQueries.Par) { g =>
+      val df = SparkEntry.queries(g)(s, sf0001)
+      val rows = Diag.served(df)
+      Served(df.schema, rows, df.queryExecution.executedPlan.toString, Diag.planText(g, df))
+    }.map { case (g, _, r) => g -> r }.toMap
   }
 
   /** Count SHUFFLE exchanges in a plan string. Plan lines carry tree
